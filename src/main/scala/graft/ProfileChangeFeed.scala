@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.io.VersionedTable
+import graft.operators.Par
 
 /** Measures the change feed's cost contract (SCALE.md §cdf): a rewrite
   * commit's CDF must cost O(rewritten data) — the commit's own touched
@@ -38,10 +39,10 @@ object ProfileChangeFeed {
         org.apache.spark.sql.expressions.Window.orderBy("ts", "event_id")).cast("long"))
       .select("row_id", "user_id", "event_type")
     val baseN = base.count()
-    val ev = (if (replicate <= 1) base
+    val Seq(ev) = Par.materialize((if (replicate <= 1) base
       else spark.range(replicate).crossJoin(base)
         .withColumn("row_id", col("row_id") + col("id") * baseN).drop("id"))
-      .repartition(32).localCheckpoint(true)
+      .repartition(32))
     val n = ev.count()
 
     def timed[T](f: => T): (T, Double) = {

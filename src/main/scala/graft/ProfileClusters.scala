@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.operators.Par
 import graft.operators.ext.Dedup
 
 /** Dev harness: phase timing of the x1_dedup_clusters pipeline — how much is
@@ -50,7 +51,7 @@ object ProfileClusters {
       // materialize the pair list first so edge GENERATION cost (the clique
       // self-join) is reported separately from the clustering itself
       val mat = t(f"synthetic pair materialization n=$n edges~${n * (clique - 1) / 2 + n / clique}") {
-        val m = pairs.localCheckpoint(true); m.count(); m
+        val Seq(m) = Par.materialize(pairs); m.count(); m
       }
       val clustered = t(s"dedupClusters n=$n") {
         graft.operators.ext.Dedup.dedupClusters(docs, "doc_id", mat)
@@ -72,7 +73,7 @@ object ProfileClusters {
       // candidate-join + verify TAIL stays lazy — materialize it separately
       // so tail cost doesn't masquerade as clustering cost downstream
       val pairs = t("pair tail (cand join + verify) materialization") {
-        val p = pairsLazy.localCheckpoint(true); p
+        Par.materialize(pairsLazy).head
       }
       // dedupClusters is eager only through the star contraction (the
       // localCheckpoint + count inside clusterEdges); the single-task finish
@@ -82,7 +83,7 @@ object ProfileClusters {
         Dedup.dedupClusters(docs, "doc_id", pairs)
       }
       val labels = t("single-task finish + docs join") {
-        val l = clustered.localCheckpoint(true); l
+        Par.materialize(clustered).head
       }
       t("output sort + noop write") {
         labels.orderBy("doc_id").write.format("noop").mode("overwrite").save()

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.operators.Par
 import graft.operators.ext.Dedup
 
 /** Skew stress for the LSH salted self-join (SCALE.md §skew): every scaling
@@ -41,9 +42,9 @@ object ProfileSkew {
     val boiler = (0 until 40).map(i => s"boiler_$i").mkString(" ")
     val hot = spark.range(hotN).select(
       (col("id") + 10000000L).as("doc_id"), lit(boiler).as("text"))
-    val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
+    val Seq(corpus) = Par.materialize(spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text").unionByName(hot)
-      .repartition(32).localCheckpoint(true)
+      .repartition(32))
     println(s"[skew] corpus ${corpus.count()} docs, hot bucket $hotN " +
       s"(~${hotN.toLong * (hotN - 1) / 2} pairs per band)")
     for (s <- saltsList; pass <- 1 to 2) {

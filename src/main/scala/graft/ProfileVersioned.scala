@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.io.VersionedTable
+import graft.operators.Par
 
 /** Measures the manifest data-skipping payoff (SCALE.md §versioned): a
   * production append-grown table accumulates one commit per ingest cycle;
@@ -52,10 +53,10 @@ object ProfileVersioned {
       .withColumn("row_id", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy("ts", "event_id")).cast("long"))
     val baseN = base.count()
-    val ev = (if (replicate <= 1) base
+    val Seq(ev) = Par.materialize((if (replicate <= 1) base
       else spark.range(replicate).crossJoin(base)
         .withColumn("row_id", col("row_id") + col("id") * baseN).drop("id"))
-      .repartition(32).localCheckpoint(true)
+      .repartition(32))
     val n = ev.count()
     val slice = n / appends
     println(s"[versioned] $n events, $appends appends of ~$slice rows each")

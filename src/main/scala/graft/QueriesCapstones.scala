@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
-import graft.operators.{Medallion, Relational}
+import graft.operators.{Medallion, Par, Relational}
 import graft.operators.ext.{Dedup, Multimodal, Similarity, Sketches, TextAnalysis}
 import graft.sources.{Ingest, StubTickerFetcher}
 
@@ -97,10 +97,9 @@ private[graft] object QueriesCapstones {
         // iteration, and each reference would otherwise re-execute the
         // whole kNN pipeline (the before-plan carried 126 parquet scans —
         // plans/r19/x9_semisupervised_before.txt). Tiny (300-node) frame.
-        val edges = knn.select(col("id_a").as("src"), col("id_b").as("dst"))
+        val Seq(edges) = Par.materialize(knn.select(col("id_a").as("src"), col("id_b").as("dst"))
           .unionByName(knn.select(col("id_b").as("src"), col("id_a").as("dst")))
-          .distinct()
-          .localCheckpoint(true)
+          .distinct())
         val seeds = emb.filter(col("vec_id") < 20)
           .select(col("vec_id").as("node"), col("label").cast("long").as("lab"))
         graft.operators.ext.Graph
@@ -243,16 +242,15 @@ private[graft] object QueriesCapstones {
         // with a model trained once, it does not re-train per run — so the
         // keep set is a fixture; the gate itself (one semi join) is live.
         val clf = Fixtures.once(s, dir, "quality_clf_keep") {
-          TextAnalysis.qualityClassifier(docs,
+          Par.materialize(TextAnalysis.qualityClassifier(docs,
               docs.filter(col("lang") === "en"),
               docs.filter(col("lang") =!= "en"), "doc_id", "text")
-            .filter(col("keep")).select("doc_id")
-            .localCheckpoint(true)
+            .filter(col("keep")).select("doc_id")).head
         }
         val q = hq.join(clf, Seq("doc_id"), "semi")
         // checkpointed once: consumed by the pair filter, the cluster
         // labeling, and the survivor join — three readers, one execution
-        val ex = Dedup.exactByKey(q, Seq("text"), "doc_id").localCheckpoint(true)
+        val Seq(ex) = Par.materialize(Dedup.exactByKey(q, Seq("text"), "doc_id"))
         // standing pair-list fixture + the pointwise subset property: the
         // near-dup pairs of the quality-filtered, exact-deduped corpus are
         // the full-corpus pairs with both endpoints surviving into `ex` —

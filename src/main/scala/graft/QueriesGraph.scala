@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
-import graft.operators.{Medallion, Relational}
+import graft.operators.{Medallion, Par, Relational}
 import graft.operators.ext.{Dedup, Multimodal, Similarity, Sketches, TextAnalysis}
 import graft.sources.{Ingest, StubTickerFetcher}
 
@@ -53,9 +53,8 @@ private[graft] object QueriesGraph {
         // without the cut each reference re-executes the orders⋈lineitem
         // pipeline — the before-plan carried 112 parquet scans (see
         // plans/r19/g1_pagerank_before.txt). Narrow (src, dst) longs only.
-        val edges = pairs.select(col("cust").as("src"), col("supp").as("dst"))
-          .unionByName(pairs.select(col("supp").as("src"), col("cust").as("dst")))
-          .localCheckpoint(true)
+        val Seq(edges) = Par.materialize(pairs.select(col("cust").as("src"), col("supp").as("dst"))
+          .unionByName(pairs.select(col("supp").as("src"), col("cust").as("dst"))))
         graft.operators.ext.Graph.pageRank(edges, "src", "dst", 3)
           .orderBy(col("rank").desc, col("node")).limit(100)
       },
@@ -95,9 +94,8 @@ private[graft] object QueriesGraph {
             col("o_orderkey") === col("l_orderkey"))
           .select(col("o_custkey").as("cust"), (col("l_suppkey") + 1000000L).as("supp"))
         // Materialized once — same re-execution cut as g1_pagerank.
-        val edges = pairs.select(col("cust").as("src"), col("supp").as("dst"))
-          .unionByName(pairs.select(col("supp").as("src"), col("cust").as("dst")))
-          .localCheckpoint(true)
+        val Seq(edges) = Par.materialize(pairs.select(col("cust").as("src"), col("supp").as("dst"))
+          .unionByName(pairs.select(col("supp").as("src"), col("cust").as("dst"))))
         val seeds = rd(s, dir, "supplier").filter(col("s_suppkey") <= 10)
           .select((col("s_suppkey") + 1000000L).as("node"))
         graft.operators.ext.Graph.trustRank(edges, "src", "dst", seeds, "node", 3)
@@ -235,9 +233,8 @@ private[graft] object QueriesGraph {
             col("o_orderkey") === col("l_orderkey"))
           .select(col("o_custkey").as("cust"), (col("l_suppkey") + 1000000L).as("supp"))
         // Materialized once — same re-execution cut as g1_pagerank.
-        val edges = pairs.select(col("cust").as("src"), col("supp").as("dst"))
-          .unionByName(pairs.select(col("supp").as("src"), col("cust").as("dst")))
-          .localCheckpoint(true)
+        val Seq(edges) = Par.materialize(pairs.select(col("cust").as("src"), col("supp").as("dst"))
+          .unionByName(pairs.select(col("supp").as("src"), col("cust").as("dst"))))
         val seeds = rd(s, dir, "supplier").filter(col("s_suppkey") <= 10)
           .select((col("s_suppkey") + 1000000L).as("node"),
             col("s_nationkey").cast("long").as("lab"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
-import graft.operators.{Medallion, Relational}
+import graft.operators.{Medallion, Par, Relational}
 import graft.operators.ext.{Dedup, Multimodal, Similarity, Sketches, TextAnalysis}
 import graft.sources.{Ingest, StubTickerFetcher}
 
@@ -396,8 +396,8 @@ private[graft] object QuerySupport {
     */
   def lshPairsFx(s: SparkSession, dir: String): DataFrame =
     Fixtures.once(s, dir, "lsh_pairs") {
-      Dedup.minhashLshPairs(rd(s, dir, "documents"), "doc_id", "text", 8, 19, 20)
-        .localCheckpoint(true)
+      Par.materialize(
+        Dedup.minhashLshPairs(rd(s, dir, "documents"), "doc_id", "text", 8, 19, 20)).head
     }
 
   val servingCols =

@@ -3,6 +3,8 @@ package graft.io
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Par
+
 /** INCREMENTAL MATERIALIZED VIEWS over the versioned table's change feed —
   * the self-maintainable-aggregate design every warehouse's IVM feature
   * (and Delta Live Tables / Materialized Views on Databricks, Snowflake
@@ -154,7 +156,7 @@ object MatView {
         // otherwise re-execute it from scratch (measured 16.5 s of a 23 s
         // stream_matview bench row spent in refresh re-runs). The delta is
         // one row per TOUCHED KEY, so the checkpoint is group-bounded.
-        val delta = cf.withColumn("__sign", sign)
+        val Seq(delta) = Par.materialize(cf.withColumn("__sign", sign)
           .groupBy(col(keyCol))
           .agg(sum(col("__sign")).as("__rows_d"),
             sumCols.map(c => sum(col("__sign") * col(c)).as(s"__${c}_d")) ++
@@ -162,8 +164,7 @@ object MatView {
                 min(when(col("__sign") === 1L, col(c))).as(s"__${c}_imin"),
                 max(when(col("__sign") === 1L, col(c))).as(s"__${c}_imax"),
                 min(when(col("__sign") === -1L, col(c))).as(s"__${c}_dmin"),
-                max(when(col("__sign") === -1L, col(c))).as(s"__${c}_dmax"))): _*)
-          .localCheckpoint(true)
+                max(when(col("__sign") === -1L, col(c))).as(s"__${c}_dmax"))): _*))
         if (!delta.isEmpty) {
           // current view rows for the touched keys + signed deltas → new
           // values. Two broadcast joins keep the big side stream-only: the
@@ -188,7 +189,7 @@ object MatView {
           // Also group-bounded and consumed by three actions (negative
           // guard, upserts, deletes) — materialize so the view semi-join
           // runs once, not once per consumer.
-          val combined = delta.join(broadcast(touched), Seq(keyCol), "left_outer")
+          val Seq(combined) = Par.materialize(delta.join(broadcast(touched), Seq(keyCol), "left_outer")
             .select(
               col(keyCol) +:
                 (coalesce(col("mv_rows"), lit(0L)) + col("__rows_d")).as("mv_rows") +:
@@ -197,8 +198,7 @@ object MatView {
                   mmCols.flatMap(c => Seq(
                     least(col(minName(c)), col(s"__${c}_imin")).as(minName(c)),
                     greatest(col(maxName(c)), col(s"__${c}_imax")).as(maxName(c)))) :+
-                  mmAffected.as("__mm_affected")): _*)
-            .localCheckpoint(true)
+                  mmAffected.as("__mm_affected")): _*))
           val negative = combined.filter(col("mv_rows") < 0).limit(1).collect()
           require(negative.isEmpty, s"MatView.refresh: group ${negative.headOption.orNull} " +
             "reached a negative row count — the change feed and the view disagree " +

@@ -1852,7 +1852,7 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     */
   private def assignIdentityColumn(df: DataFrame, colName: String, next: Long,
                                    step: Long): (DataFrame, Long) = {
-    val cut = df.localCheckpoint(true)
+    val Seq(cut) = graft.operators.Par.materialize(df)
     val counts = cut.rdd
       .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
       .collect().sortBy(_._1).map(_._2)
@@ -3231,22 +3231,13 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
         // branches — consumed lazily, a single action on the returned
         // union re-executed every exceptAll and key scan per branch
         // (~12 touched-dir scans per rewrite commit, re-paid on EVERY
-        // micro-batch re-plan of a streaming read). Checkpoint each once;
-        // they are mutually independent given old/neu, so the four
-        // materializations run as concurrent jobs (guide §2.6) and the
-        // chain costs the slowest leg. The full-width old/neu scans stay
-        // lazy — materializing those measured slower (MatView.refresh).
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val changedNewF = Future(neu.exceptAll(old).localCheckpoint(true))
-        val changedOldF = Future(old.exceptAll(neu).localCheckpoint(true))
-        val oldKeysF = Future(old.select(keyCol).distinct().localCheckpoint(true))
-        val newKeysF = Future(neu.select(keyCol).distinct().localCheckpoint(true))
-        val changedNew = Await.result(changedNewF, Duration.Inf)
-        val changedOld = Await.result(changedOldF, Duration.Inf)
-        val oldKeys = Await.result(oldKeysF, Duration.Inf)
-        val newKeys = Await.result(newKeysF, Duration.Inf)
+        // micro-batch re-plan of a streaming read). Checkpoint each once,
+        // together: they are mutually independent given old/neu. The
+        // full-width old/neu scans stay lazy — materializing those
+        // measured slower (MatView.refresh).
+        val Seq(changedNew, changedOld, oldKeys, newKeys) = graft.operators.Par.materialize(
+          neu.exceptAll(old), old.exceptAll(neu),
+          old.select(keyCol).distinct(), neu.select(keyCol).distinct())
         Right(changedNew.join(oldKeys, Seq(keyCol), "left_anti")
           .withColumn(ct, lit("insert"))
           .unionByName(changedNew.join(oldKeys, Seq(keyCol), "left_semi")
@@ -5582,20 +5573,10 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     val files = pending.result()
     val needFooter = files.filter(f =>
       f.missMM.nonEmpty || f.missNulls.nonEmpty || f.sideRows.isEmpty)
-    val footered: Map[(String, String), Option[(Long, Map[String, (Any, Any)], Map[String, Long])]] =
-      if (needFooter.isEmpty) Map.empty
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, math.max(1, Runtime.getRuntime.availableProcessors())))
-        try needFooter.map { f =>
-          (f.dp, f.rel) -> pool.submit(
-            new java.util.concurrent.Callable[Option[(Long, Map[String, (Any, Any)], Map[String, Long])]] {
-              override def call() =
-                fileAggStats(conf, Paths.get(f.dp, f.rel), f.missMM, f.missNulls)
-            })
-        }.map { case (k, fut) => k -> fut.get() }.toMap
-        finally pool.shutdown()
-      }
+    val footered = needFooter.map(f => (f.dp, f.rel))
+      .zip(parallelFooters(needFooter) { f =>
+        fileAggStats(conf, Paths.get(f.dp, f.rel), f.missMM, f.missNulls)
+      }).toMap
 
     files.foreach { f =>
       val (rows, footMM, footNullsM) = footered.get((f.dp, f.rel)) match {
@@ -5915,28 +5896,15 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
       .get("spark.graft.topNPrune.maxFooterFiles", "1024").toInt
     if (pending.size > maxFooter) return None
     val conf = spark.sessionState.newHadoopConf()
-    type AggStat = Option[(Long, Map[String, (Any, Any)], Map[String, Long])]
-    val tierB: Seq[FS] =
-      if (pending.isEmpty) Nil
-      else {
-        // bounded driver pool (the metadataAggregate tier-3 pattern);
-        // repeats hit the per-JVM footer memo
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, math.max(1, Runtime.getRuntime.availableProcessors())))
-        val resolved: Seq[(String, AggStat)] =
-          try pending.map { f =>
-            f -> pool.submit(new java.util.concurrent.Callable[AggStat] {
-              override def call(): AggStat =
-                fileAggStats(conf, Paths.get(f), Map(phys -> dt), Set(phys))
-            })
-          }.map { case (path, fut) => path -> fut.get() }
-          finally pool.shutdown()
-        resolved.map {
-          case (_, None) => return None
-          case (path, Some((rows, mm, nulls))) => FS(path, rows,
-            nulls.getOrElse(phys, return None),
-            mm.get(phys).map { case (a, b) => (asL(a), asL(b)) })
-        }
+    // repeats hit the per-JVM footer memo
+    val tierB: Seq[FS] = pending.zip(
+      parallelFooters(pending) { f =>
+        fileAggStats(conf, Paths.get(f), Map(phys -> dt), Set(phys))
+      }).map {
+        case (_, None) => return None
+        case (path, Some((rows, mm, nulls))) => FS(path, rows,
+          nulls.getOrElse(phys, return None),
+          mm.get(phys).map { case (a, b) => (asL(a), asL(b)) })
       }
     val stats: Seq[FS] = tierA.result() ++ tierB
     val totalNull = stats.map(_.nulls).sum

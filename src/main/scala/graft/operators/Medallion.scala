@@ -74,9 +74,8 @@ object Medallion {
     */
   def withScalableSurrogateId(df: DataFrame, orderCols: Seq[String]): DataFrame = {
     val spark = df.sparkSession
-    val sorted = df.repartitionByRange(orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .localCheckpoint(true)
+    val Seq(sorted) = Par.materialize(df.repartitionByRange(orderCols.map(col): _*)
+      .sortWithinPartitions(orderCols.map(col): _*))
     val schema = org.apache.spark.sql.types.StructType(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType, false) +:
         sorted.schema.fields.toSeq)

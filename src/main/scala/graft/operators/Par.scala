@@ -1,10 +1,58 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical._
+import java.util.concurrent.{ExecutionException, SynchronousQueue, ThreadPoolExecutor, TimeUnit}
 
-/** Scan-parallelism helpers shared by the operator library. */
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.SQLExecution
+
+/** Plan-shaping helpers shared by the library: scan widening and the one
+  * eager materialization point.
+  *
+  * Materialization policy: every intermediate the library cuts out of a
+  * plan goes through [[materialize]], which is an eager local checkpoint
+  * (`localCheckpoint(true)`). Spark has no common-subexpression
+  * materialization, so a frame that several branches consume would
+  * otherwise re-run its whole upstream pipeline per branch. Independent
+  * frames passed together run as overlapped jobs, and every overlapped job
+  * keeps the caller's thread-locals — job group, job description, active
+  * session — so cancelling the caller's group cancels all of them.
+  */
 object Par {
+
+  /** Eagerly local-checkpoints each frame and returns the checkpoints in
+    * argument order. One frame runs on the calling thread. With more, all
+    * but the last run on [[pool]] through `SQLExecution.withThreadLocalCaptured`
+    * (the caller's local properties, active session and artifact state are
+    * copied into the pool thread) and the last runs on the calling thread,
+    * so the call costs the slowest leg rather than the sum. The call returns
+    * only after every leg has finished; a failing leg rethrows its original
+    * exception, the first failure in argument order winning.
+    */
+  def materialize(frames: DataFrame*): Seq[DataFrame] = {
+    val overlapped = frames.dropRight(1).map { df =>
+      SQLExecution.withThreadLocalCaptured(
+        df.sparkSession.asInstanceOf[classic.SparkSession], pool)(df.localCheckpoint(true))
+    }
+    val last = frames.lastOption.map(df => Try(df.localCheckpoint(true)))
+    val legs = overlapped.map { f =>
+      Try(try f.get() catch { case e: ExecutionException => throw e.getCause })
+    } ++ last
+    legs.map(_.get)
+  }
+
+  /** JVM-wide daemon pool for the overlapped legs of [[materialize]]. It
+    * grows to the number of legs in flight, so a call never runs fewer legs
+    * at once than it was given, and idle threads exit after a minute.
+    */
+  private[graft] val pool = new ThreadPoolExecutor(0, Int.MaxValue, 60L, TimeUnit.SECONDS,
+    new SynchronousQueue[Runnable], { (r: Runnable) =>
+      val t = new Thread(r, "graft-par")
+      t.setDaemon(true)
+      t
+    })
 
   /** Input-skew mitigation (optimization guide §2.5 "one huge unsplittable
     * file"): parquet cannot split below row-group granularity, so a

@@ -1,5 +1,6 @@
 package graft.operators.ext
 
+import graft.operators.Par
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,9 +74,8 @@ object Dedup {
     // minhashLshPairs doc records). tok-partitioning makes the common-token
     // self-join exchange-free on both sides.
     val par = docs.sparkSession.sparkContext.defaultParallelism
-    val toks = shingles(docs, idCol, textCol, n)
-      .repartition(par, col("tok"))
-      .localCheckpoint(true)
+    val Seq(toks) = Par.materialize(shingles(docs, idCol, textCol, n)
+      .repartition(par, col("tok")))
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val pairs = toks.as("a").join(toks.as("b"),
         col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id"))
@@ -149,34 +149,27 @@ object Dedup {
     require(prefixDepth >= 1, "prefixDepth must be >= 1")
     val q = prefixDepth
     val par = docs.sparkSession.sparkContext.defaultParallelism
-    val hashed = shingles(docs, idCol, textCol, n)
+    val Seq(hashed) = Par.materialize(shingles(docs, idCol, textCol, n)
       .withColumn("h", tokenHash).select("doc_id", "h").distinct()
-      .repartition(par, col("doc_id"))
-      .localCheckpoint(true)
+      .repartition(par, col("doc_id")))
     val dfreq = hashed.groupBy("h").agg(count(lit(1)).as("df"))
     // rarity rank + set size in ONE (doc_id)-partitioned window pass;
     // prefix length |A| - ceil(t*|A|) + 1 in integer arithmetic. The frame
     // is checkpointed ONCE with the prefix membership as a flag: both join
     // sides below read the materialization instead of re-running the df
     // join + windows per side (which would double every upstream shuffle).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
+    // The token-set table is independent of it given `hashed`.
     graft.functions.ArrayOps.register(docs.sparkSession)
-    // ranked and the token-set table are INDEPENDENT given `hashed` — their
-    // eager materializations run as concurrent jobs (guide §2.6)
-    val rankedF = Future(hashed.join(dfreq.hint("shuffle_hash"), Seq("h"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("df"), col("h"))))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy("doc_id")))
-      .withColumn("in_prefix", col("rnk") <=
-        expr(s"sz - ((sz * $threshNum + ${threshDen - 1}) div $threshDen) + $q"))
-      .select("doc_id", "h", "sz", "rnk", "in_prefix")
-      .localCheckpoint(true))
-    val tokSetsF = Future(hashed.groupBy("doc_id")
-      .agg(sort_array(collect_list(col("h"))).as("toks"), count(lit(1)).as("sz"))
-      .localCheckpoint(true))
-    val ranked = Await.result(rankedF, Duration.Inf)
+    val Seq(ranked, tokSets) = Par.materialize(
+      hashed.join(dfreq.hint("shuffle_hash"), Seq("h"))
+        .withColumn("rnk", row_number().over(
+          Window.partitionBy("doc_id").orderBy(col("df"), col("h"))))
+        .withColumn("sz", count(lit(1)).over(Window.partitionBy("doc_id")))
+        .withColumn("in_prefix", col("rnk") <=
+          expr(s"sz - ((sz * $threshNum + ${threshDen - 1}) div $threshDen) + $q"))
+        .select("doc_id", "h", "sz", "rnk", "in_prefix"),
+      hashed.groupBy("doc_id")
+        .agg(sort_array(collect_list(col("h"))).as("toks"), count(lit(1)).as("sz")))
     // probe the full index with extended-prefix tokens; orient smaller ->
     // larger at candidate time so each pair is generated once
     val probe = ranked.filter(col("in_prefix"))
@@ -202,7 +195,6 @@ object Dedup {
       .agg(count(lit(1)).as("__cnt"), max("sz_a").as("__sza"))
       .filter(col("__cnt") >= least(lit(q).cast("long"), ceilA("__sza")))
       .select("id_a", "id_b")
-    val tokSets = Await.result(tokSetsF, Duration.Inf)
     cands
       .join(tokSets.as("sa").hint("shuffle_hash"), col("id_a") === col("sa.doc_id"))
       .join(tokSets.as("sb").hint("shuffle_hash"), col("id_b") === col("sb.doc_id"))
@@ -287,28 +279,20 @@ object Dedup {
     // 16-seed crossjoin, the hot-bucket pair generation, and the checkpoint
     // write itself. Quadratic-output operators must size partitions by
     // downstream work, not input bytes.
-    val hashed = shingles(docs, idCol, textCol, shingleN)
+    val Seq(hashed) = Par.materialize(shingles(docs, idCol, textCol, shingleN)
       .withColumn("h", tokenHash).select("doc_id", "h")
-      .repartition(par, col("doc_id"))
-      .localCheckpoint(true)
-    // bands and the token-set table below are INDEPENDENT given `hashed`;
-    // their eager materializations run as concurrent jobs (guide §2.6) so
-    // the checkpoint chain costs max(bands, tokSets), not the sum
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
+      .repartition(par, col("doc_id")))
+    // bands and the token-set table below are INDEPENDENT given `hashed`
     graft.functions.ArrayOps.register(docs.sparkSession)
-    val bandsF = Future(minhashSignatures(hashed)
-      .withColumn("band", (col("seed") / lit(bandSize)).cast("int"))
-      .groupBy("doc_id", "band")
-      .agg(sort_array(collect_list(struct(col("seed"), col("mh")))).as("sig"))
-      .withColumn("key", expr("concat_ws('-', transform(sig, x -> cast(x.mh as string)))"))
-      .select("doc_id", "band", "key")
-      .localCheckpoint(true))
-    val tokSetsF = Future(hashed.groupBy("doc_id")
-      .agg(sort_array(collect_set(col("h"))).as("toks"), count(lit(1)).as("sz"))
-      .localCheckpoint(true))
-    val bands = Await.result(bandsF, Duration.Inf)
+    val Seq(bands, tokSets) = Par.materialize(
+      minhashSignatures(hashed)
+        .withColumn("band", (col("seed") / lit(bandSize)).cast("int"))
+        .groupBy("doc_id", "band")
+        .agg(sort_array(collect_list(struct(col("seed"), col("mh")))).as("sig"))
+        .withColumn("key", expr("concat_ws('-', transform(sig, x -> cast(x.mh as string)))"))
+        .select("doc_id", "band", "key"),
+      hashed.groupBy("doc_id")
+        .agg(sort_array(collect_set(col("h"))).as("toks"), count(lit(1)).as("sz")))
     // Salted self-join over narrow (doc_id, band, key) rows. A hot bucket (a
     // near-dup cluster sharing one band key) emits quadratic pairs; hashing
     // the probe side by (band, key, salt) spreads each hot bucket over
@@ -343,12 +327,11 @@ object Dedup {
           col("x.salt") === col("y.salt") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct() // a pair matching in >1 band appears once per band
-    // Sorted distinct token arrays (materialized concurrently with bands
-    // above): the native sorted_overlap merge-count (functions/
-    // ArrayOps.scala) needs ascending order, and in exchange the per-pair
-    // verification is a zero-allocation two-pointer loop instead of
-    // array_intersect's hash set + result array per candidate.
-    val tokSets = Await.result(tokSetsF, Duration.Inf)
+    // Sorted distinct token arrays (materialized with bands above): the
+    // native sorted_overlap merge-count (functions/ArrayOps.scala) needs
+    // ascending order, and in exchange the per-pair verification is a
+    // zero-allocation two-pointer loop instead of array_intersect's hash
+    // set + result array per candidate.
     val overlap = expr("sorted_overlap(sa.toks, sb.toks)")
     // Verify joins: SHUFFLE-HASH on doc_id, with the token-set side as the
     // hinted build so the planner can never pick the (possibly million-row)
@@ -827,7 +810,7 @@ object Dedup {
   private def clusterEdges(edges: org.apache.spark.sql.Dataset[(Long, Long)],
                            finishRows: Long, maxIters: Int, quotientDepth: Int): DataFrame = {
     import edges.sparkSession.implicits._
-    val stars = contractEdges(edges).toDF("src", "dst").localCheckpoint(true)
+    val Seq(stars) = Par.materialize(contractEdges(edges).toDF("src", "dst"))
     val n = stars.count()
     if (n <= finishRows)
       return contractEdges(stars.coalesce(1).as[(Long, Long)]).toDF("doc_id", "cluster")
@@ -911,14 +894,13 @@ object Dedup {
     // Symmetrize via explode, not union-of-two-selects: a union would read
     // (and for a lazy input, re-execute) its input twice; the explode emits
     // both directions in one pass.
-    val edges = starEdges.select(explode(array(
+    val Seq(edges) = Par.materialize(starEdges.select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct().localCheckpoint(true)
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("cluster", col("doc_id"))
-      .localCheckpoint(true)
+      .distinct())
+    var labels = Par.materialize(edges.select(col("src").as("doc_id")).distinct()
+      .withColumn("cluster", col("doc_id"))).head
     def hop(l: DataFrame): DataFrame =
       l.join(edges, col("doc_id") === col("src"))
         .select(col("dst").as("doc_id"), col("cluster"))
@@ -936,7 +918,7 @@ object Dedup {
     val t0 = System.nanoTime()
     while (!converged && it < maxIters) {
       val stepped = (1 until hops).foldLeft(labels)((l, _) => hop(l))
-      val prop = hopTagged(stepped).localCheckpoint(true)
+      val Seq(prop) = Par.materialize(hopTagged(stepped))
       val changed = prop.agg(count(when(col("cluster") < col("self"), 1)))
         .head.getLong(0)
       converged = changed == 0L
@@ -973,9 +955,8 @@ object Dedup {
     // inherits that serialization (measured as one 2.3 s single-task stage
     // per pass, the bulk of the row's cost).
     val par = docs.sparkSession.sparkContext.defaultParallelism
-    val sigs = simhash(docs, idCol, textCol)
-      .repartition(par, col("doc_id"))
-      .localCheckpoint(true)
+    val Seq(sigs) = Par.materialize(simhash(docs, idCol, textCol)
+      .repartition(par, col("doc_id")))
     val banded = sigs.select(col("doc_id"), col("simhash"),
         explode(expr("sequence(0, 3)")).as("band"))
       .withColumn("key", expr("(simhash >> (band * 8)) & 255"))

@@ -1,5 +1,6 @@
 package graft.operators.ext
 
+import graft.operators.Par
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -108,9 +109,8 @@ object Graph {
     // pipeline dozens of times. Materializing the node-sized labels frame
     // per iteration (one bounded localCheckpoint job each) makes plan and
     // runtime linear in `iters`; the fixpoint arithmetic is untouched.
-    var labels = nodes.join(sd, Seq("node"), "left")
-      .select(col("node"), col("__seed_label").as("label"))
-      .localCheckpoint(true)
+    var labels = Par.materialize(nodes.join(sd, Seq("node"), "left")
+      .select(col("node"), col("__seed_label").as("label"))).head
     for (_ <- 1 to iters) {
       val votes = e
         .join(labels.filter(col("label").isNotNull)
@@ -121,11 +121,10 @@ object Graph {
             .orderBy(col("n").desc, col("label"))))
         .filter(col("__rk") === 1)
         .select(col("node"), col("label").as("__maj"))
-      labels = labels.join(votes.hint("shuffle_hash"), Seq("node"), "left")
+      labels = Par.materialize(labels.join(votes.hint("shuffle_hash"), Seq("node"), "left")
         .join(sd, Seq("node"), "left")
         .select(col("node"),
-          coalesce(col("__seed_label"), col("__maj"), col("label")).as("label"))
-        .localCheckpoint(true)
+          coalesce(col("__seed_label"), col("__maj"), col("label")).as("label"))).head
     }
     labels
   }

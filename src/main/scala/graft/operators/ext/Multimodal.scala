@@ -1,5 +1,6 @@
 package graft.operators.ext
 
+import graft.operators.Par
 import org.apache.spark.sql.{DataFrame, Dataset, Row, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -423,7 +424,7 @@ object Multimodal {
   def bandHashPairs(media: DataFrame, windowBytes: Int, minMatch: Int): DataFrame = {
     // checkpointed once: the self-join would otherwise re-execute the
     // payload scan + hash on both sides
-    val b = bandHashes(media, windowBytes).localCheckpoint(true)
+    val Seq(b) = Par.materialize(bandHashes(media, windowBytes))
     b.as("x").join(b.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -552,7 +553,7 @@ object Multimodal {
     */
   private def bandedHammingPairs(hashes: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, s"4x16-bit banding is pigeonhole-exact only to Hamming 3")
-    val pinned = hashes.localCheckpoint(true)
+    val Seq(pinned) = Par.materialize(hashes)
     val banded = pinned.select(col("doc_id"), col("dhash"),
       explode(expr("transform(sequence(0, 3), b -> named_struct(" +
         "'band', b, 'key', (dhash >> (b * 16)) & 65535))")).as("bk"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.ArrayOps
+import graft.operators.Par
 
 /** Similarity search over an embedding column (array<float>).
   *
@@ -341,7 +342,7 @@ object Similarity {
     require(m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
     require(ncodes > 0 && k > 0, "ncodes and k must be positive")
     val subDim = dim / m
-    val q = quantizeInt8(emb).localCheckpoint(true)
+    val Seq(q) = Par.materialize(quantizeInt8(emb))
     val cb = mkCodebook(q, md5Train(emb, ncodes))
     val codes = nearestCodes(pqTerms(q, cb, subDim), 1)
       .select("vec_id", "sub", "code")
@@ -391,7 +392,7 @@ object Similarity {
     * every declared ANN baseline; exact ties on (distance, id).
     */
   def binaryHammingTopK(emb: DataFrame, k: Int, queryLimit: Long): DataFrame = {
-    val sigs = binarySignatures(emb).localCheckpoint(true)
+    val Seq(sigs) = Par.materialize(binarySignatures(emb))
     val qs = sigs.filter(col("vec_id") < queryLimit)
     qs.as("a").join(sigs.as("b"), col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
@@ -415,9 +416,8 @@ object Similarity {
                        queryLimit: Long): DataFrame = {
     ArrayOps.register(emb.sparkSession)
     val short = binaryHammingTopK(emb, shortlist, queryLimit).select("id_a", "id_b")
-    val vecs = quantizeInt8(emb).groupBy("vec_id").agg(
-      expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv"))
-      .localCheckpoint(true)
+    val Seq(vecs) = Par.materialize(quantizeInt8(emb).groupBy("vec_id").agg(
+      expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv")))
     short.join(vecs.as("va").hint("shuffle_hash"), col("id_a") === col("va.vec_id"))
       .join(vecs.as("vb").hint("shuffle_hash"), col("id_b") === col("vb.vec_id"))
       .select(col("id_a"), col("id_b"),
@@ -449,36 +449,26 @@ object Similarity {
     require(m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
     ArrayOps.register(emb.sparkSession)
     val subDim = dim / m
-    val q = quantizeInt8(emb).localCheckpoint(true)
+    val Seq(q) = Par.materialize(quantizeInt8(emb))
     // truth leg: exact integer L2 in the same quantized space, no codes
     val vecs = q.groupBy("vec_id").agg(
       expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv"))
-    // the three checkpointed legs below are INDEPENDENT given q — their
-    // eager materializations run as concurrent jobs (optimization guide
-    // §2.6: overlap independent jobs so each one's straggler tail
-    // back-fills the others), cutting the serial checkpoint chain to the
-    // slowest leg instead of the sum
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val truthF = Future(vecs.as("a").filter(col("a.vec_id") < queryLimit)
-      .join(vecs.as("b"), col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        expr("cast(float_dot(a.qv, a.qv) + float_dot(b.qv, b.qv) - 2 * float_dot(a.qv, b.qv) as bigint)").as("d"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("id_a")).orderBy(col("d"), col("id_b"))))
-      .filter(col("rk") <= k).select("id_a", "id_b").localCheckpoint(true))
     // shared fine stage: one codebook, ONE corpus-wide code assignment,
-    // one ADC table build (checkpointed — both legs read them)
+    // one ADC table build (checkpointed — both legs read them); the truth
+    // leg is independent of both given q
     val pqCb = mkCodebook(q, md5Train(emb, ncodes))
-    val codesF = Future(nearestCodes(pqTerms(q, pqCb, subDim), 1)
-      .select("vec_id", "sub", "code").localCheckpoint(true))
-    val dtF = Future(pqTerms(q.filter(col("vec_id") < queryLimit), pqCb, subDim)
-      .groupBy(col("vec_id").as("qid"), col("sub"), col("code"))
-      .agg(sum("t").as("dt")).localCheckpoint(true))
-    val truth = Await.result(truthF, Duration.Inf)
-    val codes = Await.result(codesF, Duration.Inf)
-    val dt = Await.result(dtF, Duration.Inf)
+    val Seq(truth, codes, dt) = Par.materialize(
+      vecs.as("a").filter(col("a.vec_id") < queryLimit)
+        .join(vecs.as("b"), col("a.vec_id") =!= col("b.vec_id"))
+        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
+          expr("cast(float_dot(a.qv, a.qv) + float_dot(b.qv, b.qv) - 2 * float_dot(a.qv, b.qv) as bigint)").as("d"))
+        .withColumn("rk", row_number().over(
+          Window.partitionBy(col("id_a")).orderBy(col("d"), col("id_b"))))
+        .filter(col("rk") <= k).select("id_a", "id_b"),
+      nearestCodes(pqTerms(q, pqCb, subDim), 1).select("vec_id", "sub", "code"),
+      pqTerms(q.filter(col("vec_id") < queryLimit), pqCb, subDim)
+        .groupBy(col("vec_id").as("qid"), col("sub"), col("code"))
+        .agg(sum("t").as("dt")))
     def topK(scored: DataFrame): DataFrame = scored
       .groupBy("qid", "vec_id").agg(sum("dt").as("adist"))
       .withColumn("rk", row_number().over(
@@ -525,7 +515,7 @@ object Similarity {
     require(m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
     require(ncodes > 0 && nlist > 0 && nprobe > 0 && k > 0,
       "ncodes, nlist, nprobe, k must be positive")
-    val q = quantizeInt8(emb).localCheckpoint(true)
+    val Seq(q) = Par.materialize(quantizeInt8(emb))
     // coarse stage: one subspace spanning the full vector
     val cellCb = mkCodebook(q, md5Train(emb, nlist))
     val cells = nearestCodes(pqTerms(q, cellCb, dim), 1)
@@ -1039,9 +1029,8 @@ object Similarity {
   def coresetSelect(emb: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
     ArrayOps.register(emb.sparkSession)
-    val vecs = quantizeInt8(emb).groupBy("vec_id").agg(
-      expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv"))
-      .localCheckpoint()
+    val Seq(vecs) = Par.materialize(quantizeInt8(emb).groupBy("vec_id").agg(
+      expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv")))
     def vecOf(id: Long): Seq[Float] =
       vecs.filter(col("vec_id") === id).head.getSeq[Float](1)
     val seed = vecs.agg(min("vec_id")).head.getLong(0)

@@ -1,5 +1,6 @@
 package graft.operators.ext
 
+import graft.operators.Par
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -403,9 +404,8 @@ object TextAnalysis {
     val ws = toks(textCol)
     // same cut for the unigram model: referenced by BOTH join sides below,
     // so uncut it would re-explode the corpus once per side
-    val uni = docs.select(explode(expr(ws)).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val Seq(uni) = Par.materialize(docs.select(explode(expr(ws)).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c")))
     // bigram multiset via the native word_ngrams Generator (lazy rows, no
     // per-token interpreted named_struct lambda, no intermediate window
     // array); the two halves split back out with codegen'd substring_index
@@ -415,11 +415,10 @@ object TextAnalysis {
     // pair table — without the cut, the corpus-wide bigram pass runs TWICE,
     // once under each consumer.
     graft.functions.ArrayOps.register(docs.sparkSession)
-    val bg = docs.select(expr(s"word_ngrams($textCol, 2)"))
+    val Seq(bg) = Par.materialize(docs.select(expr(s"word_ngrams($textCol, 2)"))
       .select(substring_index(col("ngram"), " ", 1).as("a"),
         substring_index(col("ngram"), " ", -1).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("cab"))
-      .localCheckpoint(true)
+      .groupBy("a", "b").agg(count(lit(1)).as("cab")))
     val n = bg.agg(sum("cab").as("n"))
     bg.filter(col("cab") >= minCount)
       .join(uni.select(col("w").as("a"), col("c").as("ca")).hint("shuffle_hash"), Seq("a"))
@@ -609,11 +608,10 @@ object TextAnalysis {
     val spark = docs.sparkSession
     val sep = "\u001f"
     val sep2 = sep + sep
-    var vocab = graft.operators.Par.widen(docs).select(explode(expr(toks(textCol))).as("w"))
+    var vocab = Par.materialize(Par.widen(docs).select(explode(expr(toks(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .withColumn("seq", expr(
-        s"concat('$sep2', array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '$sep2'), '$sep2')"))
-      .localCheckpoint(true)
+        s"concat('$sep2', array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '$sep2'), '$sep2')"))).head
     val merges = (1 to rounds).map { r =>
       val top = vocab
         .select(col("freq"), expr(s"filter(split(seq, '$sep'), x -> x != '')").as("ts"))
@@ -623,9 +621,8 @@ object TextAnalysis {
         .groupBy(col("p.a").as("a"), col("p.b").as("b")).agg(sum("freq").as("n"))
         .orderBy(col("n").desc, col("a"), col("b")).limit(1).head()
       val (a, b, n) = (top.getString(0), top.getString(1), top.getLong(2))
-      vocab = vocab.withColumn("seq",
-          replace(col("seq"), lit(s"$sep$a$sep2$b$sep"), lit(s"$sep$a$b$sep")))
-        .localCheckpoint(true)
+      vocab = Par.materialize(vocab.withColumn("seq",
+          replace(col("seq"), lit(s"$sep$a$sep2$b$sep"), lit(s"$sep$a$b$sep")))).head
       val total = vocab
         .select((col("freq") * expr(s"size(filter(split(seq, '$sep'), x -> x != ''))")).as("t"))
         .agg(sum("t")).head().getLong(0)

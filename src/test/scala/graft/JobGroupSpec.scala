@@ -1,0 +1,73 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.io.VersionedTable
+import graft.operators.ext.Dedup
+
+/** Cancellation reach: every Spark job an engine call submits — including
+  * the overlapped checkpoint jobs of a multi-frame materialization — must
+  * carry the caller's job group, or cancelling that group misses them.
+  */
+class JobGroupSpec extends SparkSpec {
+
+  test("jobs submitted by readChangeFeed and minhashLshPairs carry the caller's job group") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val root = TestSpark.tmpDir("jobgroup_cdf")
+    VersionedTable.commit(Seq((1L, "a"), (2L, "b"), (10L, "x")).toDF("id", "s"), root,
+      "append", "c0", statsCols = Seq("id"))
+    VersionedTable.mergeInto(spark, root, Seq((10L, "X2"), (3L, "c")).toDF("id", "s"),
+      "id", "m0", statsCols = Seq("id"))
+    val docs = Seq((1L, "the quick brown fox"), (2L, "the quick brown fox"),
+      (3L, "entirely different words here")).toDF("doc_id", "text")
+
+    def calls() = (VersionedTable.readChangeFeed(spark, root, 1L, 2L, "id"),
+      Dedup.minhashLshPairs(docs, "doc_id", "text", 4, 19, 20))
+    // the same calls on another thread first, under another group, as a
+    // server's other request threads would: any worker thread they start
+    // inherits that thread's properties
+    val other = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try other.submit { () => sc.setJobGroup("other", "other"); calls() }.get()
+    finally other.shutdown()
+
+    // job groups in start order; a sentinel job under its own group marks
+    // where the calls began and ended, since listener delivery is async
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id"))): Unit
+    }
+    def sentinel(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (!groups.contains(name) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains(name), s"listener never saw the $name job")
+    }
+    sc.addSparkListener(listener)
+    val (feed, pairs) = try {
+      sentinel("start")
+      sc.setJobGroup("g", "job-group reach")
+      val out = calls()
+      sentinel("end")
+      out
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val seen = groups.asScala.toSeq
+    val during = seen.slice(seen.lastIndexOf("start") + 1, seen.indexOf("end"))
+    assert(during.nonEmpty, s"the calls ran no job: $seen")
+    assert(during.forall(_ == "g"),
+      s"jobs outside the caller's group: ${during.filterNot(_ == "g")} of $during")
+    // the calls still answer correctly
+    assert(feed.select("_change_type", "id").as[(String, Long)].collect().toSet ==
+      Set(("update_preimage", 10L), ("update_postimage", 10L), ("insert", 3L)))
+    assert(pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet == Set((1L, 2L)))
+  }
+}

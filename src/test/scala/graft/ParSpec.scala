@@ -1,0 +1,69 @@
+package graft
+
+import java.util.concurrent.{CompletionException, ExecutionException}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.SparkException
+import org.apache.spark.sql.functions.{col, udf}
+
+import graft.operators.Par
+
+object ParSpec {
+  /** Partitions of the slow leg that have finished (executors share the JVM under local[4]). */
+  val slowDone = new AtomicInteger
+}
+
+class ParSpec extends SparkSpec {
+
+  test("Par.materialize: frames come back checkpointed, in argument order") {
+    val frames = Seq(3L, 5L, 7L).map(n => spark.range(n).toDF())
+    val out = Par.materialize(frames: _*)
+    assert(out.map(_.count()) == Seq(3L, 5L, 7L))
+    assert(out.forall(_.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]))
+  }
+
+  test("Par.materialize: a failing leg rethrows its original exception once every leg has finished") {
+    ParSpec.slowDone.set(0)
+    val slow = spark.range(0, 2, 1, 2).select(udf { (x: Long) =>
+      Thread.sleep(1500); ParSpec.slowDone.incrementAndGet(); x
+    }.apply(col("id")))
+    val failing = spark.range(0, 1, 1, 1).select(udf { (x: Long) =>
+      if (x >= 0) throw new IllegalStateException("par-spec boom"); x
+    }.apply(col("id")))
+    // the failing leg comes first: a call that rethrew on the first failure
+    // would return while the slow leg is still running
+    val e = intercept[Exception](Par.materialize(failing, slow, spark.range(10).toDF()))
+    assert(!e.isInstanceOf[ExecutionException] && !e.isInstanceOf[CompletionException], e)
+    assert(e.isInstanceOf[SparkException], e)
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage == "par-spec boom"), causes)
+    assert(ParSpec.slowDone.get == 2, "returned before the slow leg finished")
+    // a pool thread stays marked active for a moment after its leg completes
+    val deadline = System.nanoTime() + 1_000_000_000L
+    while (Par.pool.getActiveCount > 0 && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(Par.pool.getActiveCount == 0, "a materialize leg is still running")
+  }
+
+  test("source guard: eager checkpoints and overlapped jobs go through Par only") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    assert(Files.isDirectory(root), s"$root is not the main source tree")
+    val par = root.resolve(Paths.get("graft", "operators", "Par.scala"))
+    // "Future(" covers scala.concurrent.Future( and the imported form
+    val banned = Seq("localCheckpoint(", ".checkpoint(", "ExecutionContext.Implicits.global",
+      "Future(", "Await.")
+    val files = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != par).toSeq
+    assert(files.size > 10, s"found only ${files.size} source files under $root")
+    val hits = for {
+      f: Path <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      b <- banned if line.contains(b)
+    } yield s"${root.relativize(f)}:${i + 1}: $b"
+    assert(hits.isEmpty, "materialize through graft.operators.Par.materialize instead:\n" +
+      hits.mkString("\n"))
+  }
+}
