@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
+import graft.functions.ArrayOps.wordNgrams
 import graft.operators.{Medallion, Relational}
 import graft.operators.ext.{Dedup, Multimodal, Similarity, Sketches, TextAnalysis}
 import graft.sources.{Ingest, StubTickerFetcher}
@@ -186,7 +187,6 @@ private[graft] object QueriesCuration {
     // on the pipeline's own split boundary.
     Q("x6_split_audit",
       (s, dir) => {
-        graft.functions.ArrayOps.register(s)
         val docs = rd(s, dir, "documents")
         val split = Dedup.clusterSplit(
           Dedup.dedupClusters(docs, "doc_id", lshPairsFx(s, dir)),
@@ -194,7 +194,7 @@ private[graft] object QueriesCuration {
         val withText = docs.select("doc_id", "text")
           .join(split.select("doc_id", "split"), Seq("doc_id"))
         def grams(part: String) = withText.filter(col("split") === part)
-          .select(col("doc_id"), expr("word_ngrams(text, 5)"))
+          .select(col("doc_id"), wordNgrams(col("text"), 5))
           .select(col("doc_id"), col("ngram")).distinct()
         val leaks = grams("test").join(
             grams("train").select(col("ngram")).distinct().hint("shuffle_hash"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
+import graft.functions.ArrayOps.nfcNormalize
 import graft.operators.{Medallion, Relational}
 import graft.operators.ext.{Dedup, Multimodal, Similarity, Sketches, TextAnalysis}
 import graft.sources.{Ingest, StubTickerFetcher}
@@ -74,13 +75,12 @@ private[graft] object QueriesDedup {
     // that both variants existed before the collapse).
     Q("x1_dedup_normalized",
       (s, dir) => {
-        graft.functions.ArrayOps.register(s)
         val d = rd(s, dir, "documents").select("doc_id", "text")
         val corpus = d.select(col("doc_id"),
             translate(col("text"), "a", "\u00e1").as("text"))
           .unionByName(d.select((col("doc_id") + 100000L).as("doc_id"),
             regexp_replace(col("text"), "a", "a\u0301").as("text")))
-        corpus.groupBy(md5(expr("nfc_normalize(text)")).as("fp"))
+        corpus.groupBy(md5(nfcNormalize(col("text"))).as("fp"))
           .agg(min(col("doc_id")).as("survivor"), count(lit(1)).as("n_forms"))
           .select("survivor", "n_forms").orderBy("survivor")
       },

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
+import graft.functions.ArrayOps.portableHll
 import graft.operators.{Medallion, Relational}
 import graft.operators.ext.{Dedup, Multimodal, Similarity, Sketches, TextAnalysis}
 import graft.sources.{Ingest, StubTickerFetcher}
@@ -644,9 +645,8 @@ private[graft] object QueriesRelational {
     // per-bucket rows on the shuffle at all.
     Q("a9_hll_native",
       (s, dir) => {
-        graft.functions.ArrayOps.register(s)
         rd(s, dir, "orders")
-          .selectExpr("portable_hll(cast(o_custkey as string)) AS hll_estimate_e4")
+          .select(portableHll(col("o_custkey").cast("string")).as("hll_estimate_e4"))
       },
       Some {
         val alphaM2 = Sketches.alphaTimesM2(6)
@@ -667,11 +667,10 @@ private[graft] object QueriesRelational {
     // emitted beside it, same discipline as a4/w12.
     Q("a16_hll_grouped",
       (s, dir) => {
-        graft.functions.ArrayOps.register(s)
         rd(s, dir, "orders")
           .groupBy("o_orderpriority")
           .agg(expr("count(distinct o_custkey)").as("exact_distinct"),
-            expr("portable_hll(cast(o_custkey as string))").as("hll_estimate_e4"))
+            portableHll(col("o_custkey").cast("string")).as("hll_estimate_e4"))
           .orderBy("o_orderpriority")
       },
       Some {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
+import graft.functions.ArrayOps.{charNgrams, nfcNormalize, stripAccents}
 import graft.operators.{Medallion, Relational}
 import graft.operators.ext.{Dedup, Multimodal, Similarity, Sketches, TextAnalysis}
 import graft.sources.{Ingest, StubTickerFetcher}
@@ -74,11 +75,10 @@ private[graft] object QueriesText {
     // deterministic on both engines.
     Q("x3_char_ngrams",
       (s, dir) => {
-        graft.functions.ArrayOps.register(s)
         // widen: the char-trigram Generate otherwise runs inside the
         // single-task scan stage of the one-row-group input file
         graft.operators.Par.widen(rd(s, dir, "documents"))
-          .select(expr("char_ngrams(text, 3)"))
+          .select(charNgrams(col("text"), 3))
           .groupBy("ngram").agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("ngram")).limit(25)
       },
@@ -341,15 +341,14 @@ private[graft] object QueriesText {
     // agree across engines, proving byte-identical normalization.
     Q("x3_normalize",
       (s, dir) => {
-        graft.functions.ArrayOps.register(s)
         rd(s, dir, "documents")
           .select(col("doc_id"),
             concat(lit("e\u0301 u\u0308 n\u0303 "), substring(col("text"), 1, 16)).as("raw"))
           .select(col("doc_id"),
             length(col("raw")).as("raw_len"),
-            length(expr("nfc_normalize(raw)")).as("nfc_len"),
-            md5(expr("nfc_normalize(raw)")).as("nfc_md5"),
-            expr("strip_accents(raw)").as("plain"))
+            length(nfcNormalize(col("raw"))).as("nfc_len"),
+            md5(nfcNormalize(col("raw"))).as("nfc_md5"),
+            stripAccents(col("raw")).as("plain"))
           .orderBy("doc_id")
       },
       Some("""WITH r AS (SELECT doc_id,

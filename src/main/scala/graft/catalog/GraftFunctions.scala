@@ -6,6 +6,8 @@ import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.types._
 
+import graft.functions.{FloatDotProduct, SortedOverlapCount}
+
 /** The catalog's V2 FUNCTION surface (`FunctionCatalog` on
   * [[GraftCatalog]]): graft's native scalar kernels, resolvable by plain
   * Spark SQL under the catalog name — `SELECT gcat.system.float_dot(a, b)`
@@ -73,20 +75,8 @@ private[catalog] object GraftFunctions {
       Array(ArrayType(FloatType), ArrayType(FloatType))
     override def resultType(): DataType = DoubleType
 
-    /** MAGIC method — same loop as FloatDotProduct.nullSafeEval: widen
-      * float→double, multiply in double, sum left-to-right (also DuckDB's
-      * list_dot_product over double lists).
-      */
-    def invoke(x: ArrayData, y: ArrayData): Double = {
-      val n = x.numElements()
-      if (n != y.numElements())
-        throw new IllegalArgumentException(
-          s"float_dot: array length mismatch ($n vs ${y.numElements()})")
-      var s = 0.0
-      var i = 0
-      while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-      s
-    }
+    /** MAGIC method — FloatDotProduct's own kernel. */
+    def invoke(x: ArrayData, y: ArrayData): Double = FloatDotProduct.dot(x, y)
 
     override def produceResult(input: InternalRow): java.lang.Double =
       if (input.isNullAt(0) || input.isNullAt(1)) null
@@ -112,18 +102,8 @@ private[catalog] object GraftFunctions {
       Array(ArrayType(LongType), ArrayType(LongType))
     override def resultType(): DataType = LongType
 
-    /** MAGIC method — the SortedOverlapCount merge count. */
-    def invoke(x: ArrayData, y: ArrayData): Long = {
-      val nx = x.numElements(); val ny = y.numElements()
-      var i = 0; var j = 0; var c = 0L
-      while (i < nx && j < ny) {
-        val xv = x.getLong(i); val yv = y.getLong(j)
-        if (xv == yv) { c += 1; i += 1; j += 1 }
-        else if (xv < yv) i += 1
-        else j += 1
-      }
-      c
-    }
+    /** MAGIC method — SortedOverlapCount's own merge count. */
+    def invoke(x: ArrayData, y: ArrayData): Long = SortedOverlapCount.count(x, y)
 
     override def produceResult(input: InternalRow): java.lang.Long =
       if (input.isNullAt(0) || input.isNullAt(1)) null

@@ -1,11 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftshim.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Native Catalyst expression for the embedding hot path: dot product over two
@@ -38,24 +40,8 @@ case class FloatDotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "float_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    // Ragged arrays raise rather than silently truncating: DuckDB's
-    // list_dot_product errors on mismatched lengths, and a mixed-dim
-    // embedding corpus should fail loudly, not diverge quietly.
-    if (n != y.numElements())
-      throw new IllegalArgumentException(
-        s"float_dot: array length mismatch ($n vs ${y.numElements()})")
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FloatDotProduct.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
@@ -78,6 +64,26 @@ case class FloatDotProduct(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object FloatDotProduct {
+  /** The interpreted kernel, shared with the catalog's `float_dot`. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements()
+    // Ragged arrays raise rather than silently truncating: DuckDB's
+    // list_dot_product errors on mismatched lengths, and a mixed-dim
+    // embedding corpus should fail loudly, not diverge quietly.
+    if (n != y.numElements())
+      throw new IllegalArgumentException(
+        s"float_dot: array length mismatch ($n vs ${y.numElements()})")
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+      i += 1
+    }
+    s
+  }
 }
 
 /** Native intersection-size over two SORTED distinct bigint arrays — the
@@ -107,23 +113,8 @@ case class SortedOverlapCount(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "sorted_overlap"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val nx = x.numElements()
-    val ny = y.numElements()
-    var i = 0
-    var j = 0
-    var c = 0L
-    while (i < nx && j < ny) {
-      val xv = x.getLong(i)
-      val yv = y.getLong(j)
-      if (xv == yv) { c += 1; i += 1; j += 1 }
-      else if (xv < yv) i += 1
-      else j += 1
-    }
-    c
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedOverlapCount.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
@@ -152,28 +143,67 @@ case class SortedOverlapCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+object SortedOverlapCount {
+  /** The interpreted kernel, shared with the catalog's `sorted_overlap`. */
+  def count(x: ArrayData, y: ArrayData): Long = {
+    val nx = x.numElements()
+    val ny = y.numElements()
+    var i = 0
+    var j = 0
+    var c = 0L
+    while (i < nx && j < ny) {
+      val xv = x.getLong(i)
+      val yv = y.getLong(j)
+      if (xv == yv) { c += 1; i += 1; j += 1 }
+      else if (xv < yv) i += 1
+      else j += 1
+    }
+    c
+  }
+}
+
+/** graft's nine native expressions, from one table.
+  *
+  * Library code builds them as typed Columns through the builders below, so
+  * it never looks a function up by name and never writes to a session's
+  * function registry. [[graft.plans.GraftExtensions]] injects the same table
+  * into sessions built with the extension; [[register]] is the opt-in for
+  * SQL (`expr("float_dot(a, b)")`) on a session built without it.
+  */
 object ArrayOps {
-  /** Registers graft's native expressions in the session function registry so
-    * they are usable via expr("float_dot(a, b)"). Idempotent.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", (exprs: Seq[Expression]) => FloatDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "portable_hll", (exprs: Seq[Expression]) => PortableHllAgg(exprs(0), p = 6), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_overlap", (exprs: Seq[Expression]) => SortedOverlapCount(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_ngrams", (exprs: Seq[Expression]) => CharNgrams(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngrams", (exprs: Seq[Expression]) => WordNgrams(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", (exprs: Seq[Expression]) => NfcNormalize(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "strip_accents", (exprs: Seq[Expression]) => StripAccents(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_band_keys", (exprs: Seq[Expression]) => MinhashBandKeys(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_index", (exprs: Seq[Expression]) => HilbertIndex(exprs(0)), "built-in")
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "float_dot"         -> (a => FloatDotProduct(a(0), a(1))),
+    "portable_hll"      -> (a => PortableHllAgg(a(0), p = 6)),
+    "sorted_overlap"    -> (a => SortedOverlapCount(a(0), a(1))),
+    "char_ngrams"       -> (a => CharNgrams(a(0), a(1))),
+    "word_ngrams"       -> (a => WordNgrams(a(0), a(1))),
+    "nfc_normalize"     -> (a => NfcNormalize(a(0))),
+    "strip_accents"     -> (a => StripAccents(a(0))),
+    "minhash_band_keys" -> (a => MinhashBandKeys(a(0), a(1))),
+    "hilbert_index"     -> (a => HilbertIndex(a(0))))
+
+  private val byName = functions.toMap
+
+  /** The Column the analyzer would resolve `name(args...)` to. */
+  private def call(name: String, args: Column*): Column =
+    GraftColumnBridge.column(byName(name)(args.map(GraftColumnBridge.expression)) match {
+      case f: AggregateFunction => f.toAggregateExpression()
+      case e => e
+    })
+
+  def floatDot(a: Column, b: Column): Column = call("float_dot", a, b)
+  def portableHll(c: Column): Column = call("portable_hll", c)
+  def sortedOverlap(a: Column, b: Column): Column = call("sorted_overlap", a, b)
+  def charNgrams(text: Column, n: Int): Column = call("char_ngrams", text, lit(n))
+  def wordNgrams(text: Column, n: Int): Column = call("word_ngrams", text, lit(n))
+  def nfcNormalize(c: Column): Column = call("nfc_normalize", c)
+  def stripAccents(c: Column): Column = call("strip_accents", c)
+  def minhashBandKeys(text: Column, bandSize: Int): Column =
+    call("minhash_band_keys", text, lit(bandSize))
+  def hilbertIndex(coords: Column): Column = call("hilbert_index", coords)
+
+  /** Registers the table in `spark`'s function registry. Idempotent. */
+  def register(spark: SparkSession): Unit = functions.foreach { case (name, build) =>
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
   }
 }

@@ -28,15 +28,10 @@ trait TableFormat {
 object ParquetTableFormat extends TableFormat {
   override def write(df: DataFrame, path: String, partitionCols: Seq[String],
                      mode: SaveMode, maxRecordsPerFile: Long): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      var w = df.write.mode(mode).format("parquet")
-      if (maxRecordsPerFile > 0) w = w.option("maxRecordsPerFile", maxRecordsPerFile)
-      if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
-      w.save(path)
-    } finally prev.foreach(spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
+    var w = df.write.mode(mode).format("parquet").option("partitionOverwriteMode", "dynamic")
+    if (maxRecordsPerFile > 0) w = w.option("maxRecordsPerFile", maxRecordsPerFile)
+    if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
+    w.save(path)
   }
 
   /** Partition columns are recovered from the hive-style directory layout,

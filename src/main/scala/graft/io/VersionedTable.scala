@@ -6722,7 +6722,7 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     * distances are grid neighbors, so each output file's bounding box is
     * at least as tight as Morton's on every dimension.
     */
-  private def withZValue(spark: SparkSession, cur: DataFrame, parent: Commit,
+  private def withZValue(cur: DataFrame, parent: Commit,
                          zorderBy: Seq[String], curve: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, floor, lit, max, min, shiftleft, shiftright}
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType, TimestampNTZType, TimestampType}
@@ -6751,10 +6751,8 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
       floor((d - lo0) * 1024.0 / math.max(1L, hi0 - lo0 + 1)).cast("long")
     }
     val z =
-      if (curve == "hilbert") {
-        graft.functions.ArrayOps.register(spark)
-        expr(s"hilbert_index(__graft_dims)")
-      } else
+      if (curve == "hilbert") graft.functions.ArrayOps.hilbertIndex(col("__graft_dims"))
+      else
         (for { j <- 0 until 10; i <- buckets.indices } yield
           shiftleft(shiftright(buckets(i), j).bitwiseAND(lit(1L)), j * k + i)
         ).reduce(_ + _)
@@ -6808,7 +6806,7 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
             require(parent.partitionCols.isEmpty,
               "zorderBy applies to flat snapshots (hive partitions already cluster; " +
                 "use compactWhere to z-order WITHIN selected partitions)")
-            withZValue(spark, cur, parent, zorderBy, curve)
+            withZValue(cur, parent, zorderBy, curve)
               .repartitionByRange(nFiles, col("__graft_z"))
               .drop("__graft_z", "__graft_dims")
           }
@@ -6935,7 +6933,7 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
             // so same-partition rows co-locate and order by the curve
             // distance inside, and each partition's files get tight
             // per-file envelopes on every clustered dimension
-            withZValue(spark, cur, parent, zorderBy, curve)
+            withZValue(cur, parent, zorderBy, curve)
               .repartitionByRange(targetFiles,
                 (parent.partitionCols.map(org.apache.spark.sql.functions.col) :+
                   org.apache.spark.sql.functions.col("__graft_z")): _*)

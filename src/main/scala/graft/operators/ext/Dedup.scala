@@ -1,6 +1,7 @@
 package graft.operators.ext
 
 import graft.operators.Par
+import graft.functions.ArrayOps.{minhashBandKeys, sortedOverlap, wordNgrams}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -53,9 +54,8 @@ object Dedup {
     */
   def shingles(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     if (n <= 1) return tokens(docs, idCol, textCol)
-    graft.functions.ArrayOps.register(docs.sparkSession)
     graft.operators.Par.widen(docs)
-      .select(col(idCol).as("doc_id"), expr(s"word_ngrams($textCol, $n)"))
+      .select(col(idCol).as("doc_id"), wordNgrams(col(textCol), n))
       .select(col("doc_id"), col("ngram").as("tok")).distinct()
   }
 
@@ -159,7 +159,6 @@ object Dedup {
     // sides below read the materialization instead of re-running the df
     // join + windows per side (which would double every upstream shuffle).
     // The token-set table is independent of it given `hashed`.
-    graft.functions.ArrayOps.register(docs.sparkSession)
     val Seq(ranked, tokSets) = Par.materialize(
       hashed.join(dfreq.hint("shuffle_hash"), Seq("h"))
         .withColumn("rnk", row_number().over(
@@ -199,7 +198,7 @@ object Dedup {
       .join(tokSets.as("sa").hint("shuffle_hash"), col("id_a") === col("sa.doc_id"))
       .join(tokSets.as("sb").hint("shuffle_hash"), col("id_b") === col("sb.doc_id"))
       .select(col("id_a"), col("id_b"),
-        expr("sorted_overlap(sa.toks, sb.toks)").as("overlap"),
+        sortedOverlap(col("sa.toks"), col("sb.toks")).as("overlap"),
         col("sa.sz").as("size_a"), col("sb.sz").as("size_b"))
       .filter(lit(threshDen) * col("overlap") >= lit(threshNum) * col("size_a"))
   }
@@ -283,7 +282,6 @@ object Dedup {
       .withColumn("h", tokenHash).select("doc_id", "h")
       .repartition(par, col("doc_id")))
     // bands and the token-set table below are INDEPENDENT given `hashed`
-    graft.functions.ArrayOps.register(docs.sparkSession)
     val Seq(bands, tokSets) = Par.materialize(
       minhashSignatures(hashed)
         .withColumn("band", (col("seed") / lit(bandSize)).cast("int"))
@@ -332,7 +330,7 @@ object Dedup {
     // ascending order, and in exchange the per-pair verification is a
     // zero-allocation two-pointer loop instead of array_intersect's hash
     // set + result array per candidate.
-    val overlap = expr("sorted_overlap(sa.toks, sb.toks)")
+    val overlap = sortedOverlap(col("sa.toks"), col("sb.toks"))
     // Verify joins: SHUFFLE-HASH on doc_id, with the token-set side as the
     // hinted build so the planner can never pick the (possibly million-row)
     // candidate side. The token-set table holds every document's FULL token
@@ -381,8 +379,7 @@ object Dedup {
     // flat loop, emit the key strings — replaces 1 + seeds interpreted HOF
     // lambdas per document (measured ~1 ms/doc at sf0.1, the dominant cost
     // of every consumer of this path). Key strings are bit-identical.
-    graft.functions.ArrayOps.register(df.sparkSession)
-    df.withColumn(outCol, expr(s"minhash_band_keys($textCol, $bandSize)"))
+    df.withColumn(outCol, minhashBandKeys(col(textCol), bandSize))
   }
 
   /** X1: near-dup CROSS-SOURCE matrix — the curation report that says WHERE

@@ -1,11 +1,11 @@
 package graft.operators.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.functions.ArrayOps
+import graft.functions.ArrayOps.floatDot
 import graft.operators.Par
 
 /** Similarity search over an embedding column (array<float>).
@@ -29,13 +29,16 @@ object Similarity {
 
   /** Adds `nrm` (L2 norm in double) next to the raw float embedding. */
   private def prep(df: DataFrame): DataFrame = {
-    ArrayOps.register(df.sparkSession)
     df.select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", expr("sqrt(float_dot(v, v))"))
+      .withColumn("nrm", sqrt(floatDot(col("v"), col("v"))))
   }
 
   private def cosCol =
-    (expr("float_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm"))).cast(DecimalType(10, 6)).as("cos")
+    (floatDot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).cast(DecimalType(10, 6)).as("cos")
+
+  /** Squared L2 distance of two int8-quantized vectors — an exact integer. */
+  private def sqL2(a: Column, b: Column): Column =
+    (floatDot(a, a) + floatDot(b, b) - lit(2) * floatDot(a, b)).cast("bigint")
 
   /** All pairs with cosine >= minCos (brute-force baseline).
     *
@@ -48,7 +51,7 @@ object Similarity {
     */
   def cosinePairs(emb: DataFrame, minCos: java.math.BigDecimal): DataFrame = {
     val p = prep(emb)
-    val rawCos = expr("float_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm"))
+    val rawCos = floatDot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
     p.as("a").join(p.as("b"), col("a.vec_id") < col("b.vec_id"))
       .filter(rawCos >= lit(minCos.doubleValue() - 1e-6))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"), cosCol)
@@ -144,12 +147,11 @@ object Similarity {
     * to drop.
     */
   def semanticContamination(corpus: DataFrame, bench: DataFrame, minDot: Long): DataFrame = {
-    ArrayOps.register(corpus.sparkSession)
     def vecsOf(df: DataFrame) = quantizeInt8Frozen(df, corpus).groupBy("vec_id")
       .agg(expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv"))
     val b = vecsOf(bench).select(col("vec_id").as("bench_id"), col("qv").as("bqv"))
     vecsOf(corpus)
-      .join(broadcast(b), expr(s"cast(float_dot(qv, bqv) as bigint) >= $minDot"))
+      .join(broadcast(b), floatDot(col("qv"), col("bqv")).cast("bigint") >= minDot)
       .groupBy("vec_id").agg(count(lit(1)).as("n_hits"))
   }
 
@@ -238,13 +240,12 @@ object Similarity {
     * cell-bucketed variants compose exactly as in [[ivfTopK]].
     */
   def quantizedTopK(emb: DataFrame, k: Int, queryLimit: Long): DataFrame = {
-    ArrayOps.register(emb.sparkSession)
     val vecs = quantizeInt8(emb).groupBy("vec_id").agg(
       expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv"))
     val qs = vecs.filter(col("vec_id") < queryLimit)
     qs.as("a").join(vecs.as("b"), col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        expr("cast(float_dot(a.qv, b.qv) as bigint)").as("dot"))
+        floatDot(col("a.qv"), col("b.qv")).cast("bigint").as("dot"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("id_a")).orderBy(col("dot").desc, col("id_b"))))
       .filter(col("rk") <= k)
@@ -261,13 +262,12 @@ object Similarity {
     * baseline, like [[annTopK]] for the float paths.
     */
   def quantizedL2TopK(emb: DataFrame, k: Int, queryLimit: Long): DataFrame = {
-    ArrayOps.register(emb.sparkSession)
     val vecs = quantizeInt8(emb).groupBy("vec_id").agg(
       expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv"))
     val qs = vecs.filter(col("vec_id") < queryLimit)
     qs.as("a").join(vecs.as("b"), col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        expr("cast(float_dot(a.qv, a.qv) + float_dot(b.qv, b.qv) - 2 * float_dot(a.qv, b.qv) as bigint)").as("d"))
+        sqL2(col("a.qv"), col("b.qv")).as("d"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("id_a")).orderBy(col("d"), col("id_b"))))
       .filter(col("rk") <= k)
@@ -414,14 +414,13 @@ object Similarity {
     */
   def binaryRerankTopK(emb: DataFrame, k: Int, shortlist: Int,
                        queryLimit: Long): DataFrame = {
-    ArrayOps.register(emb.sparkSession)
     val short = binaryHammingTopK(emb, shortlist, queryLimit).select("id_a", "id_b")
     val Seq(vecs) = Par.materialize(quantizeInt8(emb).groupBy("vec_id").agg(
       expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv")))
     short.join(vecs.as("va").hint("shuffle_hash"), col("id_a") === col("va.vec_id"))
       .join(vecs.as("vb").hint("shuffle_hash"), col("id_b") === col("vb.vec_id"))
       .select(col("id_a"), col("id_b"),
-        expr("cast(float_dot(va.qv, va.qv) + float_dot(vb.qv, vb.qv) - 2 * float_dot(va.qv, vb.qv) as bigint)").as("d"))
+        sqL2(col("va.qv"), col("vb.qv")).as("d"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("id_a").orderBy(col("d"), col("id_b"))))
       .filter(col("rk") <= k)
@@ -447,7 +446,6 @@ object Similarity {
   def pqRecallHits(emb: DataFrame, dim: Int, m: Int, ncodes: Int, nlist: Int,
                    nprobe: Int, k: Int, queryLimit: Long): DataFrame = {
     require(m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
-    ArrayOps.register(emb.sparkSession)
     val subDim = dim / m
     val Seq(q) = Par.materialize(quantizeInt8(emb))
     // truth leg: exact integer L2 in the same quantized space, no codes
@@ -461,7 +459,7 @@ object Similarity {
       vecs.as("a").filter(col("a.vec_id") < queryLimit)
         .join(vecs.as("b"), col("a.vec_id") =!= col("b.vec_id"))
         .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-          expr("cast(float_dot(a.qv, a.qv) + float_dot(b.qv, b.qv) - 2 * float_dot(a.qv, b.qv) as bigint)").as("d"))
+          sqL2(col("a.qv"), col("b.qv")).as("d"))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("id_a")).orderBy(col("d"), col("id_b"))))
         .filter(col("rk") <= k).select("id_a", "id_b"),
@@ -617,7 +615,6 @@ object Similarity {
     */
   def kmeansCentroids(emb: DataFrame, nlist: Int, iters: Int, seed: Long): DataFrame = {
     val spark = emb.sparkSession
-    ArrayOps.register(spark)
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val feat = emb.select(array_to_vector(col("embedding")).as("features"))
@@ -627,7 +624,7 @@ object Similarity {
     model.clusterCenters.zipWithIndex.toSeq
       .map { case (v, i) => (i.toLong, v.toArray.map(_.toFloat)) }
       .toDF("cell", "cv")
-      .withColumn("cnrm", expr("sqrt(float_dot(cv, cv))"))
+      .withColumn("cnrm", sqrt(floatDot(col("cv"), col("cv"))))
   }
 
   /** X2 scale path, IVF-shaped: partition vectors into `nlist` cells by
@@ -651,7 +648,7 @@ object Similarity {
       if (trainIters > 0) kmeansCentroids(emb, nlist, trainIters, seed = 42L)
       else p.filter(col("vec_id") < nlist)
         .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm")))
-    val simToCent = (expr("float_dot(v, cv)") / (col("nrm") * col("cnrm")))
+    val simToCent = (floatDot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
       .cast(DecimalType(10, 6))
     // rank cells per vector once; rows with rk=1 define the index assignment,
     // rows with rk<=nprobe define the probe set for that vector as a query
@@ -667,7 +664,7 @@ object Similarity {
     val scored = probes.join(assigned,
         col("probe_cell") === col("cell") && col("q_id") =!= col("vec_id"))
       .select(col("q_id").as("id_a"), col("vec_id").as("id_b"),
-        (expr("float_dot(qv, v)") / (col("qnrm") * col("nrm"))).cast(DecimalType(10, 6)).as("cos"))
+        (floatDot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).cast(DecimalType(10, 6)).as("cos"))
       .distinct() // a neighbour reachable via several probed cells counts once
     scored.withColumn("rk", row_number().over(
         Window.partitionBy(col("id_a")).orderBy(col("cos").desc, col("id_b"))))
@@ -819,7 +816,7 @@ object Similarity {
   def semanticDedup(emb: DataFrame, nlist: Int, minCos: java.math.BigDecimal,
                     trainIters: Int = 0): DataFrame = {
     val assigned = assignCells(emb, nlist, trainIters)
-    val rawCos = expr("float_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm"))
+    val rawCos = floatDot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
     val dropped = assigned.as("a").join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .filter(rawCos >= lit(minCos.doubleValue() - 1e-6))
@@ -844,7 +841,7 @@ object Similarity {
   def semanticDedupComponents(emb: DataFrame, nlist: Int, minCos: java.math.BigDecimal,
                               trainIters: Int = 0): DataFrame = {
     val assigned = assignCells(emb, nlist, trainIters)
-    val rawCos = expr("float_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm"))
+    val rawCos = floatDot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
     val pairs = assigned.as("a").join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .filter(rawCos >= lit(minCos.doubleValue() - 1e-6))
@@ -881,7 +878,7 @@ object Similarity {
     val spark = emb.sparkSession
     import spark.implicits._
     val assigned = assignCells(emb, nlist, trainIters)
-    val rawCos = expr("float_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm"))
+    val rawCos = floatDot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
     val lowerNbrs = assigned.as("a").join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .filter(rawCos >= lit(minCos.doubleValue() - 1e-6))
@@ -917,7 +914,7 @@ object Similarity {
       if (trainIters > 0) kmeansCentroids(emb, nlist, trainIters, seed = 42L)
       else p.filter(col("vec_id") < nlist)
         .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm")))
-    val simToCent = (expr("float_dot(v, cv)") / (col("nrm") * col("cnrm")))
+    val simToCent = (floatDot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
       .cast(DecimalType(10, 6))
     p.join(cents)
       .withColumn("csim", simToCent)
@@ -946,9 +943,8 @@ object Similarity {
     * would ride into the top-k tail instead of failing loudly or dropping.
     */
   def bucketedTopK(emb: DataFrame, bucketCol: String, k: Int): DataFrame = {
-    ArrayOps.register(emb.sparkSession)
     val p = emb.select(col("vec_id"), col("embedding").as("v"), col(bucketCol).as("bkt"))
-      .withColumn("nrm", expr("sqrt(float_dot(v, v))"))
+      .withColumn("nrm", sqrt(floatDot(col("v"), col("v"))))
       .filter(col("nrm") > 0)
     val scored = p.as("a").join(p.as("b"),
         col("a.bkt") === col("b.bkt") && col("a.vec_id") =!= col("b.vec_id"))
@@ -993,7 +989,7 @@ object Similarity {
     val planes = hyperplanes(numPlanes, d)
     val sigBits = planes.zipWithIndex.map { case (plane, i) =>
       val arr = s"array(${plane.map(x => s"cast($x as float)").mkString(", ")})"
-      val proj = expr(s"float_dot(v, $arr)").cast(DecimalType(18, 6))
+      val proj = floatDot(col("v"), expr(arr)).cast(DecimalType(18, 6))
       when(proj >= 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
     val bucketed = p.withColumn("sig", sigBits)
@@ -1028,7 +1024,6 @@ object Similarity {
     */
   def coresetSelect(emb: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    ArrayOps.register(emb.sparkSession)
     val Seq(vecs) = Par.materialize(quantizeInt8(emb).groupBy("vec_id").agg(
       expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv")))
     def vecOf(id: Long): Seq[Float] =
@@ -1039,7 +1034,7 @@ object Similarity {
     for (_ <- 2 to k) {
       val minDist = centerVecs.map { c =>
         val arr = s"array(${c.map(x => s"cast($x as float)").mkString(", ")})"
-        expr(s"cast(float_dot(qv, qv) + float_dot($arr, $arr) - 2 * float_dot(qv, $arr) as bigint)")
+        sqL2(col("qv"), expr(arr))
       }.reduce((a, b) => least(a, b))
       val next = vecs.filter(!col("vec_id").isin(chosen: _*))
         .select(col("vec_id"), minDist.as("d"))

@@ -1,6 +1,7 @@
 package graft.operators.ext
 
 import graft.operators.Par
+import graft.functions.ArrayOps.wordNgrams
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -93,8 +94,7 @@ object TextAnalysis {
     // bigram multiset via the native word_ngrams Generator (lazy rows, no
     // interpreted HOF lambdas, no per-document window array) — counts keep
     // duplicate occurrences, so no distinct here
-    graft.functions.ArrayOps.register(docs.sparkSession)
-    docs.select(col(langCol).as("lang"), expr(s"word_ngrams($textCol, 2)"))
+    docs.select(col(langCol).as("lang"), wordNgrams(col(textCol), 2))
       .select(col("lang"), col("ngram").as("bigram"))
       .groupBy("lang", "bigram").agg(count(lit(1)).as("cnt"))
       .withColumn("rk", row_number().over(
@@ -154,13 +154,12 @@ object TextAnalysis {
     * rather than vanishing.
     */
   def lmSurprise(docs: DataFrame, ref: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.ArrayOps.register(docs.sparkSession)
-    val cb = ref.select(expr(s"word_ngrams($textCol, 2)"))
+    val cb = ref.select(wordNgrams(col(textCol), 2))
       .groupBy(col("ngram").as("bigram")).agg(count(lit(1)).as("cb"))
     val cu = ref.select(explode(expr(toks(textCol))).as("w1"))
       .groupBy("w1").agg(count(lit(1)).as("cu"))
     val vsize = cu.agg(count(lit(1)).as("vsize")) // one row: |V| of the reference
-    val db = graft.operators.Par.widen(docs).select(col(idCol).as("doc_id"), expr(s"word_ngrams($textCol, 2)"))
+    val db = graft.operators.Par.widen(docs).select(col(idCol).as("doc_id"), wordNgrams(col(textCol), 2))
       .select(col("doc_id"), col("ngram").as("bigram"),
         expr("split(ngram, ' ')[0]").as("w1"))
     val scored = db
@@ -414,8 +413,7 @@ object TextAnalysis {
     // bigrams, not corpus mass) feeds both the grand total and the scored
     // pair table — without the cut, the corpus-wide bigram pass runs TWICE,
     // once under each consumer.
-    graft.functions.ArrayOps.register(docs.sparkSession)
-    val Seq(bg) = Par.materialize(docs.select(expr(s"word_ngrams($textCol, 2)"))
+    val Seq(bg) = Par.materialize(docs.select(wordNgrams(col(textCol), 2))
       .select(substring_index(col("ngram"), " ", 1).as("a"),
         substring_index(col("ngram"), " ", -1).as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("cab")))
@@ -530,7 +528,6 @@ object TextAnalysis {
     */
   def qualityClassifier(docs: DataFrame, positives: DataFrame, negatives: DataFrame,
                         idCol: String, textCol: String, buckets: Int = 2048): DataFrame = {
-    graft.functions.ArrayOps.register(docs.sparkSession)
     def feats(df0: DataFrame): DataFrame = {
       // NOT widened: feats is instantiated three times (docs/positives/
       // negatives) and each widened leg is a distinct filter->RoundRobin
@@ -539,7 +536,7 @@ object TextAnalysis {
       // 2.8 s unwidened vs 5.2 s widened; the warm pass differs < 1 s)
       val df = df0
       val uni = df.select(col(idCol).as("doc_id"), explode(expr(toks(textCol))).as("f"))
-      val big = df.select(col(idCol).as("doc_id"), expr(s"word_ngrams($textCol, 2)"))
+      val big = df.select(col(idCol).as("doc_id"), wordNgrams(col(textCol), 2))
         .select(col("doc_id"), col("ngram").as("f"))
       uni.unionByName(big)
         .withColumn("bucket",

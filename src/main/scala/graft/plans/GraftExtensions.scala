@@ -4,40 +4,19 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CharNgrams, FloatDotProduct, HilbertIndex, PortableHllAgg, SortedOverlapCount, WordNgrams}
+import graft.functions.ArrayOps
 
 /** Library entry point for `spark.sql.extensions=graft.plans.GraftExtensions`:
-  * injects graft's native expressions into every session built on the
-  * context, so users get `float_dot` / `portable_hll` without calling a
-  * register method. (The per-session `ArrayOps.register` path remains for
-  * sessions built without the config; both are idempotent.)
+  * injects graft's native expressions (the [[ArrayOps.functions]] table)
+  * into every session built on the context, so SQL users get `float_dot` /
+  * `portable_hll` without calling a register method.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("float_dot"),
-      new ExpressionInfo(classOf[FloatDotProduct].getName, "float_dot"),
-      (exprs: Seq[Expression]) => FloatDotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("portable_hll"),
-      new ExpressionInfo(classOf[PortableHllAgg].getName, "portable_hll"),
-      (exprs: Seq[Expression]) => PortableHllAgg(exprs(0), p = 6)))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_overlap"),
-      new ExpressionInfo(classOf[SortedOverlapCount].getName, "sorted_overlap"),
-      (exprs: Seq[Expression]) => SortedOverlapCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("char_ngrams"),
-      new ExpressionInfo(classOf[CharNgrams].getName, "char_ngrams"),
-      (exprs: Seq[Expression]) => CharNgrams(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (exprs: Seq[Expression]) => WordNgrams(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("hilbert_index"),
-      new ExpressionInfo(classOf[HilbertIndex].getName, "hilbert_index"),
-      (exprs: Seq[Expression]) => HilbertIndex(exprs(0))))
+    ArrayOps.functions.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(ArrayOps.getClass.getName, name), build))
+    }
     // SQL READ front door: snapshot / time-travel / change-feed relations
     // as table-valued functions — `FROM graft_table('<root>' [, v|ts])`,
     // `FROM graft_changes('<root>', from, to, '<key>')`. Resolves at

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.ArrayOps
 import graft.operators.ext.Dedup
 
 /** Cluster labeling (connected components) and the native sorted_overlap
@@ -77,7 +76,6 @@ class DedupClusterSpec extends SparkSpec {
 
   test("sorted_overlap equals size(array_intersect) on sorted distinct arrays") {
     import spark.implicits._
-    ArrayOps.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(200)((
       rnd.shuffle((0L to 60L).toList).take(rnd.nextInt(40)).sorted.toArray,

@@ -481,7 +481,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("float_dot raises on ragged arrays instead of silently truncating") {
-    graft.functions.ArrayOps.register(spark)
     val df = embeddings((0L, Seq(1f, 2f)), (1L, Seq(1f, 2f, 3f)))
     val ragged = df.as("a").join(df.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(org.apache.spark.sql.functions.expr("float_dot(a.embedding, b.embedding)"))
@@ -613,7 +612,6 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("coresetSelect: greedy farthest-point covers separated clusters before densifying one") {
     import spark.implicits._
-    graft.functions.ArrayOps.register(spark)
     // three tight clusters far apart + the seed's twin: the greedy walk
     // must visit all three clusters before picking anyone's near-duplicate
     val emb = Seq(

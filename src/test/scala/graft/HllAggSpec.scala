@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.ArrayOps
 import graft.operators.ext.Sketches
 
 /** The native TypedImperativeAggregate HLL (§2.10): same estimate as the
@@ -16,13 +15,11 @@ class HllAggSpec extends SparkSpec {
   test("portable_hll equals the composed Sketches estimate (same hash/bucket/rank math)") {
     val composed = Sketches.hllDistinct(orders, "o_custkey", 6)
       .select("hll_estimate_e4").head.getLong(0)
-    ArrayOps.register(spark)
     val native = orders.selectExpr("portable_hll(cast(o_custkey as string)) AS e").head.getLong(0)
     assert(native == composed)
   }
 
   test("estimate is invariant under partitioning (partial states merge exactly)") {
-    ArrayOps.register(spark)
     val one = orders.repartition(1)
       .selectExpr("portable_hll(cast(o_custkey as string)) AS e").head.getLong(0)
     val many = orders.repartition(13)

@@ -29,6 +29,38 @@ class IoSpec extends SparkSpec {
     assert(back == Set(("a", 2022), ("c", 2023)))
   }
 
+  test("ParquetTableFormat: a dynamic overwrite leaves the session's overwrite mode alone") {
+    import spark.implicits._
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val path = tmpDir("dynconf")
+    ParquetTableFormat.write(Seq(("a", 2022), ("b", 2023)).toDF("k", "year"), path, Seq("year"))
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        seen.add(spark.conf.get(key))
+        IoSpec.jobStarted.countDown()
+      }
+    }
+    // every write task waits for the listener, so the session value is
+    // read while the write is still running
+    val gate = udf { (k: String) => IoSpec.jobStarted.await(60, java.util.concurrent.TimeUnit.SECONDS); k }
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    spark.sparkContext.addSparkListener(listener)
+    try ParquetTableFormat.write(
+      Seq(("c", 2023)).toDF("k", "year").withColumn("k", gate(col("k"))), path, Seq("year"))
+    finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set(key, prev)
+    }
+    assert(seen.asScala.nonEmpty && seen.asScala.forall(_ == "static"), seen)
+    val back = ParquetTableFormat.read(spark, path).collect().map(r => (r.getString(0), r.getInt(1))).toSet
+    assert(back == Set(("a", 2022), ("c", 2023)))
+  }
+
   test("ParquetTableFormat: maxRecordsPerFile bounds output file sizes (small-file/huge-file control)") {
     val path = tmpDir("mrpf")
     val df = spark.range(0, 100).coalesce(1).toDF("id")
@@ -4579,4 +4611,9 @@ class IoSpec extends SparkSpec {
       Map("graft.write.orderedBy" -> "nope"), "cb1"))
       .getMessage.contains("unknown column"))
   }
+}
+
+object IoSpec {
+  /** Released by the first job start the overwrite-mode listener sees. */
+  val jobStarted = new java.util.concurrent.CountDownLatch(1)
 }

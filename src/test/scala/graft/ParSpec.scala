@@ -46,24 +46,37 @@ class ParSpec extends SparkSpec {
     assert(Par.pool.getActiveCount == 0, "a materialize leg is still running")
   }
 
-  test("source guard: eager checkpoints and overlapped jobs go through Par only") {
+  /** `file:line: pattern` for every banned pattern in `src/main/scala`
+    * outside the one file allowed to hold it.
+    */
+  private def sourceHits(allowed: Seq[String], banned: Seq[String]): Seq[String] = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
     val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(Files.isDirectory(root), s"$root is not the main source tree")
-    val par = root.resolve(Paths.get("graft", "operators", "Par.scala"))
-    // "Future(" covers scala.concurrent.Future( and the imported form
-    val banned = Seq("localCheckpoint(", ".checkpoint(", "ExecutionContext.Implicits.global",
-      "Future(", "Await.")
+    val home = root.resolve(Paths.get("graft", allowed: _*))
     val files = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p != par).toSeq
+      .filter(p => p.toString.endsWith(".scala") && p != home).toSeq
     assert(files.size > 10, s"found only ${files.size} source files under $root")
-    val hits = for {
+    for {
       f: Path <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       b <- banned if line.contains(b)
     } yield s"${root.relativize(f)}:${i + 1}: $b"
+  }
+
+  test("source guard: eager checkpoints and overlapped jobs go through Par only") {
+    // "Future(" covers scala.concurrent.Future( and the imported form
+    val hits = sourceHits(Seq("operators", "Par.scala"), Seq("localCheckpoint(", ".checkpoint(",
+      "ExecutionContext.Implicits.global", "Future(", "Await."))
     assert(hits.isEmpty, "materialize through graft.operators.Par.materialize instead:\n" +
       hits.mkString("\n"))
+  }
+
+  test("source guard: library code never writes to a session's function registry") {
+    val hits = sourceHits(Seq("functions", "ArrayOps.scala"),
+      Seq("ArrayOps.register(", "createOrReplaceTempFunction"))
+    assert(hits.isEmpty, "build graft's functions with the typed graft.functions.ArrayOps " +
+      "builders instead:\n" + hits.mkString("\n"))
   }
 }

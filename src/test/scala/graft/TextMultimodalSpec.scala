@@ -149,7 +149,6 @@ class TextMultimodalSpec extends SparkSpec {
 
   test("word_ngrams matches the composed filter/transform/slice shingle form") {
     import spark.implicits._
-    graft.functions.ArrayOps.register(spark)
     // double spaces, leading/trailing space, short and null rows
     val df = Seq("the quick  brown fox jumps", " a b ", "one", null)
       .toDF("t")
@@ -284,7 +283,6 @@ class TextMultimodalSpec extends SparkSpec {
 
   test("nfc_normalize/strip_accents: composition shrinks decomposed marks, codegen == interpreted") {
     import spark.implicits._
-    graft.functions.ArrayOps.register(spark)
     // inputs DECOMPOSED (e + U+0301, u + U+0308); expectations COMPOSED
     val df = Seq("e\u0301clair", "u\u0308ber", "plain").toDF("s")
       .select(col("s"), expr("nfc_normalize(s)").as("n"), expr("strip_accents(s)").as("p"))
@@ -300,7 +298,6 @@ class TextMultimodalSpec extends SparkSpec {
 
   test("word_ngrams rejects non-positive n at analysis time") {
     import spark.implicits._
-    graft.functions.ArrayOps.register(spark)
     val df = Seq("a b c").toDF("t")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       df.select(expr("word_ngrams(t, 0)")).collect()
