@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** What one measured pass contributes, as a pure decision (unit-tested
     * in BenchSpec): `record` — the pass enters best/passesDone (a
@@ -35,21 +34,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     // Soft wall-clock budget: once exceeded, stop starting new runs and emit
     // what we have. Keeps the harness parseable under an external timeout.
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1000").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", ShmLocalDir.path())
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Full materialization via the noop sink: every row is produced and
     // serialized, nothing is collected to the driver, and Catalyst cannot
@@ -236,8 +226,9 @@ object Bench {
         // dependencies) only after a GC processes their weak references.
         // With a large, barely-used heap GC never runs, state from hundreds
         // of executions accumulates, and identical queries degrade from
-        // ~5 s to ~180 s over a run (measured; ProfileMinhash reproduces
-        // it). One explicit GC per QUERY (not per pass) keeps the
+        // ~5 s to ~180 s over a run (measured at local[32]; the rule is in
+        // ARCHITECTURE.md §100 TB design notes, "JVM at query-diverse
+        // scale"). One explicit GC per QUERY (not per pass) keeps the
         // accumulation bounded at one query's state while halving the
         // ~0.2-0.4 s full-GC tax vs the per-pass form. (An every-4th-query
         // cadence was measured too: it saved ~15 s of elapsed but pushed

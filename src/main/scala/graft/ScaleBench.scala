@@ -24,7 +24,8 @@ object ScaleBench {
     * fixed, mass × k), embeddings replicated under offset ids (per-dimension
     * min/max exactly preserved, so frozen-quantizer stats and query bounds
     * stay fixed), every other table symlinked. Shared by the scale harnesses
-    * (ScaleBench, ProfileLexical) so all scale claims run one corpus recipe.
+    * (ScaleBench and the lexical-index runs of SCALE.md §Lexical index) so
+    * all scale claims run one corpus recipe.
     */
   def ensureScaledCorpus(spark: SparkSession, sfDir: String, k: Int): String = {
     val scaled = s"/tmp/graft_scale_${k}x"
@@ -88,12 +89,7 @@ object ScaleBench {
     val queries = if (args.length > 2) args.drop(2).toSeq else Seq(
       "x2_minhash_lsh", "x2_containment_join", "x1_incremental_neardup",
       "x1_dedup_clusters", "x9_curation_e2e")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.local.dir", ShmLocalDir.path())
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession.build(Runtime.getRuntime.availableProcessors)
     spark.sparkContext.setLogLevel("ERROR")
     val scaled = ensureScaledCorpus(spark, sfDir, k)
     for (q <- queries; (label, dir) <- Seq("1x" -> sfDir, s"${k}x" -> scaled)) {

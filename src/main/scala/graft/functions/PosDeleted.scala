@@ -27,9 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * normalizes the path to the vector's table-relative key (split at the
   * dir's unique last component, `dirTag`) only on a file CHANGE — the hot
   * path is one UTF8String equality + binary search per row, with zero
-  * per-row string manipulation (ProfileDeletionVectors measures the
-  * difference). Instances are deserialized per task, so the mutable memo
-  * is single-threaded by construction.
+  * per-row string manipulation (SCALE.md §Deletion-vector read cost
+  * records the difference). Instances are deserialized per task, so the
+  * mutable memo is single-threaded by construction.
   */
 case class PosDeleted(left: Expression, right: Expression,
                       dirTag: String, dv: Map[String, Array[Long]])

@@ -2099,7 +2099,7 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
         // shuffle's tasks instead of serializing inside whichever tasks
         // hold the keys (a single-task source writing a days(ts) layout
         // opened 2 405 parquet writers sequentially: ~40 s of one-core
-        // wall-clock for a 50 k-row batch, measured in ProfileEvoRead; the
+        // wall-clock for a 50 k-row batch, OPTIMIZATION_r19.md §11; the
         // delta-DML writer already declares the same clustering via
         // RequiresDistributionAndOrdering). Costs one narrow exchange per
         // commit, which at scale buys back whole compaction runs; a
@@ -2966,9 +2966,9 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     * count equals the path count — on a hive tree with thousands of tiny
     * partition dirs that is thousands of ~2 ms task launches to do ~50 µs
     * of POSIX readdir each (measured: 5-6 s vs 0.4 s for a 2 405-dir era,
-    * ProfileEvoRead). On a REMOTE store (hdfs/s3/abfs) the distributed job
-    * is the right call — each list is a network RTT — so non-local paths
-    * keep Spark's default behaviour untouched.
+    * OPTIMIZATION_r19.md §11). On a REMOTE store (hdfs/s3/abfs) the
+    * distributed job is the right call — each list is a network RTT — so
+    * non-local paths keep Spark's default behaviour untouched.
     */
   private def withDriverListing[T](spark: SparkSession, paths: Seq[String])(body: => T): T = {
     val local = paths.forall { p =>

@@ -22,9 +22,10 @@ import org.apache.spark.sql.SparkSession
   * `VersionedTable$` instance (not serializable), so the distributed
   * footer gather — executor tasks constructing and shipping envelopes —
   * would fail with `Task not serializable` the first time a commit
-  * crosses `graft.index.footerJobThreshold` (caught by
-  * ProfileFooterGather). The trait aliases every name below, so all
-  * existing `VersionedTable.IntMM`-style call sites compile unchanged.
+  * crosses `graft.index.footerJobThreshold` (caught by the footer-gather
+  * measurement of OPTIMIZATION_r19.md §10; FooterGatherSpec now runs that
+  * path). The trait aliases every name below, so all existing
+  * `VersionedTable.IntMM`-style call sites compile unchanged.
   */
 private[io] object FooterStats extends Serializable {
 
@@ -271,8 +272,9 @@ private[io] trait VersionedTableIndex { this: VersionedTable.type =>
     // commit can land thousands of one-file dirs — read sequentially and
     // doubly (the pre-r18 shape) that was 2 opens × #files of driver
     // wall-clock per commit (measured ~50 s on a 2 405-dir era,
-    // ProfileEvoRead). Results reassemble in `files` order, so the side
-    // file and every envelope fold stay byte-identical to the serial form.
+    // OPTIMIZATION_r19.md §11). Results reassemble in `files` order, so
+    // the side file and every envelope fold stay byte-identical to the
+    // serial form.
     val footerInfo: Seq[(Map[String, MinMax], Map[String, Long], Long)] =
       if (files.size < footerJobThreshold(spark))
         parallelFooters(files) { rel =>
@@ -381,7 +383,7 @@ private[io] trait VersionedTableIndex { this: VersionedTable.type =>
     * (`graft.index.footerJobThreshold`) with a default far above anything
     * the bench fixtures produce: below it the pool's ~10 ms/file wins on
     * job-launch overhead; above it indexing scales with the cluster
-    * instead of the driver (measured in ProfileFooterGather).
+    * instead of the driver (measured in OPTIMIZATION_r19.md §10).
     */
   private[io] def footerJobThreshold(spark: SparkSession): Int =
     spark.conf.getOption("graft.index.footerJobThreshold")

@@ -771,13 +771,14 @@ object Dedup {
     * via raise_error, not as a silent null; callers with string keys should
     * dedup on a surrogate (e.g. Medallion.withScalableSurrogateId) first.
     *
-    * Measured (ProfileClusters --synthetic, local[32], cliques-plus-chain
-    * graphs, pair generation excluded): 1M nodes / 24.5M edges resolve
-    * exactly via the finish path in 1.8 s; 5M nodes / 123M edges in
+    * Measured (synthetic cliques-plus-chain graphs, local[32], pair
+    * generation excluded): 1M nodes / 24.5M edges resolve exactly via
+    * the finish path in 1.8 s; 5M nodes / 123M edges in
     * 12.4 s and 20M nodes / 490M edges in 88.9 s, both exactly through
     * ONE quotient level (labels ≈ local components → single-task
     * finish) — the propagation fallback (~70 s of hop rounds at the 5M
-    * size) is no longer on the path. Timings in ARCHITECTURE.md §Round-7.
+    * size) is no longer on the path. Timings in ARCHITECTURE.md §Round-7
+    * changes, "Quotient-recursion headroom".
     */
   def dedupClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
                     aCol: String = "id_a", bCol: String = "id_b",

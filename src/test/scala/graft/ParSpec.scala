@@ -46,14 +46,18 @@ class ParSpec extends SparkSpec {
     assert(Par.pool.getActiveCount == 0, "a materialize leg is still running")
   }
 
-  /** `file:line: pattern` for every banned pattern in `src/main/scala`
-    * outside the one file allowed to hold it.
+  private def sourceRoot(tree: String) =
+    java.nio.file.Paths.get(sys.props("user.dir"), "src", tree, "scala")
+
+  /** `file:line: pattern` for every banned pattern in `src/<tree>/scala`
+    * outside the one file allowed to hold it (`Nil` allows none).
     */
-  private def sourceHits(allowed: Seq[String], banned: Seq[String]): Seq[String] = {
+  private def sourceHits(allowed: Seq[String], banned: Seq[String],
+                         tree: String = "main"): Seq[String] = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
-    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
-    assert(Files.isDirectory(root), s"$root is not the main source tree")
+    val root = sourceRoot(tree)
+    assert(Files.isDirectory(root), s"$root is not the $tree source tree")
     val home = root.resolve(Paths.get("graft", allowed: _*))
     val files = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && p != home).toSeq
@@ -78,5 +82,18 @@ class ParSpec extends SparkSpec {
       Seq("ArrayOps.register(", "createOrReplaceTempFunction"))
     assert(hits.isEmpty, "build graft's functions with the typed graft.functions.ArrayOps " +
       "builders instead:\n" + hits.mkString("\n"))
+  }
+
+  test("source guard: every session is built by graft.LocalSession") {
+    // spelled in pieces so this file does not match itself
+    val builder = Seq("SparkSession", "builder").mkString(".")
+    val hits = sourceHits(Seq("LocalSession.scala"), Seq(builder)) ++
+      sourceHits(Nil, Seq(builder), tree = "test")
+    assert(hits.isEmpty, "build the session with graft.LocalSession.build instead:\n" +
+      hits.mkString("\n"))
+    val home = java.nio.file.Files.readString(
+      sourceRoot("main").resolve("graft/LocalSession.scala"))
+    assert(home.split(java.util.regex.Pattern.quote(builder), -1).length == 2,
+      s"graft/LocalSession.scala must hold exactly one $builder")
   }
 }
