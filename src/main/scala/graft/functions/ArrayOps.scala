@@ -198,8 +198,9 @@ object ArrayOps {
   def wordNgrams(text: Column, n: Int): Column = call("word_ngrams", text, lit(n))
   def nfcNormalize(c: Column): Column = call("nfc_normalize", c)
   def stripAccents(c: Column): Column = call("strip_accents", c)
-  def minhashBandKeys(text: Column, bandSize: Int): Column =
-    call("minhash_band_keys", text, lit(bandSize))
+  /** `input`: a string column (text) or an array<bigint> column (token hashes). */
+  def minhashBandKeys(input: Column, bandSize: Int): Column =
+    call("minhash_band_keys", input, lit(bandSize))
   def hilbertIndex(coords: Column): Column = call("hilbert_index", coords)
 
   /** Registers the table in `spark`'s function registry. Idempotent. */

@@ -204,7 +204,8 @@ object Dedup {
   }
 
   /** MinHash seeds: fixed (a, b) pairs for h_i(x) = (a*x + b) mod P. a < 2^29
-    * and x < 2^32 keep a*x+b < 2^62 (no overflow). Shared with the oracle SQL.
+    * and x < 2^32 keep a*x+b < 2^62 (no overflow). Shared with the
+    * minhash_band_keys kernel and the oracle SQL.
     */
   val minhashP: Long = 2147483647L
   val minhashSeeds: Seq[(Long, Long)] = Seq(
@@ -213,34 +214,37 @@ object Dedup {
     (128591L, 41143L), (223823L, 13007L), (364979L, 71993L), (157579L, 92221L),
     (301237L, 17389L), (437191L, 50021L), (189517L, 66947L), (274877L, 29989L))
 
-  /** MinHash signatures: one row per (doc_id, seed) with the min hash over the
-    * document's hashed token set (`hashed` = (doc_id, h)). Linear in corpus
-    * token count: the seed table is a 16-row broadcast, and the (doc_id, seed)
-    * min is partially aggregated map-side before its one shuffle.
-    */
-  def minhashSignatures(hashed: DataFrame): DataFrame = {
-    val spark = hashed.sparkSession
-    import spark.implicits._
-    val seedDf = minhashSeeds.zipWithIndex
-      .map { case ((a, b), i) => (i, a, b) }.toDF("seed", "a", "b")
-    hashed
-      .crossJoin(broadcast(seedDf))
-      .withColumn("hv", (col("a") * col("h") + col("b")) % lit(minhashP))
-      .groupBy("doc_id", "seed").agg(min("hv").as("mh"))
-  }
-
-  /** X2 (scale path): MinHash+LSH near-dup join. Signatures → band keys →
-    * equi-join on (band, key) for candidates → exact Jaccard verification of
-    * candidates only. Band keys are built from a seed-sorted struct array so
-    * the key string is deterministic under any aggregation order. With
-    * shingleN > 1 the token universe is word n-grams (order-sensitive), which
-    * makes this the unbounded scale path for n-gram Jaccard too.
+  /** X2 (scale path): MinHash+LSH near-dup join. Token hashes → band keys
+    * → equi-join on the band key for candidates → exact Jaccard
+    * verification of candidates only. With shingleN > 1 the token universe
+    * is word n-grams (order-sensitive), which makes this the unbounded scale
+    * path for n-gram Jaccard too.
+    *
+    * One materialization: the token-set table (doc_id, toks = sorted
+    * distinct token hashes, sz), checkpointed once. Its two consumers — the
+    * band rows and both verify joins — read the checkpoint, so the input
+    * plan runs once. Spark has no common-subexpression materialization:
+    * without the cut each consumer re-executes the upstream pipeline, and
+    * when AQE broadcasts a small side its build future re-runs that
+    * shuffle-bearing pipeline serially (observed 30-170 s of variance for
+    * ~3 s of real work). At 100 TB the checkpoint is a distributed
+    * executor-storage write, same order of IO as the shuffle it replaces.
+    *
+    * The (doc_id, key) band rows come from `toks` through the native
+    * minhash_band_keys kernel (functions/MinhashBandKeys.scala): one flat
+    * loop folds all 16 seed minima per document and formats the keys —
+    * no seed cross join, no per-(doc, seed) or per-(doc, band) aggregation,
+    * no band table to checkpoint. Keys are the ones [[withBandKeys]] emits
+    * from text (a min over a multiset equals the min over its set), and
+    * their "b:" prefix keeps bands apart, so the self-join keys on the key
+    * alone. The kernel is cheap, so each self-join side recomputes it from
+    * the checkpoint instead of materializing the rows.
     *
     * Everything that moves through the skew-prone band self-join is NARROW —
-    * (doc_id, band, key) only. The wide per-document token arrays join in
-    * AFTER candidate pairs are known, keyed by doc_id; a size-ratio
-    * prefilter (J <= min/max) drops hopeless pairs before either array is
-    * touched, and the intersection for the rest is the native sorted_overlap
+    * (doc_id, key) only. The wide per-document token arrays join in AFTER
+    * candidate pairs are known, keyed by doc_id; a size-ratio prefilter
+    * (J <= min/max) drops hopeless pairs before either array is touched,
+    * and the intersection for the rest is the native sorted_overlap
     * two-pointer merge (functions/ArrayOps.scala) — zero allocation,
     * O(|candidates|) rows. (A previous shape rode the token arrays through a
     * 16× salted shuffle; replicating wide rows cost ~180 s at sf0.1 for the
@@ -253,49 +257,34 @@ object Dedup {
     * hot bucket spreads over many tasks instead of serializing one. Salting
     * narrow rows is cheap; that is what keeps the treatment affordable.
     *
-    * The twice-consumed intermediates (hashed tokens, band keys, token sets)
-    * are eagerly localCheckpoint'ed: Spark has no common-subexpression
-    * materialization, so without the cut each join side re-executes the
-    * whole upstream pipeline — and worse, when AQE turns a small side into a
-    * broadcast, the broadcast future re-executes that shuffle-bearing
-    * pipeline serially (observed 30-170 s of variance for ~3 s of real
-    * work). With the cut, each linear pipeline runs exactly once and any
-    * broadcast builds from already-materialized blocks. At 100 TB the
-    * checkpoint is a distributed executor-storage write, same order of IO as
-    * the shuffle it replaces.
-    *
     * Wider bands (default bandSize=8 → 2 bands over 16 hashes) keep bucket
     * collision probability j^8 per band: near-1 for true near-dups at the
-    * 0.95 threshold, far lower for the merely-similar mass.
+    * 0.95 threshold, far lower for the merely-similar mass. `bandSize` must
+    * divide the seed count.
     */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       bandSize: Int, threshNum: Int, threshDen: Int,
                       shingleN: Int = 1, salts: Int = 16): DataFrame = {
     require(salts > 0, "salts must be positive")
+    require(minhashSeeds.size % bandSize == 0, "bandSize must divide the seed count")
     val par = docs.sparkSession.sparkContext.defaultParallelism
-    // Explicit repartition BEFORE each checkpoint: AQE coalesces these tiny-
-    // by-bytes shuffles down to 1 partition, which would serialize the
-    // 16-seed crossjoin, the hot-bucket pair generation, and the checkpoint
+    // Explicit repartition BEFORE the checkpoint: AQE coalesces this tiny-
+    // by-bytes shuffle down to 1 partition, which would serialize the
+    // band-key kernel, the hot-bucket pair generation, and the checkpoint
     // write itself. Quadratic-output operators must size partitions by
-    // downstream work, not input bytes.
-    val Seq(hashed) = Par.materialize(shingles(docs, idCol, textCol, shingleN)
+    // downstream work, not input bytes. The grouping reuses this exchange.
+    val Seq(tokSets) = Par.materialize(shingles(docs, idCol, textCol, shingleN)
       .withColumn("h", tokenHash).select("doc_id", "h")
-      .repartition(par, col("doc_id")))
-    // bands and the token-set table below are INDEPENDENT given `hashed`
-    val Seq(bands, tokSets) = Par.materialize(
-      minhashSignatures(hashed)
-        .withColumn("band", (col("seed") / lit(bandSize)).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(sort_array(collect_list(struct(col("seed"), col("mh")))).as("sig"))
-        .withColumn("key", expr("concat_ws('-', transform(sig, x -> cast(x.mh as string)))"))
-        .select("doc_id", "band", "key"),
-      hashed.groupBy("doc_id")
-        .agg(sort_array(collect_set(col("h"))).as("toks"), count(lit(1)).as("sz")))
-    // Salted self-join over narrow (doc_id, band, key) rows. A hot bucket (a
+      .repartition(par, col("doc_id"))
+      .groupBy("doc_id")
+      .agg(sort_array(collect_set(col("h"))).as("toks"), count(lit(1)).as("sz")))
+    val bands = tokSets.select(col("doc_id"),
+      explode(minhashBandKeys(col("toks"), bandSize)).as("key"))
+    // Salted self-join over narrow (doc_id, key) rows. A hot bucket (a
     // near-dup cluster sharing one band key) emits quadratic pairs; hashing
-    // the probe side by (band, key, salt) spreads each hot bucket over
-    // `salts` tasks instead of one. The build side replicates per salt so
-    // every pair appears exactly once.
+    // the probe side by (key, salt) spreads each hot bucket over `salts`
+    // tasks instead of one. The build side replicates per salt so every
+    // pair appears exactly once.
     //
     // SIZING RULE for `salts` (caller-tunable; default 16): a hot bucket of
     // n docs emits ~n²/2 candidate rows split over `salts` tasks, so pick
@@ -304,28 +293,28 @@ object Dedup {
     // is linear in salts only on the REPLICATED build side's narrow rows,
     // so oversizing is cheap; the default covers any bucket up to ~18k
     // docs at that budget. Callers at 100× scale should derive n_max from
-    // the band table's top bucket count (one scalar agg over
-    // groupBy(band, key)) when corpus skew is unknown.
+    // the band table's top bucket count (one scalar agg over groupBy(key))
+    // when corpus skew is unknown.
     //
     // The build side is a SHUFFLE-HASH join, never a broadcast: the band
     // table is CORPUS-SIZED (one row per doc per band, × salts), so a
     // broadcast would collect the whole corpus to the driver and ship it to
     // every executor — fine at bench scale, an OOM cliff at 100×. The
-    // shuffle-hash form ships each partition only its own (band, key, salt)
+    // shuffle-hash form ships each partition only its own (key, salt)
     // slice of the replicated build, so per-task build memory is
     // |bands| × salts / #partitions — bounded by adding partitions. The
     // probe side is pre-partitioned on exactly the join keys, so it moves
     // through its existing exchange. (Plan-asserted in PlanSpec: this join
     // and the verify joins below must stay ShuffledHashJoin.)
     val x = bands.withColumn("salt", pmod(col("doc_id"), lit(salts)).cast("int"))
-      .repartition(par, col("band"), col("key"), col("salt"))
+      .repartition(par, col("key"), col("salt"))
     val y = bands.withColumn("salt", explode(lit((0 until salts).toArray)))
     val cands = x.as("x").join(y.as("y").hint("shuffle_hash"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.salt") === col("y.salt") && col("x.doc_id") < col("y.doc_id"))
+        col("x.key") === col("y.key") && col("x.salt") === col("y.salt") &&
+          col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct() // a pair matching in >1 band appears once per band
-    // Sorted distinct token arrays (materialized with bands above): the
+    // Sorted distinct token arrays (the checkpoint above): the
     // native sorted_overlap merge-count (functions/ArrayOps.scala) needs
     // ascending order, and in exchange the per-pair verification is a
     // zero-allocation two-pointer loop instead of array_intersect's hash
@@ -354,23 +343,19 @@ object Dedup {
         lit(threshNum) * (col("size_a") + col("size_b") - col("overlap")))
   }
 
-  /** Expression-level MinHash band keys: the signature + banding of
-    * [[minhashLshPairs]] computed as ONE projection — `array_min` over a
-    * per-seed transform of the hashed token array — with no explode, no
+  /** Expression-level MinHash band keys of a text column: the banding of
+    * [[minhashLshPairs]] computed as ONE projection, with no explode, no
     * aggregation, and no shuffle. That makes it usable inside a streaming
     * micro-batch with no state store (Streaming.decontamNearDup) and as a
-    * map-side probe against a prebuilt band index. Keys are identical to
-    * the aggregate pipeline's (min over a multiset equals min over its
-    * distinct set; elements concatenate in fixed seed order) and carry a
-    * `band:` prefix so keys from different bands can never compare equal.
-    * An empty/tokenless document gets an EMPTY key array — the aggregate
-    * form emits no rows for it, so neither shape can ever collide it.
+    * map-side probe against a prebuilt band index. The kernel is the one
+    * [[minhashLshPairs]] runs over token-hash arrays, so keys are identical
+    * to the batch join's (min over a multiset equals min over its distinct
+    * set; elements concatenate in fixed seed order) and carry a `band:`
+    * prefix so keys from different bands can never compare equal. An
+    * empty/tokenless document gets an EMPTY key array, so it never collides.
     *
     * Adds `outCol` (array<string>, one element per band) next to the
-    * existing columns; the interpreted-lambda cost is per document and
-    * bounded by token count × seeds — the price of shuffle-freedom, paid
-    * only on the (streaming/probe) paths that need it; the batch scale
-    * path remains the aggregate pipeline.
+    * existing columns.
     */
   def withBandKeys(df: DataFrame, textCol: String, bandSize: Int, outCol: String): DataFrame = {
     require(minhashSeeds.size % bandSize == 0, "bandSize must divide the seed count")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.ArrayOps
 import graft.operators.ext.{Dedup, Similarity}
 
 class DedupSimilaritySpec extends SparkSpec {
@@ -33,23 +34,29 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(out == Seq((1L, "x y z w", 2, 2L), (2L, "q r", 2, 1L), (3L, "", 1, 0L)))
   }
 
-  test("withBandKeys (expression form) equals the aggregate signature pipeline's band keys") {
-    val corpus = spark.read.parquet(s"${TestSpark.sf}/documents.parquet").limit(100)
-    val hashed = Dedup.tokens(corpus, "doc_id", "text")
-      .withColumn("h", Dedup.tokenHash).select("doc_id", "h")
-    val ref = Dedup.minhashSignatures(hashed)
-      .withColumn("band", (col("seed") / lit(8)).cast("int"))
-      .groupBy("doc_id", "band")
-      .agg(sort_array(collect_list(struct(col("seed"), col("mh")))).as("sig"))
-      .withColumn("key", expr(
-        "concat(cast(band as string), ':', concat_ws('-', transform(sig, x -> cast(x.mh as string))))"))
-      .groupBy("doc_id").agg(sort_array(collect_list("key")).as("ref_keys"))
-    val fast = Dedup.withBandKeys(corpus, "text", 8, "bands")
-      .select(col("doc_id"), sort_array(col("bands")).as("fast_keys"))
-    val joined = ref.join(fast, Seq("doc_id"))
-    assert(joined.count() == 100)
-    assert(joined.filter(col("ref_keys") =!= col("fast_keys")).count() == 0,
-      "expression-level band keys must be identical to the aggregate pipeline's")
+  test("band keys of text and of hash arrays equal the MinHash model") {
+    import spark.implicits._
+    val rows = spark.read.parquet(s"${TestSpark.sf}/documents.parquet").limit(100)
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+    assert(rows.size == 100)
+    val corpus = rows.toDF("doc_id", "text")
+    def model(n: Int) = rows.map { case (id, t) =>
+      id -> MinhashModel.bandKeys(MinhashModel.tokens(t, n).map(MinhashModel.tokenHash), 8)
+    }.toMap
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "bands").as[(Long, Seq[String])].collect().toMap
+    // the kernel over each document's distinct token hashes (n-gram tokens
+    // for n > 1), as minhashLshPairs feeds it
+    def hashArrayKeys(n: Int) = keys(Dedup.shingles(corpus, "doc_id", "text", n)
+      .withColumn("h", Dedup.tokenHash)
+      .groupBy("doc_id").agg(sort_array(collect_set(col("h"))).as("toks"))
+      .select(col("doc_id"), ArrayOps.minhashBandKeys(col("toks"), 8).as("bands")))
+
+    assert(keys(Dedup.withBandKeys(corpus, "text", 8, "bands")) == model(1))
+    // documents without a token have no row in the hash-array form
+    assert(hashArrayKeys(1) == model(1).filter(_._2.nonEmpty))
+    assert(hashArrayKeys(2) == model(2).filter(_._2.nonEmpty))
+    assert(model(2).values.exists(_.nonEmpty))
   }
 
   test("pairSourceMatrix canonicalizes the unordered source pair into one cell") {
