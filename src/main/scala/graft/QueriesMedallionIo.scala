@@ -26,6 +26,43 @@ import QuerySupport._
   * and [[QuerySupport]] for the shared helpers/oracle fragments.
   */
 private[graft] object QueriesMedallionIo {
+  /** The catalog storage-partitioned join behind `versioned_catalog_spj`
+    * and `versioned_copart_join`: two catalog tables hive-partitioned on
+    * o_orderpriority (built once per fixture dir), joined and aggregated
+    * on the key. Returns the aggregate and its executed plan.
+    */
+  private def catalogSpj(s: SparkSession, dir: String): (DataFrame, String) = {
+    val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
+    s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
+    s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+    Fixtures.once(s, dir, "vt_cat_spj") {
+      rmrf(s"$wh/spj")
+      s.sql("CREATE NAMESPACE IF NOT EXISTS gq.spj")
+      rd(s, dir, "orders").createOrReplaceTempView("cat_spj_orders")
+      s.sql("CREATE TABLE gq.spj.o (o_orderkey BIGINT, o_orderpriority STRING) " +
+        "PARTITIONED BY (o_orderpriority) " +
+        "TBLPROPERTIES ('graft.stats.columns' = 'o_orderkey')")
+      s.sql("INSERT INTO gq.spj.o SELECT o_orderkey, o_orderpriority " +
+        "FROM cat_spj_orders")
+      s.sql("CREATE TABLE gq.spj.w (o_orderpriority STRING, prio_w BIGINT) " +
+        "PARTITIONED BY (o_orderpriority)")
+      s.sql("INSERT INTO gq.spj.w SELECT DISTINCT o_orderpriority, " +
+        "CAST(length(o_orderpriority) AS BIGINT) FROM cat_spj_orders")
+      java.lang.Boolean.TRUE
+    }
+    val joined = s.sql(
+      // the MERGE hint pins the SPJ shape independent of the scans'
+      // (real) size statistics: at SF-test scale both sides sit under the
+      // broadcast threshold, where a 100 TB deployment would exceed it
+      // naturally — the property under test is the zero-Exchange
+      // sort-merge plan over KeyGroupedPartitioning
+      "SELECT /*+ MERGE(a) */ a.o_orderpriority AS o_orderpriority, count(*) AS n, " +
+        "CAST(sum(a.o_orderkey * b.prio_w) AS BIGINT) AS wsum " +
+        "FROM gq.spj.o a JOIN gq.spj.w b ON a.o_orderpriority = b.o_orderpriority " +
+        "GROUP BY a.o_orderpriority")
+    (joined, joined.queryExecution.executedPlan.toString)
+  }
+
   val defs: Seq[Q] = Seq(
 
     // A1+P2+P3+O1 — the reference's one real analytical query
@@ -1272,43 +1309,19 @@ private[graft] object QueriesMedallionIo {
         |  CAST(2 AS BIGINT) AS dirs_after, CAST(2 AS BIGINT) AS compactions
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // S17 — STORAGE-PARTITIONED JOIN (plans/GraftCoPartition +
-    // graft_copart TVF — the public Iceberg SPJ idea: two tables
-    // hive-partitioned on the join key join with ZERO Exchange, because
-    // the layout already IS the clustering). Both fixture tables
-    // partition by o_orderpriority; each graft_copart scan slots the
-    // partition VALUES with Spark's own HashPartitioning
-    // partitionIdExpression (bit-exact by construction) and truthfully
-    // declares HashPartitioning(key, n), so EnsureRequirements plans the
-    // join — and the GROUP BY above it — with no shuffle anywhere. The
+    // S17 — STORAGE-PARTITIONED JOIN (the public Iceberg SPJ idea: two
+    // tables hive-partitioned on the join key join with ZERO Exchange,
+    // because the layout already IS the clustering), served by the
+    // catalog's keyed scans through Spark's own planner — the same
+    // fixture and join as versioned_catalog_spj ([[catalogSpj]]). The
     // `exchanges` column carries the executed plan's Exchange count (0)
     // as the driver-visible proof; at 100 TB this is the join where
     // neither side moves a byte. Oracle replays the join + aggregate.
     Q("versioned_copart_join",
       (s, dir) => {
-        val (ra, rb) = Fixtures.once(s, dir, "vt_copart") {
-          val a = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_copart_a_${dirTag(dir)}"
-          val b = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_copart_b_${dirTag(dir)}"
-          rmrf(a); rmrf(b)
-          val o = rd(s, dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")
-          graft.io.VersionedTable.commit(o, a, "append", "cp-a1",
-            partitionCols = Seq("o_orderpriority"), statsCols = Seq("o_orderkey"))
-          val w = o.select("o_orderpriority").distinct()
-            .withColumn("prio_w", length(col("o_orderpriority")).cast("long"))
-          graft.io.VersionedTable.commit(w, b, "append", "cp-b1",
-            partitionCols = Seq("o_orderpriority"))
-          (a, b)
-        }
-        val joined = s.sql(
-          s"SELECT a.o_orderpriority AS o_orderpriority, count(*) AS n, " +
-            "CAST(sum(a.o_orderkey * b.prio_w) AS BIGINT) AS wsum " +
-            s"FROM graft_copart('$ra', 'o_orderpriority', 4) a " +
-            s"JOIN graft_copart('$rb', 'o_orderpriority', 4) b " +
-            "ON a.o_orderpriority = b.o_orderpriority " +
-            "GROUP BY a.o_orderpriority")
-        val exchanges = "Exchange".r
-          .findAllIn(joined.queryExecution.executedPlan.toString).size.toLong
-        joined.withColumn("exchanges", lit(exchanges)).orderBy("o_orderpriority")
+        val (joined, plan) = catalogSpj(s, dir)
+        joined.withColumn("exchanges", lit("Exchange".r.findAllIn(plan).size.toLong))
+          .orderBy("o_orderpriority")
       },
       Some("""SELECT o_orderpriority, count(*) AS n,
         |  CAST(sum(o_orderkey * length(o_orderpriority)) AS BIGINT) AS wsum,
@@ -1470,35 +1483,7 @@ private[graft] object QueriesMedallionIo {
     // tables in place and shuffling both.
     Q("versioned_catalog_spj",
       (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
-        Fixtures.once(s, dir, "vt_cat_spj") {
-          rmrf(s"$wh/spj")
-          s.sql("CREATE NAMESPACE IF NOT EXISTS gq.spj")
-          rd(s, dir, "orders").createOrReplaceTempView("cat_spj_orders")
-          s.sql("CREATE TABLE gq.spj.o (o_orderkey BIGINT, o_orderpriority STRING) " +
-            "PARTITIONED BY (o_orderpriority) " +
-            "TBLPROPERTIES ('graft.stats.columns' = 'o_orderkey')")
-          s.sql("INSERT INTO gq.spj.o SELECT o_orderkey, o_orderpriority " +
-            "FROM cat_spj_orders")
-          s.sql("CREATE TABLE gq.spj.w (o_orderpriority STRING, prio_w BIGINT) " +
-            "PARTITIONED BY (o_orderpriority)")
-          s.sql("INSERT INTO gq.spj.w SELECT DISTINCT o_orderpriority, " +
-            "CAST(length(o_orderpriority) AS BIGINT) FROM cat_spj_orders")
-          java.lang.Boolean.TRUE
-        }
-        val joined = s.sql(
-          // the MERGE hint pins the SPJ shape independent of the scans'
-          // (now real) size statistics: at SF-test scale both sides sit
-          // under the broadcast threshold, where a 100 TB deployment would
-          // exceed it naturally — the property under test is the
-          // zero-Exchange sort-merge plan over KeyGroupedPartitioning
-          "SELECT /*+ MERGE(a) */ a.o_orderpriority AS o_orderpriority, count(*) AS n, " +
-            "CAST(sum(a.o_orderkey * b.prio_w) AS BIGINT) AS wsum " +
-            "FROM gq.spj.o a JOIN gq.spj.w b ON a.o_orderpriority = b.o_orderpriority " +
-            "GROUP BY a.o_orderpriority")
-        val plan = joined.queryExecution.executedPlan.toString
+        val (joined, plan) = catalogSpj(s, dir)
         joined
           .withColumn("exchanges", lit("Exchange".r.findAllIn(plan).size.toLong))
           .withColumn("keyed_scans", lit("GraftKeyedScan".r.findAllIn(plan).size.toLong))
@@ -1939,18 +1924,22 @@ private[graft] object QueriesMedallionIo {
         |  CAST(4 AS BIGINT) AS tag_version
         |FROM h ORDER BY version""".stripMargin)),
 
-    // S17 — copart over MERGE-ON-READ debt (coPartitionedSlotScans +
-    // deleteWhereMor): the TVF no longer refuses a snapshot with pending
-    // deletion vectors — each slot applies its dirs' covering delete sets
-    // as the same broadcast anti-join the normal read path uses. Removal
-    // cannot move a surviving row's slot, so the declared HashPartitioning
-    // stays truthful and the aggregation above the scan still plans with
-    // ZERO Exchange (`exchanges` pins it). The compact-before-join
-    // operational tax is gone.
+    // S17 — storage-partitioned scan over MERGE-ON-READ debt: the table
+    // is written through the Scala API (commit + deleteWhereMor) at a root
+    // under the catalog warehouse, which makes it the catalog table
+    // gq.mor.o. The keyed scan applies the pending key-form delete set per
+    // covering dir (its keys collected on the driver, rows skipped in the
+    // reader). Removal cannot move a surviving row to another key group,
+    // so the reported KeyGroupedPartitioning stays truthful and the
+    // aggregation above the scan plans with ZERO Exchange (`exchanges`
+    // pins it). No compact-before-join tax.
     Q("versioned_copart_mor",
       (s, dir) => {
-        val root = Fixtures.once(s, dir, "vt_copart_mor") {
-          val r = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_copart_mor_${dirTag(dir)}"
+        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
+        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
+        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+        Fixtures.once(s, dir, "vt_copart_mor") {
+          val r = s"$wh/mor/o"
           rmrf(r)
           val o = rd(s, dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")
           graft.io.VersionedTable.commit(o, r, "append", "cpm-c1",
@@ -1958,13 +1947,12 @@ private[graft] object QueriesMedallionIo {
           graft.io.VersionedTable.deleteWhereMor(s, r,
             o.filter(col("o_orderkey") % 10 === 0).select("o_orderkey"),
             "o_orderkey", "cpm-del")
-          r
+          java.lang.Boolean.TRUE
         }
         val agg = s.sql(
-          s"SELECT o_orderpriority, count(*) AS n, " +
+          "SELECT o_orderpriority, count(*) AS n, " +
             "CAST(sum(o_orderkey) AS BIGINT) AS keysum " +
-            s"FROM graft_copart('$root', 'o_orderpriority', 4) " +
-            "GROUP BY o_orderpriority")
+            "FROM gq.mor.o GROUP BY o_orderpriority")
         val plan = agg.queryExecution.executedPlan.toString
         agg.withColumn("exchanges", lit("Exchange".r.findAllIn(plan).size.toLong))
           .orderBy("o_orderpriority")

@@ -558,7 +558,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
 /** One versioned table surfaced through the catalog. `asOf` pins a time
   * travel (`VERSION/TIMESTAMP AS OF`); `None` reads the snapshot current
-  * at scan-build time (pinned there, so a plan never straddles commits).
+  * when the table is resolved at analysis. Schema and scans both read that
+  * version, so a DataFrame analyzed before a concurrent commit reads the
+  * rows its schema describes, and a plan never straddles commits.
   */
 class GraftTable(root: String, ident: Identifier, asOf: Option[Long],
                  catalogName: String = "")
@@ -732,12 +734,14 @@ class GraftTable(root: String, ident: Identifier, asOf: Option[Long],
       schema = schema,
       provider = Some("graft-versioned"))
   }
-  // a VERSION/TIMESTAMP AS OF pin resolves table METADATA (partitioning,
-  // properties, graft.version) at the pinned snapshot too — scans resolve
-  // asOf themselves, but DESCRIBE on a time-travel read must not report
-  // the current snapshot's shape
+  // the snapshot this table instance describes: the VERSION/TIMESTAMP AS
+  // OF pin, else latest as of first use (analysis). Table METADATA
+  // (partitioning, properties, graft.version), the schema and every scan
+  // resolve at it, so DESCRIBE on a time-travel read never reports the
+  // current snapshot's shape and a read never outruns its schema
   private lazy val snapshot = asOf.fold(VersionedTable.latestCommit(root))(
     v => VersionedTable.commitAt(root, v))
+  private def readVersion: Option[Long] = asOf.orElse(snapshot.map(_.version))
 
   /** Row-level DML (`UPDATE` / `MERGE INTO` / predicate `DELETE`), routed
     * per table by `graft.dml.mode` (the public Iceberg
@@ -794,7 +798,8 @@ class GraftTable(root: String, ident: Identifier, asOf: Option[Long],
 
   override def name(): String = ident.toString
 
-  override lazy val schema: StructType = VersionedTable.read(spark, root, asOf).schema
+  override lazy val schema: StructType =
+    VersionedTable.read(spark, root, readVersion).schema
 
   override def partitioning(): Array[Transform] =
     snapshot.map(_.partitionCols).getOrElse(Nil)
@@ -879,7 +884,7 @@ class GraftTable(root: String, ident: Identifier, asOf: Option[Long],
       TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(spark, root, asOf, schema)
+    new GraftScanBuilder(spark, root, readVersion, schema)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(root, info)

@@ -258,8 +258,7 @@ final class GraftDeltaScan(spark: SparkSession, private val root: String,
     val columnar = plan.eras.size == 1 && allDvEmpty &&
       new ParquetFileFormat().supportBatch(spark, StructType(
         eraShapes.head.present.map(f => f.copy(name = physOf(f.name))) ++
-          (if (wantPos) Seq(posField) else Nil) ++ reqKeys ++ reqBase)) &&
-      spark.conf.get("spark.graft.flatScan.columnar", "true") == "true"
+          (if (wantPos) Seq(posField) else Nil) ++ reqKeys ++ reqBase))
     val eras = eraShapes.map { shape =>
       // Spark's row-index temp column: requesting it makes the parquet
       // readers emit each row's EXACT file position, row-group skipping
@@ -397,32 +396,35 @@ final class GraftDeltaReaderFactory(
           case r: InternalRow => Iterator.single(r)
         }
       }
-      // positions come from Spark's row-index generator — exact under
-      // row-group skipping, so the pending-vector pointer must ADVANCE
-      // past entries whose rows were never materialized (a skipped group
-      // can hold covered positions)
-      private var dvIdx = 0
+      private val live = GraftDeltaReaderFactory.liveRows(raw, posIdx, dp.dv)
       private var cur: InternalRow = _
-      override def next(): Boolean = {
-        while (raw.hasNext) {
-          val r = raw.next()
-          // posIdx < 0: positions were neither requested nor needed (no
-          // pending vector) — plain pass-through
-          val pos = if (posIdx >= 0) r.getLong(posIdx) else -1L
-          while (dvIdx < dp.dv.length && dp.dv(dvIdx) < pos) dvIdx += 1
-          if (posIdx >= 0 && dvIdx < dp.dv.length && dp.dv(dvIdx) == pos)
-            dvIdx += 1 // covered
-          else {
-            cur = proj(r)
-            return true
-          }
-        }
-        false
-      }
+      override def next(): Boolean =
+        if (live.hasNext) { cur = proj(live.next()); true } else false
       override def get(): InternalRow = cur
       override def close(): Unit = { open.foreach(_.close()); open = Nil }
     }
   }
+}
+
+object GraftDeltaReaderFactory {
+  /** The rows of `raw` whose position (input column `posIdx`) is not in the
+    * sorted vector `dv`. Positions come from Spark's row-index generator —
+    * exact under row-group skipping — so the vector pointer ADVANCES past
+    * entries whose rows were never materialized (a skipped group can hold
+    * covered positions): amortized O(1) per row. `posIdx < 0` or an empty
+    * vector passes every row through.
+    */
+  def liveRows(raw: Iterator[InternalRow], posIdx: Int,
+               dv: Array[Long]): Iterator[InternalRow] =
+    if (posIdx < 0 || dv.isEmpty) raw
+    else {
+      var i = 0
+      raw.filter { r =>
+        val pos = r.getLong(posIdx)
+        while (i < dv.length && dv(i) < pos) i += 1
+        i >= dv.length || dv(i) != pos
+      }
+    }
 }
 
 /** The delta WRITE half: tasks stream `WriteDeltaExec`'s per-row verbs

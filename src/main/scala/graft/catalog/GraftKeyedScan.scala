@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.io.VersionedTable
@@ -39,9 +39,13 @@ import graft.io.VersionedTable
   *    are handed to the parquet reader for row-group skipping on top.
   *
   * Eligibility is decided by `keyedBatchPlan` (None → the V1 fallback
-  * scan): snapshots with column DEFAULTs, MOR delete debt, mixed layout
-  * eras, or non-path-round-trippable key types take the fallback, which
-  * handles them all — correct-by-fallback, never correct-by-refusal.
+  * scan): snapshots with column DEFAULTs, mixed layout eras, or
+  * non-path-round-trippable key types take the fallback, which handles
+  * them all — correct-by-fallback, never correct-by-refusal. Pending
+  * merge-on-read delete sets stay on the keyed scan: each file skips its
+  * positional vector's rows (Spark's row-index column, as in
+  * [[GraftDeltaScan]]) and the rows whose key a covering key-form set
+  * holds. Such a scan reads row-wise.
   */
 final class GraftKeyedScan(spark: SparkSession, private val root: String,
     private val plan: VersionedTable.KeyedPlan, private val required: StructType,
@@ -61,13 +65,16 @@ final class GraftKeyedScan(spark: SparkSession, private val root: String,
     private val fs = groups.flatMap(_.files)
     private val bytes = math.max(1L, fs.map(_._2).sum)
     // footer row counts recorded in the `_filestats` side files, summed
-    // over the PLANNED (index-pruned, runtime-filtered) file set — exact,
-    // not an estimate, because dirs are immutable. Reported only when
-    // EVERY planned file has a recorded count: a partial sum would
-    // under-report and bias join-size estimates the wrong way.
+    // over the PLANNED (index-pruned, runtime-filtered) file set, minus
+    // each file's pending vector positions — exact, not an estimate,
+    // because dirs are immutable. Reported only when EVERY planned file
+    // has a recorded count and no key-form set covers one: a partial sum
+    // would under-report and bias join-size estimates the wrong way.
     private val rows: java.util.OptionalLong =
-      if (fs.nonEmpty && fs.forall(f => plan.fileRows.contains(f._1)))
-        java.util.OptionalLong.of(fs.map(f => plan.fileRows(f._1)).sum)
+      if (fs.nonEmpty && fs.forall(f => plan.fileRows.contains(f._1) &&
+          plan.fileDeletes.get(f._1).forall(_.keySets.isEmpty)))
+        java.util.OptionalLong.of(fs.map(f => plan.fileRows(f._1) -
+          plan.fileDeletes.get(f._1).fold(0)(_.positions.length)).sum)
       else java.util.OptionalLong.empty()
     // manifest-envelope column stats for the CBO — VersionedTable
     // .v2ColumnStats; withheld whenever the planned set is a SUBSET of
@@ -194,8 +201,8 @@ final class GraftKeyedScan(spark: SparkSession, private val root: String,
         cur ::= f; curBytes += f._2
       }
       if (cur.nonEmpty) packs += cur.reverse
-      packs.result().map(fs =>
-        GraftKeyedInputPartition(fs, fullKey, reqKey): InputPartition)
+      packs.result().map(fs => GraftKeyedInputPartition(fs, fullKey, reqKey,
+        fs.flatMap(f => plan.fileDeletes.get(f._1).map(f._1 -> _)).toMap): InputPartition)
     }.toArray
   }
 
@@ -209,23 +216,44 @@ final class GraftKeyedScan(spark: SparkSession, private val root: String,
       if (plan.nameMap.nonEmpty) Nil
       else pushed.filter(_.references.forall(r =>
         plan.physDataSchema.fieldNames.contains(r))).toSeq
-    // COLUMNAR whenever the vectorized reader supports data + key columns
-    // (see GraftFlatScan): key constants ride the reader's own constant
-    // column vectors inside each batch — measured 1.67x over the row
-    // unwrap on scan-aggregates, and at 100 TB the SPJ fact scans are
-    // exactly where decode throughput pays
-    val columnar = new ParquetFileFormat().supportBatch(spark,
-      StructType(physRequired.fields ++ reqKeyFields)) &&
-      spark.conf.get("spark.graft.flatScan.columnar", "true") == "true"
+    // merge-on-read debt: the reader also emits each covering key set's
+    // column (when the projection dropped it) and, under a positional
+    // vector, Spark's row-index temp column (see GraftDeltaScan) — both
+    // after the required data columns, so the reorder below drops them
+    val debt = plan.fileDeletes.values
+    val extra = plan.keySets.values.map(_.column).toSeq.distinct
+      .filterNot(physRequired.fieldNames.contains)
+      .map(n => plan.physDataSchema(n))
+    val rowIndex =
+      if (debt.exists(_.positions.nonEmpty))
+        Seq(StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+          LongType, nullable = true))
+      else Nil
+    val readData = StructType(physRequired.fields ++ extra ++ rowIndex)
+    // COLUMNAR whenever no file carries delete debt and the vectorized
+    // reader supports data + key columns (see GraftFlatScan): key constants
+    // ride the reader's own constant column vectors inside each batch —
+    // measured 1.67x over the row unwrap on scan-aggregates, and at 100 TB
+    // the SPJ fact scans are exactly where decode throughput pays
+    val columnar = debt.isEmpty && new ParquetFileFormat().supportBatch(spark,
+      StructType(physRequired.fields ++ reqKeyFields))
     val readFunc = new ParquetFileFormat().buildReaderWithPartitionValues(
       spark, plan.physDataSchema,
-      StructType(reqKeyFields), physRequired, fileFilters,
+      StructType(reqKeyFields), readData, fileFilters,
       Map(org.apache.spark.sql.execution.datasources.FileFormat
         .OPTION_RETURNING_BATCH -> columnar.toString),
       spark.sessionState.newHadoopConfWithOptions(Map.empty))
-    // reader emits readerOrder (data ++ keys) — identity reorder
-    new GraftKeyedReaderFactory(readFunc, readerOrder,
-      readerOrder.fields.indices.toArray, columnar)
+    // reader emits (data ++ extra ++ row index ++ keys); readerOrder is
+    // (data ++ keys)
+    val input = StructType(readData.fields ++ reqKeyFields)
+    val reorder = readerOrder.fields.indices.map(i =>
+      if (i < physRequired.size) i else i + extra.size + rowIndex.size).toArray
+    val keySets = plan.keySets.map { case (n, ks) =>
+      val i = readData.fieldIndex(ks.column)
+      n -> ((i, readData(i).dataType, ks.keys))
+    }
+    new GraftKeyedReaderFactory(readFunc, input, reorder, columnar,
+      if (rowIndex.isEmpty) -1 else readData.size - 1, keySets)
   }
 
   override def description(): String =
@@ -269,7 +297,7 @@ object GraftKeyedScan {
                  claimed: Seq[Filter] = Nil,
                  topN: Option[(String, Boolean, Boolean, Int)] = None): Option[Scan] = {
     val (ranges, points, nullProbes) = graft.io.VersionedRelation.translate(pushed)
-    VersionedTable.keyedBatchPlan(root, version, ranges, points, nullProbes)
+    VersionedTable.keyedBatchPlan(spark, root, version, ranges, points, nullProbes)
       .flatMap { p0 =>
         // CLAIMED partition predicates enforce on the key GROUPS — exact:
         // each group's tuple is the parsed path value in declared types.
@@ -287,14 +315,21 @@ object GraftKeyedScan {
         // key type, strings by UTF-8 bytes = Spark's own string order),
         // keep the shortest prefix whose `_filestats` row counts PROVABLY
         // cover n; groups with unknown counts cover nothing (kept, never
-        // trusted). ORDER BY date_key DESC LIMIT 100 on a key-partitioned
+        // trusted). Merge-on-read debt only lowers a count: a file drops its
+        // vector's positions, and a file under a key-form set covers
+        // nothing. ORDER BY date_key DESC LIMIT 100 on a key-partitioned
         // table then plans one group. Data-column sort keys keep every
         // group — only the flat scan's footer rule handles those.
         val p = topN match {
           case Some((col, desc, nullsFirst, n)) if p1.groups.size > 1 &&
               names.size == 1 && names.head == col =>
+            def fileLive(f: String): Long = p1.fileDeletes.get(f) match {
+              case Some(fd) if fd.keySets.nonEmpty => 0L
+              case fd => math.max(0L, p1.fileRows.getOrElse(f, 0L) -
+                fd.fold(0)(_.positions.length))
+            }
             def groupRows(g: VersionedTable.KeyedGroup): Long =
-              g.files.map(f => p1.fileRows.getOrElse(f._1, 0L)).sum
+              g.files.map(f => fileLive(f._1)).sum
             val (nullG, valG) = p1.groups.partition(_.key.head == null)
             def vOrd(a: Any, b: Any): Boolean = (a, b) match {
               case (x: String, y: String) =>
@@ -348,9 +383,12 @@ object GraftKeyedScan {
   }
 }
 
-/** One key group = one task: all files of one hive key tuple. */
+/** One key group = one task: all files of one hive key tuple, with the
+  * pending delete debt of those files that carry any.
+  */
 final case class GraftKeyedInputPartition(files: Seq[(String, Long)],
-    fullKey: GenericInternalRow, requiredKey: GenericInternalRow)
+    fullKey: GenericInternalRow, requiredKey: GenericInternalRow,
+    deletes: Map[String, VersionedTable.FileDeletes] = Map.empty)
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = fullKey
 }
@@ -365,11 +403,17 @@ final case class GraftKeyedInputPartition(files: Seq[(String, Long)],
   * and hands batches through whole — Spark plans its own
   * `ColumnarToRow` inside the codegen span, and no per-row projection
   * runs here at all.
+  *
+  * A file with delete debt drops the rows at its vector's positions
+  * (input column `posIdx`) and the rows whose key a covering set holds:
+  * `keySets` maps a set name to (input column, type, keys); NULL keys
+  * never match, as in the anti-join the V1 read path plans.
   */
 final class GraftKeyedReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],
     inputSchema: StructType, reorder: Array[Int],
-    columnar: Boolean = false)
+    columnar: Boolean = false, posIdx: Int = -1,
+    keySets: Map[String, (Int, DataType, Set[Any])] = Map.empty)
     extends PartitionReaderFactory {
 
   override def supportColumnarReads(p: InputPartition): Boolean = columnar
@@ -416,9 +460,16 @@ final class GraftKeyedReaderFactory(
             case c: java.io.Closeable => open ::= c
             case _ => ()
           }
-          it.flatMap {
+          val rows = it.flatMap {
             case b: ColumnarBatch => b.rowIterator().asScala
             case r: InternalRow   => Iterator.single(r)
+          }
+          gp.deletes.get(path).fold(rows) { fd =>
+            val sets = fd.keySets.map(keySets)
+            GraftDeltaReaderFactory.liveRows(rows, posIdx, fd.positions).filter { r =>
+              sets.forall { case (i, dt, keys) =>
+                r.isNullAt(i) || !keys.contains(r.get(i, dt)) }
+            }
           }
         }
       private var cur: InternalRow = _
@@ -519,15 +570,14 @@ final class GraftFlatScan(spark: SparkSession, private val root: String,
       else pushed.filter(_.references.forall(r =>
         plan.physSchema.fieldNames.contains(r))).toSeq
     // COLUMNAR when the vectorized reader supports the projection (all
-    // atomic types, conf on): the scan then hands Spark whole
+    // atomic types): the scan then hands Spark whole
     // ColumnarBatches — the same batches FileSourceScanExec serves — and
     // the plan gets a ColumnarToRow inside the codegen span instead of a
     // per-row unwrap + copy through this factory. On a 100 TB full scan
     // the per-row path is pure decode overhead; batch mode is why the
     // vectorized reader exists. Falls back to row mode whenever
-    // supportBatch says no (nested types, conf off) — same correctness.
-    val columnar = new ParquetFileFormat().supportBatch(spark, physRequired) &&
-      spark.conf.get("spark.graft.flatScan.columnar", "true") == "true"
+    // supportBatch says no (nested types) — same correctness.
+    val columnar = new ParquetFileFormat().supportBatch(spark, physRequired)
     val readFunc = new ParquetFileFormat().buildReaderWithPartitionValues(
       spark, plan.physSchema,
       new StructType(), physRequired, fileFilters,

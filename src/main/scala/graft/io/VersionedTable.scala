@@ -2852,6 +2852,27 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
   private val posDvCache =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, Array[Long]]]()
 
+  /** Per-set driver cache of key-form delete sets resolved for the keyed
+    * scan, by (set path, key type): immutable for the same reason as
+    * [[posDvCache]], so a set costs one collect job per JVM, not one per
+    * plan build.
+    */
+  private val keySetCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, org.apache.spark.sql.types.DataType), Set[Any]]()
+
+  /** The distinct non-null keys of the key-form delete set at `path`, column
+    * `kc` cast to `dt`, as catalyst values of `dt`.
+    */
+  private def loadKeySet(spark: SparkSession, path: String, kc: String,
+                         dt: org.apache.spark.sql.types.DataType): Set[Any] =
+    keySetCache.computeIfAbsent((path, dt), _ => {
+      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(dt)
+      spark.read.parquet(path)
+        .select(org.apache.spark.sql.functions.col(kc).cast(dt)).distinct().collect()
+        .map(r => conv(r.get(0))).filter(_ != null).toSet
+    })
+
   /** Driver-resolve `sets` into one merged (file → sorted positions) map.
     * O(pending positions) — small by the MOR contract and metered by
     * [[morStatus]]/[[morDetail]]; compaction absorbs it back to zero.
@@ -2868,6 +2889,32 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     else loaded.flatMap(_.toSeq).groupBy(_._1).map { case (f, as) =>
       f -> as.flatMap(_._2).distinct.sorted.toArray
     }
+  }
+
+  /** Every pending positional vector of snapshot `c`, merged into one
+    * (file key → sorted positions) map — what the DSv2 scans skip per file.
+    */
+  private def snapshotPosDv(spark: SparkSession, root: String,
+                            c: Commit): Map[String, Array[Long]] = {
+    val posSets = c.deletes.values.flatten.toSeq.distinct.filter(isPosSet)
+    if (posSets.isEmpty) Map.empty else loadPosDv(spark, root, posSets)
+  }
+
+  /** The positional-vector file key of data file `full` in dir `d`. The key
+    * must match the READ side byte-for-byte, and the read side derives it
+    * from `_metadata.file_path` — a Hadoop Path URI, which percent-encodes
+    * characters the raw filesystem name carries literally (a hive value
+    * with a space reads back as %20). Encoding through the same Path.toUri
+    * makes a vector recorded under this key found by PosDeleted on every
+    * scan.
+    */
+  private def posFileKey(d: String, full: String): String = {
+    val last = d.substring(d.lastIndexOf('/') + 1)
+    val enc = new org.apache.hadoop.fs.Path(full).toUri.toString
+    val marker = "/" + last + "/"
+    val mi = enc.lastIndexOf(marker)
+    if (mi < 0) last + "/" + full.substring(full.lastIndexOf(marker) + marker.length)
+    else last + "/" + enc.substring(mi + marker.length)
   }
 
   /** Scan commit dirs under the snapshot's layout: flat dirs go through one
@@ -4339,7 +4386,8 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     * LATER append re-inserts freely (its dir is never covered), NULL keys
     * refuse loudly, idempotent commitId retry, compaction/rewrites ABSORB
     * the vector ([[scanWithDeletes]] applies it wherever key sets apply —
-    * including copy-on-write read halves and copart slot scans), vacuum
+    * including copy-on-write read halves; the catalog's keyed and delta
+    * scans skip its positions per file), vacuum
     * sweeps orphaned vectors by the same age gate, and the manifest
     * declares the `pos-deletes` reader feature while any vector is live.
     * Rows already hidden by older coverage may be re-recorded (their
@@ -5118,124 +5166,6 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     spark.createDataFrame(new java.util.ArrayList(rows.asJava), schema)
   }
 
-  /** Slot-scan recipe for the STORAGE-PARTITIONED JOIN (the public
-    * Iceberg SPJ idea — two tables hive-partitioned on the join key join
-    * with NO shuffle on either side, because the partition layout already
-    * IS a clustering): for a snapshot whose every dir is hive-partitioned
-    * by exactly `keyCol`, assign each partition VALUE to the slot Spark's
-    * own `HashPartitioning.partitionIdExpression` computes (evaluated
-    * driver-side on the typed value — bit-exact by construction, because
-    * it IS that catalyst expression), and return one DataFrame builder
-    * per slot reading exactly its values' `key=v` subtrees across all
-    * dirs. A physical scan that unions these slots in order — one task
-    * per slot — truthfully declares `HashPartitioning(key, numSlots)`,
-    * so EnsureRequirements plans a join of two such scans with ZERO
-    * Exchange: at 100 TB neither side shuffles a byte, the join cost is
-    * the scan (exactly Iceberg's storage-partitioned join, expressed
-    * through the planner-strategy extension point instead of DSv2).
-    *
-    * Pinned to the snapshot resolved HERE (`version` travels with the
-    * relation), so analysis and execution read the same table state.
-    * Guards: every dir must be single-level hive-partitioned by the key
-    * in EVERY era, and the key must be int/bigint/string. NULL-sentinel
-    * subtrees slot by the NULL hash, matching the engine's join-side
-    * hashing. Pending MOR deletion vectors APPLY inside each slot (the
-    * scanWithDeletes anti-join per covering dir) — removal cannot change
-    * a surviving row's slot, so the declared partitioning stays truthful.
-    */
-  private[graft] def coPartitionedSlotScans(spark: SparkSession, root: String,
-      keyCol: String, numSlots: Int, asOf: Option[Long] = None)
-      : (org.apache.spark.sql.types.StructType, Long, Seq[() => DataFrame]) = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
-    require(numSlots >= 1, "coPartitioned: numSlots must be >= 1")
-    val c = resolveSnapshot(root, asOf)
-    val phys = physName(c, keyCol)
-    c.dirs.foreach { d =>
-      require(layoutOf(c, d) == Seq(phys),
-        s"coPartitioned: every dir must be hive-partitioned by exactly '$keyCol' " +
-          s"(dir $d has layout [${layoutOf(c, d).mkString(", ")}])")
-      require(new File(dirPath(root, d)).isDirectory,
-        s"snapshot v${c.version} references vacuumed dir ${dirPath(root, d)}")
-    }
-    val physSchema = StructType.fromDDL(c.schemaDdl.getOrElse(
-      sys.error("coPartitioned: snapshot has no recorded schema")))
-    val keyType = physSchema.fields.find(_.name == phys).map(_.dataType).getOrElse(
-      sys.error(s"coPartitioned: '$keyCol' not in the snapshot schema"))
-    require(keyType == IntegerType || keyType == LongType || keyType == StringType,
-      s"coPartitioned: key must be int/bigint/string, got ${keyType.sql}")
-    // every (dirName, dirBase, subtreePath, typedValue) — a directory-level
-    // walk, O(partition values), never a file listing
-    val subtrees: Seq[(String, String, String, Any)] = c.dirs.flatMap { d =>
-      val dp = dirPath(root, d)
-      Option(new File(dp).listFiles()).getOrElse(Array.empty).toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith(phys + "="))
-        .map { f =>
-          val raw = f.getName.substring(phys.length + 1)
-          val v: Any =
-            if (raw == "__HIVE_DEFAULT_PARTITION__") null
-            else keyType match {
-              case IntegerType => unescapePathName(raw).toInt
-              case LongType    => unescapePathName(raw).toLong
-              case _           => unescapePathName(raw)
-            }
-          (d, dp, s"$dp/${f.getName}", v)
-        }
-    }
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    def slotOf(v: Any): Int =
-      HashPartitioning(Seq(Literal.create(v, keyType)), numSlots)
-        .partitionIdExpression.eval(null).asInstanceOf[Int]
-    val bySlot: Map[Int, Seq[(String, String, String)]] =
-      subtrees.groupBy { case (_, _, _, v) => slotOf(v) }
-        .map { case (s, xs) => s -> xs.map(t => (t._1, t._2, t._3)).sortBy(_._3) }
-    val inv = c.nameMap.map(_.swap)
-    val logical = StructType(physSchema.fields.map(f =>
-      f.copy(name = inv.getOrElse(f.name, f.name), nullable = true)))
-    val thunks = (0 until numSlots).map { s =>
-      () => bySlot.get(s) match {
-        case None => spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), logical)
-        case Some(groups) =>
-          val df = groups.groupBy(g => (g._1, g._2)).toSeq.sortBy(_._1._2)
-            .map { case ((d, dp), subs) =>
-              // c.defaults rides here too: a pre-default subtree must backfill
-              // the declared DEFAULT exactly as the normal read path does, or
-              // a copart join would silently see NULLs the table promises
-              // carry the default (defaults are column-reference-free and
-              // deterministic, so per-subtree backfill is safe; their keys are
-              // physical names — renameColumn refuses default-bearing columns)
-              // MERGE-ON-READ deletion vectors apply per covering dir,
-              // exactly as scanWithDeletes does for the normal read path:
-              // rows only get REMOVED, so slot assignment — and with it
-              // the declared HashPartitioning — is untouched. A copart
-              // join over a table with MOR debt answers correctly instead
-              // of refusing until compaction. POSITIONAL vectors filter on
-              // the raw relation (they need `_metadata`, which alignTo's
-              // projection drops); key sets anti-join after alignment.
-              val (posSets, keySets) =
-                c.deletes.getOrElse(d, Nil).partition(isPosSet)
-              val raw = spark.read.option("basePath", dp).parquet(subs.map(_._3): _*)
-              val posApplied =
-                if (posSets.isEmpty) raw
-                else raw.filter(org.apache.spark.sql.functions.not(
-                  posDeletedCol(d, loadPosDv(spark, root, posSets))))
-              val df0 = alignTo(Some(physSchema), c.defaults, c.generated)(posApplied)
-              keySets.foldLeft(df0) { (acc, setName) =>
-                val kc = c.deleteKeys.getOrElse(setName, sys.error(
-                  s"manifest references delete set $setName with no recorded key column"))
-                acc.join(
-                  org.apache.spark.sql.functions.broadcast(
-                    spark.read.parquet(dirPath(root, setName)).select(kc).distinct()),
-                  Seq(kc), "left_anti")
-              }
-            }.reduce(_.unionByName(_))
-          toLogicalDf(c, df)
-      }
-    }
-    (logical, c.version, thunks)
-  }
-
   // ---- DSv2 keyed-batch planning (catalog storage-partitioned scans) ----
 
   /** One key-group of a keyed batch scan: the distinct hive key TUPLE and
@@ -5256,23 +5186,21 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
                              nameMap: Map[String, String],
                              groups: Seq[KeyedGroup],
                              keptDirs: Int, totalDirs: Int,
-                             fileRows: Map[String, Long] = Map.empty)
+                             fileRows: Map[String, Long] = Map.empty,
+                             fileDeletes: Map[String, FileDeletes] = Map.empty,
+                             keySets: Map[String, KeySet] = Map.empty)
 
-  /** Plan a KEY-GROUPED batch scan of the snapshot — the file layout
-    * Spark's DSv2 `KeyGroupedPartitioning` machinery needs to run
-    * storage-partitioned joins and key-local aggregations with ZERO
-    * Exchange (the public Iceberg SPJ design, now through Spark's OWN
-    * planner instead of the custom copart strategy). Returns None when
-    * the snapshot cannot TRUTHFULLY report key-grouped partitioning —
-    * unpartitioned, mixed layout eras, column DEFAULTs (the raw parquet
-    * reader cannot backfill them), pending MOR delete sets, or a key
-    * type the hive path does not round-trip — and the catalog scan falls
-    * back to the V1 relation path, which handles all of those. Dir-level
-    * skipping (envelopes/blooms/null counts) and per-file footer
-    * envelopes prune exactly as in [[scanForRelation]], so a pushed
-    * predicate narrows the keyed scan the same way it narrows the
-    * fallback.
+  /** Pending merge-on-read debt of one data file: the sorted row positions
+    * its dir's positional vectors delete, and the names of the key-form
+    * delete sets covering its dir.
     */
+  final case class FileDeletes(positions: Array[Long], keySets: Seq[String])
+
+  /** A key-form delete set resolved on the driver: its physical key column
+    * and its non-null keys as catalyst values of that column's type.
+    */
+  final case class KeySet(column: String, keys: Set[Any])
+
   /** The driver-side plan of a FLAT (unpartitioned) DSv2 batch scan:
     * physical file schema, name mapping, and the index-pruned file list
     * with byte lengths — the unkeyed sibling of [[keyedBatchPlan]], for
@@ -6311,9 +6239,7 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
       val k = planNull(root, n, w, resolved = Some(c)).toSet
       kept = kept.filter(k.contains)
     }
-    val posSets = c.deletes.values.flatten.toSeq.distinct
-    val dvAll: Map[String, Array[Long]] =
-      if (posSets.isEmpty) Map.empty else loadPosDv(spark, root, posSets)
+    val dvAll = snapshotPosDv(spark, root, c)
     val physBounds = ranges.map { case (n, lo, hi) => (physName(c, n), lo, hi) }
     val intKeyBounds = ranges.flatMap { case (n, lo, hi) =>
       keyFields.find(f => f.name == n &&
@@ -6369,7 +6295,6 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     val files = Seq.newBuilder[DeltaFile]
     kept.foreach { d =>
       val dp = dirPath(root, d)
-      val last = d.substring(d.lastIndexOf('/') + 1)
       val fstats = readFileStats(dp)
       val frows = readFileRows(dp)
       val era = eraOf(dp)
@@ -6401,17 +6326,7 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
         }
         if (footerKeep && keyKeep) {
           val full = s"$dp/$rel"
-          // the vector key must match the READ side byte-for-byte, and the
-          // read side derives it from `_metadata.file_path` — a Hadoop
-          // Path URI, which percent-encodes characters the raw filesystem
-          // name carries literally (a hive value with a space reads back
-          // as %20). Encode through the same Path.toUri so a vector
-          // recorded here is found by PosDeleted on every scan.
-          val enc = new org.apache.hadoop.fs.Path(full).toUri.toString
-          val marker = "/" + last + "/"
-          val mi = enc.lastIndexOf(marker)
-          val fileKey =
-            if (mi < 0) s"$last/$rel" else last + "/" + enc.substring(mi + marker.length)
+          val fileKey = posFileKey(d, full)
           files += DeltaFile(d, fileKey, full, new File(full).length(),
             keyVals, dvAll.getOrElse(fileKey, Array.empty[Long]),
             frows.get(rel), era)
@@ -6562,13 +6477,34 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     out
   }
 
-  private[graft] def keyedBatchPlan(root: String, asOf: Option[Long],
+  /** Plan a KEY-GROUPED batch scan of the snapshot — the file layout
+    * Spark's DSv2 `KeyGroupedPartitioning` machinery needs to run
+    * storage-partitioned joins and key-local aggregations with ZERO
+    * Exchange (the public Iceberg SPJ design, through Spark's OWN
+    * planner). Returns None when the snapshot cannot TRUTHFULLY report
+    * key-grouped partitioning — unpartitioned, mixed layout eras, column
+    * DEFAULTs (the raw parquet reader cannot backfill them), a key-form
+    * delete set keyed on a partition column, or a key type the hive path
+    * does not round-trip — and the catalog scan falls back to the V1
+    * relation path, which handles all of those. Dir-level skipping
+    * (envelopes/blooms/null counts) and per-file footer envelopes prune
+    * exactly as in [[scanForRelation]], so a pushed predicate narrows the
+    * keyed scan the same way it narrows the fallback.
+    *
+    * Pending MERGE-ON-READ debt applies per covering dir, as the V1 read
+    * path applies it: each file carries its positional vector and the
+    * key-form sets covering its dir ([[FileDeletes]]), and every such set's
+    * keys are collected here on the driver ([[KeySet]]) — small by the MOR
+    * contract, metered by [[morStatus]], absorbed by compaction. Removing
+    * rows cannot move a surviving row to another key group, so the
+    * reported partitioning stays truthful.
+    */
+  private[graft] def keyedBatchPlan(spark: SparkSession, root: String, asOf: Option[Long],
       ranges: Seq[(String, Long, Long)], points: Seq[(String, Long)],
       nullProbes: Seq[(String, Boolean)]): Option[KeyedPlan] = {
     import org.apache.spark.sql.types._
     val c = resolveSnapshot(root, asOf)
-    if (c.partitionCols.isEmpty || c.schemaDdl.isEmpty || c.defaults.nonEmpty ||
-        c.deletes.nonEmpty) return None
+    if (c.partitionCols.isEmpty || c.schemaDdl.isEmpty || c.defaults.nonEmpty) return None
     if (c.dirs.exists(d => layoutOf(c, d) != c.partitionCols)) return None
     val phys = StructType.fromDDL(c.schemaDdl.get)
     val keyFields: Seq[StructField] = c.partitionCols.flatMap(k =>
@@ -6596,12 +6532,26 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     def parse(f: StructField, raw: String): Any =
       hivePartValue(f.dataType, raw).getOrElse(sys.error(
         s"unparseable partition value '$raw' for ${f.name}"))
+    val keySetNames = kept.flatMap(d => c.deletes.getOrElse(d, Nil)).distinct
+      .filterNot(isPosSet)
+    val keySets: Map[String, KeySet] = keySetNames.map { sn =>
+      val kc = c.deleteKeys.getOrElse(sn, sys.error(
+        s"manifest references delete set $sn with no recorded key column"))
+      // a key on a path-materialized column would need the key constants
+      // in the skip; the V1 fallback applies such sets
+      if (c.partitionCols.contains(kc)) return None
+      val dt = phys.fields.find(_.name == kc).map(_.dataType).getOrElse(return None)
+      sn -> KeySet(kc, loadKeySet(spark, dirPath(root, sn), kc, dt))
+    }.toMap
+    val dv = snapshotPosDv(spark, root, c)
     val perFile = Seq.newBuilder[(Seq[Any], String, Long)]
     val rowsB = Map.newBuilder[String, Long]
+    val debtB = Map.newBuilder[String, FileDeletes]
     kept.foreach { d =>
       val dp = dirPath(root, d)
       val fstats = readFileStats(dp)
       val frows = readFileRows(dp)
+      val dirKeySets = c.deletes.getOrElse(d, Nil).filterNot(isPosSet)
       parquetFiles(dp).foreach { rel =>
         val keep = physBounds.isEmpty || fstats.forall(fs =>
           physBounds.forall { case (n, lo, hi) =>
@@ -6619,6 +6569,9 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
           if (vals.exists(_.isEmpty)) return None
           val full = s"$dp/$rel"
           frows.get(rel).foreach(n => rowsB += full -> n)
+          val positions = dv.getOrElse(posFileKey(d, full), Array.empty[Long])
+          if (positions.nonEmpty || dirKeySets.nonEmpty)
+            debtB += full -> FileDeletes(positions, dirKeySets)
           perFile += ((vals.map(_.get), full, new File(full).length()))
         }
       }
@@ -6630,7 +6583,7 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     val dataFields = phys.fields.filterNot(f => c.partitionCols.contains(f.name))
     Some(KeyedPlan(c.version, StructType(dataFields),
       StructType(keyFields.toArray), c.nameMap, groups, kept.size, c.dirs.size,
-      rowsB.result()))
+      rowsB.result(), debtB.result(), keySets))
   }
 
   /** History-preserving rollback (Delta RESTORE semantics): commits a NEW

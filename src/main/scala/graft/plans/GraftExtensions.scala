@@ -9,7 +9,11 @@ import graft.functions.ArrayOps
 /** Library entry point for `spark.sql.extensions=graft.plans.GraftExtensions`:
   * injects graft's native expressions (the [[ArrayOps.functions]] table)
   * into every session built on the context, so SQL users get `float_dot` /
-  * `portable_hll` without calling a register method.
+  * `portable_hll` without calling a register method, plus the read TVFs
+  * and the GRAFT statement parser. It adds no planner strategy and no
+  * optimizer rule: storage-partitioned joins come from the catalog's keyed
+  * scan ([[graft.catalog.GraftKeyedScan]]), which Spark's own planner
+  * joins without an Exchange.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -34,16 +38,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_history"),
       new ExpressionInfo(GraftTableFunctions.getClass.getName, "graft_history"),
       (exprs: Seq[Expression]) => GraftTableFunctions.graftHistory(exprs)))
-    // storage-partitioned join: graft_copart('<root>', '<key>', n) scans
-    // declare HashPartitioning(key, n) truthfully (hive layout = the
-    // clustering), so joins of two plan with zero Exchange — the Iceberg
-    // SPJ idea via the planner-strategy extension point
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_copart"),
-      new ExpressionInfo(GraftTableFunctions.getClass.getName, "graft_copart"),
-      (exprs: Seq[Expression]) => GraftTableFunctions.graftCopart(exprs)))
-    ext.injectPlannerStrategy(_ => GraftCoPartitionStrategy)
-    ext.injectOptimizerRule(_ => GraftCoPartitionPruning)
     // SQL front door for the versioned table's maintenance verbs
     // (DESCRIBE HISTORY / OPTIMIZE / VACUUM ... GRAFT '<root>'); every
     // other statement delegates untouched — a pure grammar superset

@@ -26,7 +26,10 @@ import graft.io.VersionedTable
   *
   * With [[GraftSqlParser]]'s statements (OPTIMIZE/VACUUM/DELETE/UPDATE/
   * MERGE/RESTORE GRAFT) this completes the SQL surface: every verb of the
-  * table format is now reachable without touching the Scala API.
+  * table format is now reachable without touching the Scala API. A
+  * storage-partitioned join reads catalog tables instead
+  * (`spark.sql.catalog.<c>=graft.catalog.GraftCatalog`): their keyed scans
+  * report `KeyGroupedPartitioning`, which these TVFs' plans do not.
   */
 object GraftTableFunctions {
   private def strLit(e: Expression, fn: String, pos: Int): String = e match {
@@ -79,24 +82,5 @@ object GraftTableFunctions {
       longLit(exprs(1), "graft_changes", 2),
       longLit(exprs(2), "graft_changes", 3),
       strLit(exprs(3), "graft_changes", 4)).queryExecution.analyzed
-  }
-
-  /** `graft_copart(root, keyCol, numSlots)` → the storage-partitioned-join
-    * relation ([[GraftCoPartitionedRelation]]): a snapshot scan that
-    * truthfully declares `HashPartitioning(keyCol, numSlots)` because its
-    * hive layout already clusters by the key — two of these join with
-    * ZERO Exchange. Validation (layout uniformity, key type, MOR debt)
-    * happens here at analysis; the snapshot version pins here too.
-    */
-  def graftCopart(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 3, "graft_copart takes (root, keyCol, numSlots)")
-    val spark = SparkSession.active
-    val root = strLit(exprs(0), "graft_copart", 1)
-    val key = strLit(exprs(1), "graft_copart", 2)
-    val n = longLit(exprs(2), "graft_copart", 3).toInt
-    val (schema, version, _) = VersionedTable.coPartitionedSlotScans(spark, root, key, n)
-    GraftCoPartitionedRelation(
-      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
-      root, key, n, version)
   }
 }

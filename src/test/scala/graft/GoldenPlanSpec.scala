@@ -91,6 +91,10 @@ class GoldenPlanSpec extends SparkSpec {
     // one SMJ + partial/final aggregate and ZERO hash exchanges — the
     // single rangepartitioning exchange is the query's final orderBy
     "versioned_copart_join" -> "SortMergeJoin=1, Exchange rangepartitioning=1, HashAggregate=2",
+    // the keyed scan over merge-on-read debt: the key-form delete set skips
+    // inside the scan, so no anti-join, no broadcast and no hash exchange
+    // sits under the aggregate
+    "versioned_copart_mor" -> "Exchange rangepartitioning=1, HashAggregate=2",
     // r14 additions: the catalog SPJ through Spark's OWN planner (zero hash
     // exchanges), the statistics-driven DPP join (exactly one broadcast,
     // never a shuffle join), and the positional-DV read — whose WHOLE point
@@ -102,8 +106,10 @@ class GoldenPlanSpec extends SparkSpec {
     // r15: the DELTA-DML read side — after two plain-SQL catalog UPDATEs
     // the table reads through positional-vector skips inside the scan's
     // own span: ZERO join nodes (a key-MOR or anti-join regression in the
-    // vector application would add join operators here by diff)
-    "versioned_catalog_update_dv" -> "Exchange hashpartitioning=1, Exchange rangepartitioning=1, HashAggregate=2",
+    // vector application would add join operators here by diff). The
+    // keyed scan applies the vectors itself, so the aggregate on the
+    // partition key also needs no hash exchange
+    "versioned_catalog_update_dv" -> "Exchange rangepartitioning=1, HashAggregate=2",
     // r15 late additions: the aggregate-pushdown plan's WHOLE point is the
     // ABSENCE of Aggregate and hash-exchange nodes — a grouped count/min/max
     // answered by GraftAggScan with only the query's own orderBy exchange

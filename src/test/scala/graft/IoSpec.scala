@@ -7,6 +7,21 @@ import graft.io._
 class IoSpec extends SparkSpec {
   import TestSpark._
 
+  // a catalog over a fresh warehouse: a table the Scala API writes at
+  // `<warehouse>/db/<t>` reads as `iocat.db.<t>` (the catalog keeps no
+  // state of its own)
+  private lazy val catWarehouse: String = {
+    val w = tmpDir("iocat_wh")
+    spark.conf.set("spark.sql.catalog.iocat", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.iocat.warehouse", w)
+    w
+  }
+  private def catRoot(t: String): String = s"$catWarehouse/db/$t"
+
+  // AQE renders Final + Initial plans once executed — keep the final one
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+
   test("ParquetTableFormat: partitioned write + partition recovery on read") {
     import spark.implicits._
     val df = Seq(("a", 1, 2022), ("b", 2, 2022), ("c", 3, 2023)).toDF("k", "v", "year")
@@ -3768,11 +3783,12 @@ class IoSpec extends SparkSpec {
     assert(VersionedTable.latestVersion(root).get == v)
   }
 
-  test("graft_copart: storage-partitioned join — zero Exchange on either side, exact rows") {
+  test("catalog storage-partitioned join: zero Exchange on either side, exact rows") {
     import spark.implicits._
-    val ra = tmpDir("spjA"); val rb = tmpDir("spjB")
+    val ra = catRoot("spja"); val rb = catRoot("spjb")
     // both tables hive-partitioned by grp; A has two commits (multi-dir
-    // slots) and a NULL-partition row (sentinel subtree must slot cleanly)
+    // key groups) and a NULL-partition row (the sentinel subtree is its
+    // own key group)
     val a1 = (1L to 30L).map(i => (i, s"g${i % 5}", i * 2)) :+ ((99L, null: String, 0L))
     val a2 = (31L to 45L).map(i => (i, s"g${i % 5}", i * 2))
     VersionedTable.commit(a1.toDF("id", "grp", "v"), ra, "append", "spj-a1",
@@ -3782,70 +3798,76 @@ class IoSpec extends SparkSpec {
     val b = (0 until 5).map(i => (s"g$i", i * 100L))
     VersionedTable.commit(b.toDF("grp", "w"), rb, "append", "spj-b1",
       partitionCols = Seq("grp"))
+    // MERGE hint: at spec scale both sides sit under the broadcast
+    // threshold; the property under test is the sort-merge SPJ
     val df = spark.sql(
-      s"SELECT a.grp AS grp, count(*) AS n, sum(a.v + b.w) AS s " +
-        s"FROM graft_copart('$ra', 'grp', 4) a " +
-        s"JOIN graft_copart('$rb', 'grp', 4) b ON a.grp = b.grp " +
-        "GROUP BY a.grp")
-    // the whole plan — join AND the aggregation above it — runs on the
-    // declared partitioning: zero Exchange anywhere
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"expected an exchange-free plan:\n${plan.take(2000)}")
-    assert(plan.contains("GraftCoPartitionedScan"), plan.take(500))
+      "SELECT /*+ MERGE(a) */ a.grp AS grp, count(*) AS n, sum(a.v + b.w) AS s " +
+        "FROM iocat.db.spja a JOIN iocat.db.spjb b ON a.grp = b.grp GROUP BY a.grp")
     val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val want = (a1 ++ a2).toDF("id", "grp", "v").join(b.toDF("grp", "w"), "grp")
       .groupBy("grp").agg(count(lit(1)), sum(col("v") + col("w")))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == want)
-    // guards: a flat table refuses (its layout is not the clustering)
-    val rc = tmpDir("spjC")
-    VersionedTable.commit((1L to 5L).map(i => (i, s"g$i")).toDF("id", "grp"),
-      rc, "append", "spj-c1")
-    assert(intercept[Exception](
-      spark.sql(s"SELECT * FROM graft_copart('$rc', 'grp', 4)").collect())
-      .getMessage.contains("hive-partitioned by exactly"))
+    // the whole plan — join AND the aggregation above it — runs on the
+    // scans' KeyGroupedPartitioning: zero Exchange anywhere
+    val plan = finalPlan(df)
+    assert(!plan.contains("Exchange"), s"expected an exchange-free plan:\n${plan.take(2000)}")
+    assert("GraftKeyedScan".r.findAllIn(plan).size == 2, plan.take(2000))
+    assert(spark.sql("SELECT id FROM iocat.db.spja WHERE grp IS NULL")
+      .collect().map(_.getLong(0)).toSeq == Seq(99L))
   }
 
-  test("graft_copart applies MOR deletion vectors in the slot scans instead of refusing") {
+  test("keyed scan applies key-form and positional MOR delete sets: zero Exchange, exact rows") {
     import spark.implicits._
-    val root = tmpDir("spjmor")
+    val root = catRoot("spjmor")
     VersionedTable.commit(
       (1L to 24L).map(i => (i, s"g${i % 3}", i * 2)).toDF("id", "grp", "v"),
       root, "append", "sm-c1", partitionCols = Seq("grp"), statsCols = Seq("id"))
-    // MOR delete: ids 3,6,9 tombstone as a delete set — no rewrite happens
+    // MOR delete: ids 3,6,9 tombstone as a key-form delete set — no rewrite
     VersionedTable.deleteWhereMor(spark, root, Seq(3L, 6L, 9L).toDF("id"),
       "id", "sm-del")
     assert(VersionedTable.latestCommit(root).get.deletes.nonEmpty)
-    val df = spark.sql(s"SELECT grp, count(*) AS n, sum(id) AS ids " +
-      s"FROM graft_copart('$root', 'grp', 4) GROUP BY grp")
-    // the deletes applied: exactly the anti-joined row set survives
-    val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val want = (1L to 24L).filterNot(Set(3L, 6L, 9L)).map(i => (i, s"g${i % 3}"))
-      .groupBy(_._2).map { case (g, xs) => (g, xs.size.toLong, xs.map(_._1).sum) }.toSet
-    assert(got == want)
-    // removal cannot move a surviving row's slot: the declared partitioning
-    // holds and the aggregation still plans with ZERO Exchange
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan.take(1500))
+    def agg(): org.apache.spark.sql.DataFrame =
+      spark.sql("SELECT grp, count(*) AS n, sum(id) AS ids FROM iocat.db.spjmor GROUP BY grp")
+    def want(ids: Seq[Long]): Set[(String, Long, Long)] =
+      ids.map(i => (i, s"g${i % 3}")).groupBy(_._2)
+        .map { case (g, xs) => (g, xs.size.toLong, xs.map(_._1).sum) }.toSet
+    def check(df: org.apache.spark.sql.DataFrame, ids: Seq[Long]): Unit = {
+      val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == want(ids), s"got $got")
+      // removal cannot move a surviving row to another key group: the
+      // keyed scan keeps its partitioning and the aggregation plans with
+      // ZERO Exchange (no anti-join, no broadcast)
+      val plan = finalPlan(df)
+      assert(plan.contains("GraftKeyedScan") && !plan.contains("Exchange"), plan.take(2000))
+    }
+    check(agg(), (1L to 24L).filterNot(Set(3L, 6L, 9L)))
     // a later append re-inserts a purged key (the new dir is uncovered)
     VersionedTable.commit(Seq((3L, "g0", 99L)).toDF("id", "grp", "v"),
       root, "append", "sm-c2", partitionCols = Seq("grp"), statsCols = Seq("id"))
-    assert(spark.sql(s"SELECT count(*) AS n FROM graft_copart('$root', 'grp', 4) " +
-      "WHERE id = 3").head().getLong(0) == 1L)
-    // POSITIONAL vectors apply in the slot scans too — join-free, and
-    // removal still cannot move a slot, so Exchange stays at zero
+    assert(spark.sql("SELECT count(*) AS n FROM iocat.db.spjmor WHERE id = 3")
+      .head().getLong(0) == 1L)
+    // POSITIONAL vectors apply in the same scan: ids 6,9 stay key-deleted,
+    // 3 was re-inserted (exactly one row), 12,15 are positionally deleted
     VersionedTable.deleteWherePos(spark, root, Seq(12L, 15L).toDF("id"),
       "id", "sm-dvdel")
-    val df2 = spark.sql(s"SELECT grp, count(*) AS n, sum(id) AS ids " +
-      s"FROM graft_copart('$root', 'grp', 4) GROUP BY grp")
-    val got2 = df2.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    // ids 6,9 stay key-deleted; 3 was re-inserted (exactly one row); 12,15
-    // are now positionally deleted
-    val want2 = (1L to 24L).filterNot(Set(6L, 9L, 12L, 15L))
-      .map(i => (i, s"g${i % 3}"))
-      .groupBy(_._2).map { case (g, xs) => (g, xs.size.toLong, xs.map(_._1).sum) }.toSet
-    assert(got2 == want2, s"got $got2")
-    assert(!df2.queryExecution.executedPlan.toString.contains("Exchange"))
+    val live = (1L to 24L).filterNot(Set(6L, 9L, 12L, 15L))
+    check(agg(), live)
+    // the key-set column is read for the skip even when the projection
+    // drops it, and stays out of the read schema
+    val proj = spark.sql("SELECT grp, v FROM iocat.db.spjmor")
+    assert(proj.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
+      (live.filter(_ != 3L).map(i => (s"g${i % 3}", i * 2)) :+ (("g0", 99L))).toSet)
+    val scan = proj.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    }.head
+    assert(scan.readSchema().fieldNames.toSet == Set("grp", "v"))
+    // and a join against another keyed table stays exchange-free
+    VersionedTable.commit((0 until 3).map(i => (s"g$i", i * 100L)).toDF("grp", "w"),
+      catRoot("spjmorw"), "append", "sm-w1", partitionCols = Seq("grp"))
+    check(spark.sql("SELECT /*+ MERGE(a) */ a.grp AS grp, count(*) AS n, sum(a.id) AS ids " +
+      "FROM iocat.db.spjmor a JOIN iocat.db.spjmorw b ON a.grp = b.grp GROUP BY a.grp"),
+      live)
   }
 
   test("composite-key MERGE: tuple upsert with intersected dir pruning") {
@@ -4041,9 +4063,9 @@ class IoSpec extends SparkSpec {
     assert(java.nio.file.Files.readString(mf(1).toPath).contains("column-defaults"))
   }
 
-  test("DEFAULT hardening: frozen at declaration; rides copart scans; survives overwrite; auto-compact never fails an append") {
+  test("DEFAULT hardening: frozen at declaration; rides catalog scans; survives overwrite; auto-compact never fails an append") {
     import spark.implicits._
-    val root = tmpDir("defh")
+    val root = catRoot("defh")
     VersionedTable.commit((1L to 8L).map(i => (i, s"g${i % 2}", i * 2))
       .toDF("id", "grp", "v"), root, "append", "dh-c1",
       partitionCols = Seq("grp"), statsCols = Seq("id"))
@@ -4056,14 +4078,14 @@ class IoSpec extends SparkSpec {
     val stored = VersionedTable.latestCommit(root).get.defaults("d")
     assert(stored.startsWith("DATE '"), stored)
     assert(!stored.toLowerCase.contains("current_date"), stored)
-    // (2) copart slot scans backfill the default for pre-default subtrees
-    // exactly like the normal read path — a copart join over a defaulted
-    // table must not see NULLs
-    val viaCopart = spark.sql(s"SELECT id, d FROM graft_copart('$root', 'grp', 3)")
+    // (2) a catalog scan backfills the default for pre-default dirs
+    // exactly like the normal read path (a defaulted snapshot takes the V1
+    // fallback) — a join over a defaulted table must not see NULLs
+    val viaCatalog = spark.sql("SELECT id, d FROM iocat.db.defh")
       .collect().map(r => r.getLong(0) -> r.getDate(1)).toMap
     val viaRead = VersionedTable.read(spark, root).select("id", "d")
       .collect().map(r => r.getLong(0) -> r.getDate(1)).toMap
-    assert(viaCopart == viaRead)
+    assert(viaCatalog == viaRead)
     assert(viaRead.values.forall(_ != null))
     // (3) the declaration SURVIVES an overwrite whose schema keeps the
     // column (Delta: currentDefault survives INSERT OVERWRITE, like
@@ -4130,17 +4152,21 @@ class IoSpec extends SparkSpec {
     assert(VersionedTable.read(spark, root).count() == 13L)
   }
 
-  test("graft_copart pins its snapshot at analysis; auto-compact z-order property clusters") {
+  test("catalog reads pin the latest snapshot at analysis; auto-compact z-order property clusters") {
     import spark.implicits._
-    val root = tmpDir("spjPin")
+    val root = catRoot("spjpin")
     VersionedTable.commit((1L to 20L).map(i => (i, s"g${i % 3}")).toDF("id", "grp"),
       root, "append", "pin-c1", partitionCols = Seq("grp"))
-    val df = spark.sql(s"SELECT count(*) AS n FROM graft_copart('$root', 'grp', 3)")
-    // the version pinned at analysis survives a concurrent commit — the
-    // execution cannot silently read a different table state
+    val rows = spark.sql("SELECT id, grp FROM iocat.db.spjpin")
+    val n = spark.sql("SELECT count(*) AS n FROM iocat.db.spjpin")
+    // the version current at analysis survives a concurrent commit — the
+    // execution cannot silently read a table state its schema did not
+    // come from
     VersionedTable.commit((21L to 30L).map(i => (i, s"g${i % 3}")).toDF("id", "grp"),
       root, "append", "pin-c2", partitionCols = Seq("grp"))
-    assert(df.head().getLong(0) == 20L)
+    assert(rows.collect().map(_.getLong(0)).toSet == (1L to 20L).toSet)
+    assert(n.head().getLong(0) == 20L)
+    assert(spark.sql("SELECT count(*) AS n FROM iocat.db.spjpin").head().getLong(0) == 30L)
 
     // declared clustering rides the TRIGGERED compactions: after the
     // auto-compact fires, per-file envelopes prune range probes on BOTH
@@ -4167,32 +4193,29 @@ class IoSpec extends SparkSpec {
       .getMessage.contains("morton"))
   }
 
-  test("graft_copart column pruning: a projected query narrows the slot scans, key kept") {
+  test("keyed scan column pruning: a projected query narrows the read schema") {
     import spark.implicits._
-    val root = tmpDir("spjPrune")
+    val root = catRoot("spjprune")
     VersionedTable.commit((1L to 20L).map(i => (i, s"g${i % 4}", i * 2, s"pad$i" * 8))
       .toDF("id", "grp", "v", "w"), root, "append", "pr-c1", partitionCols = Seq("grp"))
-    val df = spark.sql(s"SELECT grp, v FROM graft_copart('$root', 'grp', 4)")
-    val rel = df.queryExecution.optimizedPlan.collect {
-      case g: graft.plans.GraftCoPartitionedRelation => g
-    }.head
-    assert(rel.output.map(_.name).toSet == Set("grp", "v"),
-      s"scan must narrow to the projection (+key), got ${rel.output.map(_.name)}")
+    def readSchema(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+          r.scan
+      }.head.readSchema().fieldNames.toSet
+    val df = spark.sql("SELECT grp, v FROM iocat.db.spjprune")
+    assert(df.queryExecution.executedPlan.toString.contains("GraftKeyedScan"))
+    assert(readSchema(df) == Set("grp", "v"))
     assert(df.collect().map(r => (r.getString(0), r.getLong(1))).toSet
       == (1L to 20L).map(i => (s"g${i % 4}", i * 2)).toSet)
-    // the key survives pruning even when the projection drops it — the
-    // declared HashPartitioning references it
-    val noKey = spark.sql(s"SELECT v FROM graft_copart('$root', 'grp', 4)")
-    val rel2 = noKey.queryExecution.optimizedPlan.collect {
-      case g: graft.plans.GraftCoPartitionedRelation => g
-    }.head
-    assert(rel2.output.map(_.name).toSet == Set("grp", "v"))
+    // a projection without the key reads the one data column
+    val noKey = spark.sql("SELECT v FROM iocat.db.spjprune")
+    assert(readSchema(noKey) == Set("v"))
     assert(noKey.collect().map(_.getLong(0)).toSet == (1L to 20L).map(_ * 2).toSet)
     // pruning composes with the zero-exchange join
-    val j = spark.sql(s"SELECT a.grp, a.v, b.v AS v2 " +
-      s"FROM graft_copart('$root', 'grp', 4) a " +
-      s"JOIN graft_copart('$root', 'grp', 4) b ON a.grp = b.grp")
-    assert(!j.queryExecution.executedPlan.toString.contains("Exchange"))
+    val j = spark.sql("SELECT /*+ MERGE(a) */ a.grp, a.v, b.v AS v2 " +
+      "FROM iocat.db.spjprune a JOIN iocat.db.spjprune b ON a.grp = b.grp")
+    assert(!finalPlan(j).contains("Exchange"), finalPlan(j).take(2000))
     assert(j.count() == (0 until 4).map(g => (1L to 20L).count(_ % 4 == g))
       .map(n => n.toLong * n).sum)
   }

@@ -109,6 +109,32 @@ class ScanPruneSpec extends SparkSpec {
       planOf(nf).take(700))
   }
 
+  test("partition-key topN over merge-on-read debt counts live rows, not footer rows") {
+    warehouse
+    import spark.implicits._
+    def topDays(t: String, pruned: Boolean): Seq[String] = {
+      val q = spark.sql(s"SELECT id, day FROM gpr.db.$t ORDER BY day DESC LIMIT 5")
+      assert(planOf(q).contains("GraftKeyedScan") &&
+        planOf(q).contains("PushedTopN") == pruned, planOf(q).take(700))
+      q.collect().map(_.getString(1)).toSeq
+    }
+    Seq("pkpos", "pkkey").foreach { t =>
+      spark.sql(s"CREATE TABLE gpr.db.$t (id BIGINT, day STRING) PARTITIONED BY (day) " +
+        "TBLPROPERTIES ('graft.stats.columns' = 'id')") // records footer row counts
+      spark.sql(s"INSERT INTO gpr.db.$t SELECT id, " +
+        "concat('d', 1 + CAST(id / 10 AS INT)) FROM range(0, 30)") // d1,d2,d3 x10
+    }
+    // positional vector: the catalog UPDATE (merge-on-read by default) moves
+    // every d3 row to d1 — d3's footer count stays 10, its live rows are 0
+    spark.sql("UPDATE gpr.db.pkpos SET day = 'd1' WHERE day = 'd3'")
+    assert(topDays("pkpos", pruned = true) == Seq.fill(5)("d2"))
+    // key-form set holding d3's ids: it covers the whole insert dir, so no
+    // file of any day has a provable count and every group stays
+    graft.io.VersionedTable.deleteWhereMor(spark, s"$warehouse/db/pkkey",
+      (20L until 30L).toDF("id"), "id", "pk-del")
+    assert(topDays("pkkey", pruned = false) == Seq.fill(5)("d2"))
+  }
+
   test("topN pushdown: INDEXED sort column resolves from side data — zero footer opens at plan time") {
     warehouse
     import graft.io.VersionedTable
