@@ -248,9 +248,9 @@ private[graft] object QueriesCapstones {
             .filter(col("keep")).select("doc_id")).head
         }
         val q = hq.join(clf, Seq("doc_id"), "semi")
-        // checkpointed once: consumed by the pair filter, the cluster
-        // labeling, and the survivor join — three readers, one execution
-        val Seq(ex) = Par.materialize(Dedup.exactByKey(q, Seq("text"), "doc_id"))
+        // materialized by exactByKey: consumed by the pair filter, the
+        // cluster labeling, and the survivor join — three readers, one execution
+        val ex = Dedup.exactByKey(q, Seq("text"), "doc_id")
         // standing pair-list fixture + the pointwise subset property: the
         // near-dup pairs of the quality-filtered, exact-deduped corpus are
         // the full-corpus pairs with both endpoints surviving into `ex` —

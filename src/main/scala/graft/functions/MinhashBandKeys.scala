@@ -101,15 +101,7 @@ case class MinhashBandKeys(child: Expression, bandSizeExpr: Expression)
     var t = 0
     while (t < parts.length) {
       val tok = parts(t)
-      if (tok.numBytes() > 0 && seen.add(tok)) {
-        val digest = md.digest(tok.getBytes)
-        md.reset()
-        // first 8 hex chars = first 4 bytes, unsigned
-        var h = 0L
-        var bi = 0
-        while (bi < 4) { h = (h << 8) | (digest(bi) & 0xffL); bi += 1 }
-        fold(mins, h)
-      }
+      if (tok.numBytes() > 0 && seen.add(tok)) fold(mins, MinhashBandKeys.tokenHash(md, tok))
       t += 1
     }
     keys(mins)
@@ -179,4 +171,17 @@ case class MinhashBandKeys(child: Expression, bandSizeExpr: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(child = newLeft, bandSizeExpr = newRight)
+}
+
+object MinhashBandKeys {
+  /** The portable token hash (Dedup.tokenHash): the first 8 hex digits of
+    * md5(tok), i.e. its first 4 bytes, as an unsigned integer.
+    */
+  def tokenHash(md: java.security.MessageDigest, tok: UTF8String): Long = {
+    val digest = md.digest(tok.getBytes)
+    var h = 0L
+    var bi = 0
+    while (bi < 4) { h = (h << 8) | (digest(bi) & 0xffL); bi += 1 }
+    h
+  }
 }

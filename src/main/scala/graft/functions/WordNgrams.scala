@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,9 +26,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * (so runs of spaces collapse), `pos` 1-based over the token sequence.
   * Null input or fewer than n tokens generates nothing. `n` must be a
   * foldable positive integer.
+  *
+  * Generated code calls [[ngrams]] through the expression reference object,
+  * so the Generate node stays inside its whole-stage class instead of
+  * breaking the stage into two compiled classes and an interpreted row
+  * projection between them.
   */
-case class WordNgrams(child: Expression, nExpr: Expression)
-  extends Generator with CodegenFallback {
+case class WordNgrams(child: Expression, nExpr: Expression) extends Generator {
 
   override def children: Seq[Expression] = Seq(child, nExpr)
   override def prettyName: String = "word_ngrams"
@@ -61,20 +66,31 @@ case class WordNgrams(child: Expression, nExpr: Expression)
     StructField("pos", IntegerType, nullable = false),
     StructField("ngram", StringType, nullable = false)))
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    ngrams(child.eval(input).asInstanceOf[UTF8String])
+
+  /** The (pos, ngram) rows of one text; public for generated code. */
+  def ngrams(v: UTF8String): IterableOnce[InternalRow] =
     if (v == null) Iterator.empty
     else {
       // UTF8String.split mirrors SQL split(str, ' ') exactly (regex, limit
       // -1); dropping zero-byte tokens matches the filter(x != '') step.
-      val parts = v.asInstanceOf[UTF8String].split(space, -1)
-        .filter(_.numBytes() > 0)
+      val parts = v.split(space, -1).filter(_.numBytes() > 0)
       if (parts.length < n) Iterator.empty
       else (0 to parts.length - n).iterator.map { i =>
         InternalRow(i + 1,
           UTF8String.concatWs(space, parts.slice(i, i + n).toIndexedSeq: _*))
       }
     }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("wordNgrams", this, classOf[WordNgrams].getName)
+    val in = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${in.code}
+      |scala.collection.IterableOnce<InternalRow> ${ev.value} =
+      |  $ref.ngrams(${in.isNull} ? null : ${in.value});
+      """.stripMargin, isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(

@@ -4,9 +4,12 @@ import java.util.concurrent.{ExecutionException, SynchronousQueue, ThreadPoolExe
 
 import scala.util.Try
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 /** Plan-shaping helpers shared by the library: scan widening and the one
   * eager materialization point.
@@ -43,6 +46,26 @@ object Par {
     legs.map(_.get)
   }
 
+  /** Eagerly local-checkpoints an RDD on the calling thread and returns its
+    * row count: the [[materialize]] of library passes that run on plain
+    * RDDs, which have no generated classes to compile.
+    */
+  def materializeRdd(rdd: RDD[_]): Long = {
+    rdd.localCheckpoint()
+    rdd.count()
+  }
+
+  /** The Catalyst rows of `df`, planned as one SQL execution: its shuffle
+    * stages run now, under the caller's job group, and the returned RDD
+    * runs the final stage. Unlike `Dataset.rdd` there is no conversion to
+    * external rows, so no generated class beyond the plan's own. Rows may
+    * be reused buffers: read or copy each before the next.
+    */
+  def rows(df: DataFrame): RDD[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("rows"))(qe.toRdd)
+  }
+
   /** JVM-wide daemon pool for the overlapped legs of [[materialize]]. It
     * grows to the number of legs in flight, so a call never runs fewer legs
     * at once than it was given, and idle threads exit after a minute.
@@ -69,30 +92,42 @@ object Par {
     * exchange. Round-robin keeps Spark's sort-before-repartition
     * determinism guarantee for retried tasks.
     *
-    * The partition probe (`df.rdd.getNumPartitions`) runs ONLY on narrow
-    * scan-rooted chains, where building the RDD is pure planning. On a
-    * frame whose plan already contains a shuffle-inducing node the probe
-    * would be catastrophic: `Dataset.rdd` on an AQE plan materializes
-    * every exchange stage — i.e. it EXECUTES the whole upstream pipeline
-    * as extra jobs just to read a partition count (measured: the double
-    * widen inside heavyHitters re-ran the token explode per probe,
-    * a13_heavy_hitters cold 3 s -> 14 s). Shuffle-derived frames pass
-    * through untouched instead: their width is the shuffle partition
+    * The partition probe runs ONLY on narrow scan-rooted chains, whose
+    * width is the sum of their leaf scans' partitions; it reads those from
+    * the physical plan's leaves and executes nothing. (`df.rdd` would run
+    * the plan's whole-stage codegen on the driver, one compiled class per
+    * new scan chain, and on an AQE plan it would materialize every exchange
+    * stage — measured: the double widen inside heavyHitters re-ran the token
+    * explode per probe, a13_heavy_hitters cold 3 s -> 14 s.) Shuffle-derived
+    * frames pass through untouched: their width is the shuffle partition
     * count (or AQE's size-targeted coalesce of it), which is the engine's
     * scale-adaptive setting, not a one-task file artifact.
     */
   def widen(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (!narrowChain(df.queryExecution.logical)) df
-    else if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    else if (scanPartitions(df.queryExecution.sparkPlan, par) < par) df.repartition(par) else df
   }
+
+  /** Partitions of a narrow chain: those of its leaves, which a union
+    * concatenates. File and v2 scans plan their splits without running
+    * anything; a local relation spreads over at most the default
+    * parallelism; other leaves (checkpoints, ranges) build their RDD.
+    */
+  private def scanPartitions(plan: SparkPlan, par: Int): Int = plan.collectLeaves().map {
+    case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    case s: BatchScanExec => s.inputRDD.getNumPartitions
+    case l: LocalTableScanExec =>
+      math.min(math.max(l.rows.size, 1), par)
+    case leaf => leaf.execute().getNumPartitions
+  }.sum
 
   /** True when every node of `plan` preserves its child's partitioning —
     * projections, filters, generators, unions, sample, local relations and
     * leaf scans (incl. checkpointed [[org.apache.spark.sql.execution.LogicalRDD]]
     * frames, matched structurally as leaves). Any other node (join,
     * aggregate, window, sort, limit, repartition, ...) may introduce an
-    * exchange, so the RDD probe is not plan-side-only there.
+    * exchange, whose width is the engine's to choose.
     */
   private def narrowChain(plan: LogicalPlan): Boolean = plan.find {
     case _: Project | _: Filter | _: Generate | _: Union | _: SubqueryAlias |

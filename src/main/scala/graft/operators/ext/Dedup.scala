@@ -2,7 +2,13 @@ package graft.operators.ext
 
 import graft.operators.Par
 import graft.functions.ArrayOps.{minhashBandKeys, sortedOverlap, wordNgrams}
-import org.apache.spark.sql.DataFrame
+import graft.functions.TokenHashSet
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
+import org.apache.spark.sql.graftshim.{GraftColumnBridge, GraftRowsBridge}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,11 +31,37 @@ object Dedup {
   /** X1: exact keyed dedup, deterministic survivor — keep the row with the
     * lowest tie-break value per key. dropDuplicates keeps an arbitrary row
     * (partition-order dependent); this form is stable and oracle-checkable.
+    *
+    * Eagerly materialized: the deduped corpus is the input of every later
+    * curation step (near-dup pairs, clusters, survivors, decontamination,
+    * mix), and Spark has no common-subexpression materialization, so a
+    * lazy result re-ran the scan, the filters and the dedup shuffle once
+    * per consumer (four times in one pass of a curation chain). The dedup
+    * itself is one shuffle on the keys and a sort on (keys, tie-break); the
+    * first row of each key run survives, picked in the checkpoint's own
+    * pass over the sorted partitions, which compiles no class: a row_number
+    * window would add a partial limit, a window and a filter stage, each
+    * with generated classes of its own.
     */
-  def exactByKey(df: DataFrame, keys: Seq[String], tieBreak: String): DataFrame =
-    df.withColumn("__rn", row_number().over(
-        Window.partitionBy(keys.map(col): _*).orderBy(col(tieBreak))))
-      .filter(col("__rn") === 1).drop("__rn")
+  def exactByKey(df: DataFrame, keys: Seq[String], tieBreak: String): DataFrame = {
+    val sorted = df.repartition(keys.map(col): _*)
+      .sortWithinPartitions((keys :+ tieBreak).map(col): _*)
+    val schema = sorted.schema
+    val keyAt = keys.map(schema.fieldIndex)
+    val keyTypes = keyAt.map(schema(_).dataType)
+    val sameKey = InterpretedOrdering.forSchema(keyTypes)
+    def key(r: InternalRow): InternalRow =
+      InternalRow.fromSeq(keyAt.zip(keyTypes).map { case (i, t) => r.get(i, t) })
+    val firsts = Par.rows(sorted).mapPartitions { it =>
+      var last: InternalRow = null
+      it.flatMap { r =>
+        if (last != null && sameKey.compare(key(last), key(r)) == 0) None
+        else { last = r.copy(); Some(last) }
+      }
+    }
+    Par.materializeRdd(firsts)
+    GraftRowsBridge.frame(df.sparkSession, firsts, schema)
+  }
 
   /** Distinct whitespace tokens per document. */
   def tokens(docs: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -41,6 +73,12 @@ object Dedup {
     * md5(tok). Identical in Spark and DuckDB, unlike xxhash64/murmur3.
     */
   val tokenHash = expr("cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint)")
+
+  /** struct(toks = ascending distinct token hashes, sz = distinct tokens)
+    * of a text column, over the tokens [[shingles]] emits for `n`.
+    */
+  private def tokenHashSet(text: Column, n: Int): Column =
+    GraftColumnBridge.column(TokenHashSet(GraftColumnBridge.expression(text), n))
 
   /** Word-shingle sets of size n (n-gram tokens) per document, for n-gram
     * Jaccard. n=1 degenerates to [[tokens]].
@@ -221,7 +259,9 @@ object Dedup {
     * path for n-gram Jaccard too.
     *
     * One materialization: the token-set table (doc_id, toks = sorted
-    * distinct token hashes, sz), checkpointed once. Its two consumers — the
+    * distinct token hashes, sz = distinct tokens), one projection per
+    * input row (so one row per document: ids must be unique), checkpointed
+    * once. Its two consumers — the
     * band rows and both verify joins — read the checkpoint, so the input
     * plan runs once. Spark has no common-subexpression materialization:
     * without the cut each consumer re-executes the upstream pipeline, and
@@ -268,16 +308,17 @@ object Dedup {
     require(salts > 0, "salts must be positive")
     require(minhashSeeds.size % bandSize == 0, "bandSize must divide the seed count")
     val par = docs.sparkSession.sparkContext.defaultParallelism
-    // Explicit repartition BEFORE the checkpoint: AQE coalesces this tiny-
-    // by-bytes shuffle down to 1 partition, which would serialize the
-    // band-key kernel, the hot-bucket pair generation, and the checkpoint
-    // write itself. Quadratic-output operators must size partitions by
-    // downstream work, not input bytes. The grouping reuses this exchange.
-    val Seq(tokSets) = Par.materialize(shingles(docs, idCol, textCol, shingleN)
-      .withColumn("h", tokenHash).select("doc_id", "h")
-      .repartition(par, col("doc_id"))
-      .groupBy("doc_id")
-      .agg(sort_array(collect_set(col("h"))).as("toks"), count(lit(1)).as("sz")))
+    // Each document's token set is one projection
+    // (functions/TokenHashSet.scala) in the input's own stage. Explicit
+    // repartition BEFORE the checkpoint: the input may reach here on one
+    // partition (AQE coalesces a tiny-by-bytes shuffle down to 1), which
+    // would serialize the band-key kernel, the hot-bucket pair generation,
+    // and the checkpoint write itself. Quadratic-output operators must size
+    // partitions by downstream work, not input bytes.
+    val Seq(tokSets) = Par.materialize(docs
+      .select(col(idCol).as("doc_id"), tokenHashSet(col(textCol), math.max(shingleN, 1)).as("ts"))
+      .select(col("doc_id"), col("ts.toks").as("toks"), col("ts.sz").as("sz"))
+      .repartition(par, col("doc_id")))
     val bands = tokSets.select(col("doc_id"),
       explode(minhashBandKeys(col("toks"), bandSize)).as("key"))
     // Salted self-join over narrow (doc_id, key) rows. A hot bucket (a
@@ -306,14 +347,20 @@ object Dedup {
     // probe side is pre-partitioned on exactly the join keys, so it moves
     // through its existing exchange. (Plan-asserted in PlanSpec: this join
     // and the verify joins below must stay ShuffledHashJoin.)
-    val x = bands.withColumn("salt", pmod(col("doc_id"), lit(salts)).cast("int"))
+    // (coalesce: a non-null salt, typed like the build side's, so both
+    // sides of the exchange share one compiled partitioning projection)
+    val x = bands.withColumn("salt", coalesce(pmod(col("doc_id"), lit(salts)).cast("int"), lit(0)))
       .repartition(par, col("key"), col("salt"))
     val y = bands.withColumn("salt", explode(lit((0 until salts).toArray)))
     val cands = x.as("x").join(y.as("y").hint("shuffle_hash"),
         col("x.key") === col("y.key") && col("x.salt") === col("y.salt") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-      .distinct() // a pair matching in >1 band appears once per band
+      // a pair matching in >1 band appears once per band: drop the copies
+      // on the shuffle the first verify join needs anyway (id_a
+      // partitioning clusters every (id_a, id_b) pair), not on one of its own
+      .repartition(par, col("id_a"))
+      .distinct()
     // Sorted distinct token arrays (the checkpoint above): the
     // native sorted_overlap merge-count (functions/ArrayOps.scala) needs
     // ascending order, and in exchange the per-pair verification is a
@@ -654,16 +701,19 @@ object Dedup {
     * Returns (doc_id, n_hits) for flagged documents only — n_hits = number
     * of distinct colliding n-grams; callers anti-join on doc_id to drop.
     *
-    * 100 TB shape: the benchmark side is tiny (a test set), so its distinct
-    * n-grams broadcast; the corpus side shingles map-side and only colliding
-    * (doc, gram) rows reach the count's one key shuffle — a linear scan of
-    * the corpus regardless of benchmark count.
+    * 100 TB shape: the benchmark side is tiny (a test set), so its n-grams
+    * broadcast as they come — a semi join needs no distinct build side; the
+    * corpus side shingles map-side and only colliding (doc, gram) rows
+    * reach the count's one key shuffle — a linear scan of the corpus
+    * regardless of benchmark count.
     */
   def ngramContamination(docs: DataFrame, idCol: String, textCol: String,
                          bench: DataFrame, n: Int): DataFrame = {
     val corpusGrams = shingles(docs, idCol, textCol, n)
-    val benchGrams = shingles(bench, idCol, textCol, n).select("tok").distinct()
-    corpusGrams.join(broadcast(benchGrams), Seq("tok"))
+    // word_ngrams with n = 1 emits the tokens [[tokens]] does
+    val benchGrams = Par.widen(bench).select(wordNgrams(col(textCol), math.max(n, 1)))
+      .select(col("ngram").as("tok"))
+    corpusGrams.join(broadcast(benchGrams), Seq("tok"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
   }
 
@@ -769,7 +819,6 @@ object Dedup {
                     aCol: String = "id_a", bCol: String = "id_b",
                     maxIters: Int = 20, finishRows: Long = 4000000L,
                     quotientDepth: Int = 2): DataFrame = {
-    import pairs.sparkSession.implicits._
     // id contract enforced up front: a lossy/failed long cast raises with
     // the offending value instead of surfacing later as an opaque
     // non-nullable-field error (or, worse, a silently renumbered cluster)
@@ -778,9 +827,12 @@ object Dedup {
           raise_error(concat(lit(s"dedupClusters: id column '$c' must be long-castable, got: "),
             col(c).cast("string"))))
         .otherwise(col(c).cast("long"))
-    val labels = clusterEdges(
-      pairs.select(longId(aCol), longId(bCol)).as[(Long, Long)],
-      finishRows, maxIters, quotientDepth)
+    val edges = Par.rows(pairs.select(longId(aCol), longId(bCol))).map { r =>
+      if (r.isNullAt(0) || r.isNullAt(1))
+        throw new IllegalArgumentException(s"dedupClusters: null id in pair columns '$aCol', '$bCol'")
+      (r.getLong(0), r.getLong(1))
+    }
+    val labels = clusterEdges(pairs.sparkSession, edges, finishRows, maxIters, quotientDepth)
     docs.select(col(idCol).as("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
@@ -788,38 +840,47 @@ object Dedup {
 
   /** Core labeling: (doc_id, cluster-min) for every id appearing in `edges`,
     * via the contract → finish | quotient-recurse | propagate cascade
-    * documented on [[dedupClusters]].
+    * documented on [[dedupClusters]]. The contraction, its checkpoint and
+    * count, and the finish run on the plain RDD of id pairs: none of them
+    * compiles a class, where the same passes as typed Dataset operators
+    * added a deserializer, a serializer and a scan stage each.
     */
-  private def clusterEdges(edges: org.apache.spark.sql.Dataset[(Long, Long)],
+  private def clusterEdges(spark: org.apache.spark.sql.SparkSession, edges: RDD[(Long, Long)],
                            finishRows: Long, maxIters: Int, quotientDepth: Int): DataFrame = {
-    import edges.sparkSession.implicits._
-    val Seq(stars) = Par.materialize(contractEdges(edges).toDF("src", "dst"))
-    val n = stars.count()
+    val stars = contractEdges(edges)
+    val n = Par.materializeRdd(stars)
     if (n <= finishRows)
-      return contractEdges(stars.coalesce(1).as[(Long, Long)]).toDF("doc_id", "cluster")
+      return idPairs(spark, contractEdges(stars.coalesce(1)), "doc_id", "cluster")
+    val starFrame = idPairs(spark, stars, "src", "dst")
     if (quotientDepth <= 0) {
       System.err.println(s"[dedupClusters] $n star rows > finish threshold " +
         s"$finishRows, quotient depth exhausted: propagation fallback")
-      return propagateMinLabel(stars, maxIters)
+      return propagateMinLabel(starFrame, maxIters)
     }
     // label quotient graph: each node carrying >1 label links them (a star
     // through the node's min label); one groupBy(node) pass, output size =
     // multi-label incidence, not nodes
-    val labEdges = stars.groupBy(col("src")).agg(collect_set(col("dst")).as("ds"))
+    val labEdges = Par.rows(starFrame.groupBy(col("src")).agg(collect_set(col("dst")).as("ds"))
       .filter(size(col("ds")) > 1)
       .select(explode(col("ds")).as("a"), array_min(col("ds")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .as[(Long, Long)]
+      .filter(col("a") =!= col("b")))
+      .map(r => (r.getLong(0), r.getLong(1)))
     System.err.println(s"[dedupClusters] $n star rows > finish threshold " +
       s"$finishRows: recursing on the label quotient (depth $quotientDepth)")
-    val labRoots = clusterEdges(labEdges, finishRows, maxIters, quotientDepth - 1)
+    val labRoots = clusterEdges(spark, labEdges, finishRows, maxIters, quotientDepth - 1)
       .select(col("doc_id").as("lab"), col("cluster").as("root"))
     // map each node through its labels' component roots; labels outside the
     // quotient (their component has a single label) root to themselves
-    stars.join(labRoots, col("dst") === col("lab"), "left")
+    starFrame.join(labRoots, col("dst") === col("lab"), "left")
       .groupBy(col("src").as("doc_id"))
       .agg(min(coalesce(col("root"), col("dst"))).as("cluster"))
   }
+
+  /** A DataFrame of non-null bigint columns `a`, `b` over an RDD of id pairs. */
+  private def idPairs(spark: org.apache.spark.sql.SparkSession, rdd: RDD[(Long, Long)],
+                      a: String, b: String): DataFrame =
+    GraftRowsBridge.frame(spark, rdd.map { case (x, y) => InternalRow(x, y) },
+      StructType(Seq(StructField(a, LongType, nullable = false), StructField(b, LongType, nullable = false))))
 
   /** Partition-local union-find: one (node, min-id-of-local-component) star
     * edge per node of each partition. Union by rank + path halving; the set
@@ -828,9 +889,7 @@ object Dedup {
     * finish/propagate stage). Memory per task is O(distinct nodes in the
     * partition) — the same order as a grouping aggregate over the edges.
     */
-  private def contractEdges(
-      edges: org.apache.spark.sql.Dataset[(Long, Long)]): org.apache.spark.sql.Dataset[(Long, Long)] = {
-    import edges.sparkSession.implicits._
+  private def contractEdges(edges: RDD[(Long, Long)]): RDD[(Long, Long)] =
     edges.mapPartitions { it =>
       val parent = new java.util.HashMap[Long, Long]()
       val rank = new java.util.HashMap[Long, Int]()
@@ -858,7 +917,6 @@ object Dedup {
       import scala.jdk.CollectionConverters._
       parent.keySet().iterator().asScala.map(v => (v, minOf.get(find(v))))
     }
-  }
 
   /** Distributed fallback for components too large for the single-task
     * finish: hop-batched min-label propagation to fixpoint over (already

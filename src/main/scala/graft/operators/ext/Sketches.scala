@@ -1,5 +1,6 @@
 package graft.operators.ext
 
+import graft.operators.Par
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -52,33 +53,41 @@ object Sketches {
     * total sort (or a percentile map-aggregate holding every distinct value);
     * the sketch is one distinct aggregate (map-side combined, shuffle bounded
     * by distinct values) + a bottom-k TakeOrderedAndProject (per-partition
-    * heaps, no global sort) + an O(k) driver-free window over k rows. The
+    * heaps, no global sort) whose k rows the driver ranks. The
     * bottom-k-of-hash merge is commutative and idempotent, so the result is
     * INDEPENDENT of partitioning — replayable bit-for-bit in any engine,
     * unlike sample-based sketches keyed on row order.
+    *
+    * The exact side ranks the whole domain without a single-partition
+    * window: the domain is range-partitioned and sorted once (checkpointed),
+    * the driver prefix-sums the per-partition counts (O(#partitions), as
+    * Medallion.withScalableSurrogateId does), and one pass reads each
+    * wanted order statistic from the one partition that holds it. The
+    * answer is a local frame of one row per quantile.
     */
   def kmvQuantile(df: DataFrame, valueCol: String, k: Int,
                   quantiles: Seq[(Int, Int)]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
     import spark.implicits._
-    val domain = df.select(col(valueCol).cast("long").as("v")).distinct()
+    val Seq(domain) = Par.materialize(df.select(col(valueCol).cast("long").as("v")).distinct()
+      .repartitionByRange(col("v")).sortWithinPartitions("v"))
     val sample = domain.orderBy(md5(col("v").cast("string")), col("v")).limit(k)
-    val ranked = sample
-      .withColumn("rk", row_number().over(Window.orderBy("v")).cast("long"))
-      .crossJoin(broadcast(sample.agg(count(lit(1)).as("sn"))))
-    val exact = domain
-      .withColumn("erk", row_number().over(Window.orderBy("v")).cast("long"))
-      .crossJoin(broadcast(domain.agg(count(lit(1)).as("en"))))
-    val qdf = quantiles.toDF("q_num", "q_den")
-    // integer ceil(a*q) = (a*num + den - 1) div den — no float enters the rank
-    broadcast(qdf)
-      .join(ranked, expr("rk = (sn * q_num + q_den - 1) div q_den"))
-      .select(col("q_num"), col("q_den"), col("v").as("est"))
-      .join(broadcast(qdf)
-        .join(exact, expr("erk = (en * q_num + q_den - 1) div q_den"))
-        .select(col("q_num"), col("q_den"), col("v").as("exact")),
-        Seq("q_num", "q_den"))
+      .collect().map(_.getLong(0)).sorted
+    // offsets(i) = values before partition i; offsets.last = |domain|
+    val offsets = domain.rdd.mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
+      .collect().sortBy(_._1).map(_._2).scanLeft(0L)(_ + _)
+    val n = offsets.last
+    // integer ceil(a*q) = (a*num + den - 1) div den — no float enters the
+    // rank; ranks outside 1..a have no order statistic and no row
+    def rank(a: Long, q: (Int, Int)): Option[Long] =
+      Some((a * q._1 + q._2 - 1) / q._2).filter(r => r >= 1 && r <= a)
+    val wanted = quantiles.flatMap(rank(n, _)).toSet
+    val exact = domain.rdd.mapPartitionsWithIndex { case (i, it) =>
+      it.zipWithIndex.collect { case (r, j) if wanted(offsets(i) + j + 1) => (offsets(i) + j + 1, r.getLong(0)) }
+    }.collect().toMap
+    quantiles.flatMap { q =>
+      for (sr <- rank(sample.length, q); er <- rank(n, q)) yield (q._1, q._2, sample(sr.toInt - 1), exact(er))
+    }.toDF("q_num", "q_den", "est", "exact")
   }
 
   /** GROUPED KMV quantile sketch — [[kmvQuantile]] per group, in the shape

@@ -16,18 +16,19 @@ object TextAnalysis {
 
   val stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in")
 
-  private def toks(textCol: String) = s"filter(split($textCol, ' '), x -> x != '')"
+  private def toks(textCol: String) = s"array_remove(split($textCol, ' '), '')"
 
   /** Curation quality-keep predicate — the [[qualityScore]] thresholds the
-    * curation pipelines filter on (≥ `minChars` chars, ≥ `minStopwords`
-    * stopword hits), as ONE engine-side definition shared by the batch
+    * curation pipelines filter on (≥ `minChars` chars, at least one
+    * stopword), as ONE engine-side definition shared by the batch
     * (x9_curation_e2e) and streaming (Streaming.curateDocs) paths so the
-    * two cannot drift; the DuckDB twin is Queries.duckQualityPred.
+    * two cannot drift; the DuckDB twin is Queries.duckQualityPred. The
+    * stopword test is a set overlap, which whole-stage codegen compiles
+    * into the scan's stage.
     */
-  def qualityKeepPred(textCol: String, minChars: Int = 120,
-                      minStopwords: Int = 1): org.apache.spark.sql.Column =
+  def qualityKeepPred(textCol: String, minChars: Int = 120): org.apache.spark.sql.Column =
     length(col(textCol)) >= minChars &&
-      expr(s"size(filter(${toks(textCol)}, x -> array_contains(array(${stopwords.map("'" + _ + "'").mkString(",")}), x)))") >= minStopwords
+      arrays_overlap(split(col(textCol), " "), array(stopwords.map(lit): _*))
 
   /** Corpus token frequencies: explode → count. Partial aggregation makes the
     * shuffle carry one row per (partition, token) — safe at any corpus size.

@@ -35,12 +35,19 @@ object GraftStreamingBridge {
     * `toRdd` under a fresh BATCH frame — planning happened once in the
     * stream, the commit path just drains it.
     */
-  def asBatchDf(df: DataFrame): DataFrame = {
-    val classic = df.asInstanceOf[ClassicDataset[Row]]
-    val session = classic.sparkSession.asInstanceOf[ClassicSparkSession]
-    session.internalCreateDataFrame(classic.queryExecution.toRdd, df.schema,
-      isStreaming = false)
-  }
+  def asBatchDf(df: DataFrame): DataFrame =
+    GraftRowsBridge.frame(df.sparkSession,
+      df.asInstanceOf[ClassicDataset[Row]].queryExecution.toRdd, df.schema)
+}
+
+/** A batch DataFrame over an RDD of Catalyst rows, for library passes that
+  * run on plain RDDs (`internalCreateDataFrame` is `private[sql]`).
+  */
+object GraftRowsBridge {
+  def frame(spark: org.apache.spark.sql.SparkSession,
+            rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+            schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[ClassicSparkSession].internalCreateDataFrame(rows, schema, isStreaming = false)
 }
 
 /** Column ↔ Catalyst Expression conversion (`private[sql]` in Spark 4's

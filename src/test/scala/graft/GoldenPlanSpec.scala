@@ -52,15 +52,19 @@ class GoldenPlanSpec extends SparkSpec {
     "medallion_e2e" -> "Exchange SinglePartition=2, Window=2",
     "w6_rank_family" -> "Exchange hashpartitioning=1, Exchange rangepartitioning=1, Window=2",
     // minhashLshPairs' band rows come from its token-set checkpoint, so the
-    // band-key explode sits on both sides of the salted self-join
-    "x1_decontaminate_neardup" -> "BroadcastHashJoin=1, ShuffledHashJoin=3, BroadcastExchange=1, Exchange hashpartitioning=8, Exchange rangepartitioning=1, HashAggregate=4, Generate=4",
+    // band-key explode sits on both sides of the salted self-join; the
+    // candidate distinct runs on the first verify join's id_a exchange
+    "x1_decontaminate_neardup" -> "BroadcastHashJoin=1, ShuffledHashJoin=3, BroadcastExchange=1, Exchange hashpartitioning=7, Exchange rangepartitioning=1, HashAggregate=4, Generate=4",
     "x1_dedup_clusters" -> "SortMergeJoin=1, Exchange hashpartitioning=2, Exchange rangepartitioning=1",
     "x2_ann_ivf" -> "BroadcastNestedLoopJoin=2, SortMergeJoin=1, BroadcastExchange=2, Exchange hashpartitioning=6, Exchange rangepartitioning=1, HashAggregate=2, WindowGroupLimit=6, Window=3",
     "x2_embedding_cosine" -> "BroadcastNestedLoopJoin=1, BroadcastExchange=1, Exchange rangepartitioning=1",
     "x2_jaccard_dedup" -> "BroadcastHashJoin=3, BroadcastExchange=3, Exchange hashpartitioning=3, Exchange rangepartitioning=1, HashAggregate=6",
-    "x2_minhash_lsh" -> "ShuffledHashJoin=3, Exchange hashpartitioning=7, Exchange rangepartitioning=1, HashAggregate=2, Generate=3",
+    "x2_minhash_lsh" -> "ShuffledHashJoin=3, Exchange hashpartitioning=6, Exchange rangepartitioning=1, HashAggregate=2, Generate=3",
     "x2_simhash_pairs" -> "BroadcastHashJoin=1, BroadcastExchange=1, Exchange hashpartitioning=1, Exchange rangepartitioning=1, HashAggregate=2, Generate=2",
-    "x9_curation_e2e" -> "BroadcastHashJoin=4, SortMergeJoin=2, BroadcastExchange=4, Exchange hashpartitioning=6, Exchange rangepartitioning=1, Exchange SinglePartition=1, Exchange RoundRobinPartitioning=1, HashAggregate=6, ObjectHashAggregate=2, Window=1, Generate=2",
+    // exact dedup is a checkpoint read, the cluster finish pass is an RDD
+    // read, and ngramContamination's semi join needs no distinct on either
+    // side
+    "x9_curation_e2e" -> "BroadcastHashJoin=2, SortMergeJoin=4, BroadcastExchange=2, Exchange hashpartitioning=7, Exchange rangepartitioning=1, Exchange RoundRobinPartitioning=1, HashAggregate=2, Window=1, Generate=2",
     "x2_containment_join" -> "ShuffledHashJoin=3, Exchange hashpartitioning=7, Exchange rangepartitioning=1, HashAggregate=2",
     "x6_cluster_split" -> "SortMergeJoin=1, Exchange hashpartitioning=2, Exchange rangepartitioning=1",
     "x2_ann_pq_recall" -> "BroadcastNestedLoopJoin=1, BroadcastHashJoin=7, ShuffledHashJoin=1, SortMergeJoin=2, BroadcastExchange=8, Exchange hashpartitioning=13, Exchange SinglePartition=2, HashAggregate=12, WindowGroupLimit=8, Window=6, TakeOrderedAndProject=2",

@@ -70,7 +70,7 @@ class MinhashLshSpec extends SparkSpec {
     8L -> "entirely different words here",
     9L -> "")
 
-  test("minhashLshPairs checkpoints once: three jobs per call, pairs equal the model") {
+  test("minhashLshPairs checkpoints once: two jobs per call, pairs equal the model") {
     import spark.implicits._
     val sc = spark.sparkContext
     val docs = fixture.toDF("doc_id", "text")
@@ -90,11 +90,13 @@ class MinhashLshSpec extends SparkSpec {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    // one checkpoint, the token-set table: the map stages of the shingle
-    // distinct and of the doc_id repartition, then the checkpoint job. The
-    // seed cross-join pipeline submitted nine: two more checkpoints (band
-    // rows, token sets), each behind the map stages of its aggregations.
-    assert(jobs.get() == 3, s"one minhashLshPairs call submitted ${jobs.get()} jobs")
+    // one checkpoint, the token-set table: the map stage of the doc_id
+    // repartition (each document's token set is one projection before it),
+    // then the checkpoint job. The shingle-explode form added the map stage
+    // of its distinct (three); the seed cross-join pipeline submitted nine:
+    // two more checkpoints (band rows, token sets), each behind the map
+    // stages of its aggregations.
+    assert(jobs.get() == 2, s"one minhashLshPairs call submitted ${jobs.get()} jobs")
 
     val got = pairs.as[(Long, Long, Long, Long, Long)].collect().toSet
     val want = MinhashModel.lshPairs(fixture, 4, 4, 5)

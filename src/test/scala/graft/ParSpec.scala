@@ -4,7 +4,8 @@ import java.util.concurrent.{CompletionException, ExecutionException}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.SparkException
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.functions.{col, lit, udf}
 
 import graft.operators.Par
 
@@ -46,6 +47,20 @@ class ParSpec extends SparkSpec {
     assert(Par.pool.getActiveCount == 0, "a materialize leg is still running")
   }
 
+  test("Par.widen reads a scan's partition count from the plan: it compiles no class") {
+    val dir = TestSpark.tmpDir("widen-probe")
+    spark.range(8).coalesce(1).selectExpr("id", "cast(id as string) AS s").write.mode("overwrite").json(dir)
+    // a literal no other plan in this JVM carries: a compiled scan chain
+    // could not come from the codegen cache
+    val df = spark.read.json(dir).filter(col("id") =!= lit(System.nanoTime()))
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val widened = Par.widen(df)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles0,
+      "Par.widen compiled a class to read a partition count")
+    // one file scans as one partition, fewer than local[4]
+    assert(widened ne df, "a narrow one-partition scan must be widened")
+  }
+
   private def sourceRoot(tree: String) =
     java.nio.file.Paths.get(sys.props("user.dir"), "src", tree, "scala")
 
@@ -82,6 +97,14 @@ class ParSpec extends SparkSpec {
       Seq("ArrayOps.register(", "createOrReplaceTempFunction"))
     assert(hits.isEmpty, "build graft's functions with the typed graft.functions.ArrayOps " +
       "builders instead:\n" + hits.mkString("\n"))
+  }
+
+  test("source guard: library code sets no codegen setting") {
+    // the codegen cache size and switches belong to the caller's session:
+    // a chain that overflows the cache is made smaller, not the cache larger
+    val hits = sourceHits(Nil, Seq("spark.sql.codegen."))
+    assert(hits.isEmpty, "cut the generated classes instead of setting codegen:\n" +
+      hits.mkString("\n"))
   }
 
   test("source guard: every session is built by graft.LocalSession") {

@@ -28,6 +28,17 @@ class SketchTimeSeriesSpec extends SparkSpec {
     assert(hh.head.getLong(2) == hh.head.getLong(1))
   }
 
+  test("kmvQuantile: the exact side ranks the domain without a single-partition exchange") {
+    import spark.implicits._
+    val out = graft.operators.ext.Sketches.kmvQuantile((1L to 50L).toDF("x").repartition(3),
+      "x", 10, Seq((1, 4), (3, 4), (0, 4)))
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("SinglePartition"), plan)
+    // ceil-rank order statistics of 1..50; q = 0 has no rank and no row
+    assert(out.orderBy("q_num").collect().map(r => (r.getInt(0), r.getLong(3))).toSeq ==
+      Seq((1, 13L), (3, 38L)))
+  }
+
   test("kmvQuantile: exact column is the true quantile; estimate is partition-independent") {
     import spark.implicits._
     val vals = (1L to 100L)
