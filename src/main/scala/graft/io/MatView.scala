@@ -150,8 +150,8 @@ object MatView {
         // the inserted rows' extremes (tighten monotonically) and the
         // deleted rows' extremes (detect removal of the current extreme)
         // Materialized ONCE: the change feed of a merge/delete commit is the
-        // expensive frame here (two exceptAll passes over the touched dirs),
-        // and every downstream action — the isEmpty probe, the negative-row
+        // expensive frame here (a shuffle of the touched dirs' rows), and
+        // every downstream action — the isEmpty probe, the negative-row
         // guard, and applyCdcBatch's own upsert/delete consumption — would
         // otherwise re-execute it from scratch (measured 16.5 s of a 23 s
         // stream_matview bench row spent in refresh re-runs). The delta is

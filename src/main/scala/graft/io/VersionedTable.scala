@@ -2791,10 +2791,10 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
       keySets.foldLeft(base) { (df, setName) =>
         val keyCol = c.deleteKeys.getOrElse(setName,
           sys.error(s"manifest references delete set $setName with no recorded key column"))
-        df.join(
-          org.apache.spark.sql.functions.broadcast(
-            spark.read.parquet(dirPath(root, setName)).select(keyCol).distinct()),
-          Seq(keyCol), "left_anti")
+        val gone = org.apache.spark.sql.functions.broadcast(
+          spark.read.parquet(dirPath(root, setName)).select(keyCol).distinct())
+        // a USING join would move the key column first; keep the table's order
+        df.join(gone, df(keyCol) === gone(keyCol), "left_anti")
       }
     }.reduce(_.unionByName(_))
   }
@@ -3205,23 +3205,6 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
       }))
   }
 
-  /** Row-level CHANGE FEED of one commit (the public Delta CDF shape,
-    * computed read-side): Right(rows + `_change_type` ∈ {insert,
-    * update_preimage, update_postimage, delete}), Left(reason) when the
-    * commit is not expressible as row changes. The cost contract is the
-    * point: a rewrite commit is diffed over ONLY its touched region — the
-    * dirs it removed, added, or newly covered with merge-on-read deletes —
-    * so the feed costs O(rewritten data), the same class as the rewrite
-    * itself, never O(table). Classification per region key:
-    * row-multiset `EXCEPT ALL` both ways (survivor copies cancel exactly),
-    * then the key splits insert vs update_postimage on the new side and
-    * delete vs update_preimage on the old side. Appends are pure inserts
-    * ([[commitDelta]]); `compact`/`rename` emit NOTHING (their row set is
-    * identical by the verbs' contracts — and for compact, diffing would
-    * cost O(table), which is exactly what knowing the mode avoids);
-    * overwrite/rollback/clone refuse (whole-snapshot replacement has no
-    * bounded row-delta form).
-    */
   /** Commit modes whose row set is IDENTICAL to their parent's — compaction
     * (same rows, new layout) and the pure-metadata verbs. Their change feed
     * is empty by contract (diffing a compact would cost O(table), which is
@@ -3233,10 +3216,21 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     Set("compact", "rename", "constraint", "dropcol", "create", "generated", "widen",
       "properties", "set-layout", "default", "analyze", "alter")
 
+  /** Row-level CHANGE FEED of one commit (the public Delta CDF shape,
+    * computed read-side): Right(rows in the table's column order +
+    * `_change_type` ∈ {insert, update_preimage, update_postimage, delete}),
+    * Left(reason) when the commit is not expressible as row changes.
+    * Appends are pure inserts ([[commitDelta]]); [[metadataOnlyModes]] emit
+    * nothing; overwrite/rollback/clone refuse (whole-snapshot replacement
+    * has no bounded row-delta form). A rewrite commit is diffed
+    * ([[rowChanges]]) over ONLY its touched region — the dirs it removed,
+    * added, or newly covered with merge-on-read deletes — so the feed costs
+    * O(rewritten data), the same class as the rewrite itself, never O(table).
+    */
   private[graft] def changeFeedOfCommit(spark: SparkSession, root: String,
                                         fromC: Option[Commit], toC: Commit,
                                         keyCol: String): Either[String, DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     val ct = "_change_type"
     commitDelta(spark, root, fromC, toC) match {
       case Right(df) => return Right(df.withColumn(ct, lit("insert")))
@@ -3247,16 +3241,13 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     val f = fromC.getOrElse(return Left("a non-append first commit"))
     toC.mode match {
       case m if metadataOnlyModes.contains(m) =>
-        Right(toLogicalDf(toC,
-          scanDirs(spark, Nil, toC.partitionCols, toC.schemaDdl))
+        Right(toLogicalDf(toC, scanDirs(spark, Nil, toC.partitionCols, toC.schemaDdl))
           .withColumn(ct, lit("")).limit(0))
       case "merge" | "delete" | "delete-mor" | "delete-pos" | "update"
          | "delta-update" | "delta-delete" | "delta-merge" =>
-        // delta-DML commits (one positional vector + optionally one
-        // new-rows dir) diff over exactly their touched region like every
-        // other row-level mode: covChanged dirs re-scan under both
-        // coverages (survivor copies cancel in the EXCEPT ALL), the added
-        // dir is pure new-side rows — O(touched dirs), never O(table)
+        // delta-DML commits (one positional vector + optionally one new-rows
+        // dir) diff like every other row-level mode: covChanged dirs re-scan
+        // under both coverages, where their survivor copies cancel
         val fromDirs = f.dirs.toSet
         val removed = f.dirs.filterNot(toC.dirs.contains)
         val added = toC.dirs.filterNot(fromDirs.contains)
@@ -3269,33 +3260,42 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
         val neu = toLogicalDf(toC, scanWithDeletes(spark, root, toC, added ++ covChanged))
         if (old.columns.toSeq != neu.columns.toSeq)
           return Left("a schema change inside a rewrite commit")
-        // survivor copies are bit-identical rows on both sides and cancel;
-        // what remains is exactly the changed row multiset of the commit.
-        //
-        // The four frames below are SMALL (changed rows; distinct keys of
-        // the touched dirs) but expensive (each exceptAll scans both
-        // coverages), and each feeds TWO of the four classification
-        // branches — consumed lazily, a single action on the returned
-        // union re-executed every exceptAll and key scan per branch
-        // (~12 touched-dir scans per rewrite commit, re-paid on EVERY
-        // micro-batch re-plan of a streaming read). Checkpoint each once,
-        // together: they are mutually independent given old/neu. The
-        // full-width old/neu scans stay lazy — materializing those
-        // measured slower (MatView.refresh).
-        val Seq(changedNew, changedOld, oldKeys, newKeys) = graft.operators.Par.materialize(
-          neu.exceptAll(old), old.exceptAll(neu),
-          old.select(keyCol).distinct(), neu.select(keyCol).distinct())
-        Right(changedNew.join(oldKeys, Seq(keyCol), "left_anti")
-          .withColumn(ct, lit("insert"))
-          .unionByName(changedNew.join(oldKeys, Seq(keyCol), "left_semi")
-            .withColumn(ct, lit("update_postimage")))
-          .unionByName(changedOld.join(newKeys, Seq(keyCol), "left_semi")
-            .withColumn(ct, lit("update_preimage")))
-          .unionByName(changedOld.join(newKeys, Seq(keyCol), "left_anti")
-            .withColumn(ct, lit("delete"))))
+        Right(rowChanges(old, neu, keyCol))
       case other =>
         Left(s"a '$other' commit (whole-snapshot replacement has no row-level change form)")
     }
+  }
+
+  /** The row changes from multiset `old` to multiset `neu` (same columns,
+    * emitted in `old`'s order plus `_change_type`) as one lazy plan with one
+    * shuffle: old rows tagged −1 and new rows +1 hash-partition once on
+    * `keyCol`; per full row `net` = new − old copies, so survivor copies
+    * cancel (`EXCEPT ALL` both ways, in Spark's own aggregate form); a window
+    * on the same partitioning says whether the key has old rows and new
+    * rows (a NULL key has neither). Each row with `net ≠ 0` is emitted |net|
+    * times: a surplus new row is update_postimage if its key had old rows,
+    * else insert; a surplus old row update_preimage if the key has new rows,
+    * else delete.
+    */
+  private[graft] def rowChanges(old: DataFrame, neu: DataFrame, keyCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{abs, array_repeat, col, explode, lit, max, min, sum, when}
+    val (side, net) = ("__cdf_side", col("__cdf_net"))
+    val byKey = Window.partitionBy(col(keyCol))
+    val keyed = col(keyCol).isNotNull
+    val row = old.columns.toSeq.map(col)
+    old.withColumn(side, lit(-1)).unionByName(neu.withColumn(side, lit(1)))
+      .repartition(col(keyCol))
+      .groupBy(row: _*)
+      .agg(sum(side).as("__cdf_net"), min(side).as("__cdf_lo"), max(side).as("__cdf_hi"))
+      .withColumn("__cdf_had", keyed && min("__cdf_lo").over(byKey) < 0)
+      .withColumn("__cdf_has", keyed && max("__cdf_hi").over(byKey) > 0)
+      .filter(net =!= 0)
+      .withColumn("__cdf_copy", explode(array_repeat(lit(0), abs(net).cast("int"))))
+      .select(row :+ when(net > 0,
+        when(col("__cdf_had"), "update_postimage").otherwise("insert"))
+        .otherwise(when(col("__cdf_has"), "update_preimage").otherwise("delete"))
+        .as("_change_type"): _*)
   }
 
   /** Batch CHANGE FEED over a version range (Delta's `table_changes(...)`

@@ -3130,42 +3130,16 @@ class IoSpec extends SparkSpec {
       (3L, "insert", 20L, "p"),
       (4L, "update_preimage", 10L, "x"), (4L, "update_postimage", 10L, "X2")), events.toString)
     // plan boundedness: the merge commit's diff reads c1's dir (removed)
-    // and the rewrite dir (added) — never c0's or c2's untouched dirs.
-    // The classification frames localCheckpoint eagerly inside
-    // changeFeedOfCommit (r19), so the returned frame's inputFiles is empty
-    // (it reads RDD blocks); the scans now happen in the checkpoint jobs,
-    // whose executions a QueryExecutionListener observes — collect the
-    // file-relation inputs of every execution the call triggers.
-    val scannedQ = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.logical.foreach {
-          case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            lr.relation match {
-              case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                fs.location.inputFiles.foreach(scannedQ.add)
-              case _ => ()
-            }
-          case _ => ()
-        }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(ql)
-    val scanned = try {
-      VersionedTable.changeFeedOfCommit(spark, root,
-        Some(VersionedTable.commitAt(root, 3L).get),
-        VersionedTable.commitAt(root, 4L).get, "id")
-        .getOrElse(fail("expected a row-level form"))
-      // listener delivery is async; the four checkpoint jobs have finished
-      // (the call awaits them) but their onSuccess may still be in flight
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (scannedQ.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      import scala.jdk.CollectionConverters._
-      scannedQ.asScala.toSeq.distinct
-    } finally spark.listenerManager.unregister(ql)
-    assert(scanned.nonEmpty && scanned.forall(p => !p.contains("-c0/") && !p.contains("-c2/")),
+    // and the rewrite dir (added) — never c0's or c2's untouched dirs. The
+    // diff is one lazy plan, so the returned frame's input files are
+    // exactly the files it scans.
+    val scanned = VersionedTable.changeFeedOfCommit(spark, root,
+      Some(VersionedTable.commitAt(root, 3L).get),
+      VersionedTable.commitAt(root, 4L).get, "id")
+      .getOrElse(fail("expected a row-level form")).inputFiles.toSeq
+    // (data dirs are named <version>-<commitId>-<nonce>)
+    assert(scanned.exists(_.contains("-c1-")) && scanned.exists(_.contains("-m0-")) &&
+      scanned.forall(p => !p.contains("-c0-") && !p.contains("-c2-")),
       s"diff must scan only the touched region, scanned: $scanned")
     // a range crossing an overwrite refuses with the split hint
     VersionedTable.commit(Seq((99L, "z")).toDF("id", "s"), root, "overwrite", "ow")

@@ -473,6 +473,28 @@ class StreamingSpec extends SparkSpec {
     assert(lastPerKey == snap, s"feed-materialized $lastPerKey != snapshot $snap")
   }
 
+  test("versionedChangeFeed: rewrite commits keep the table's column order when the key is not first") {
+    import spark.implicits._
+    val root = TestSpark.tmpDir("vcdf-order-root")
+    graft.io.VersionedTable.commit(Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("s", "id"),
+      root, "append", "c0", statsCols = Seq("id"))                             // v1
+    graft.io.VersionedTable.mergeInto(spark, root,
+      Seq(("B2", 2L), ("d", 4L)).toDF("s", "id"), "id", "m0")                 // v2
+    graft.io.VersionedTable.deleteWhere(spark, root, Seq(3L).toDF("id"), "id", "d0") // v3
+    graft.io.VersionedTable.deleteWhereMor(spark, root, Seq(1L).toDF("id"), "id", "d1") // v4
+    graft.io.VersionedTable.commit(Seq(("e", 5L)).toDF("s", "id"), root, "append", "c1") // v5
+    val q = Streaming.versionedChangeFeed(spark, root, "id", startingVersion = Some(0L))
+      .writeStream.format("memory").queryName("vcdf_order").outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    val out = spark.table("vcdf_order")
+    assert(out.columns.toSeq == Seq("s", "id", "_change_type"), out.columns.toSeq)
+    val events = out.collect().map(r => (r.getString(2), r.getLong(1), r.getString(0))).toSet
+    assert(events == Set(
+      ("insert", 1L, "a"), ("insert", 2L, "b"), ("insert", 3L, "c"),
+      ("update_preimage", 2L, "b"), ("update_postimage", 2L, "B2"), ("insert", 4L, "d"),
+      ("delete", 3L, "c"), ("delete", 1L, "a"), ("insert", 5L, "e")), events.toString)
+  }
+
   test("versionedSource: schema change mid-stream refuses even under skipChangeCommits") {
     import spark.implicits._
     val root = TestSpark.tmpDir("vsrc-ren-root")
