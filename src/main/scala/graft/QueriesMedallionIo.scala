@@ -29,12 +29,10 @@ private[graft] object QueriesMedallionIo {
   /** The catalog storage-partitioned join behind `versioned_catalog_spj`
     * and `versioned_copart_join`: two catalog tables hive-partitioned on
     * o_orderpriority (built once per fixture dir), joined and aggregated
-    * on the key. Returns the aggregate and its executed plan.
+    * on the key, on the dir's catalog session `s` ([[onCatalog]]). Returns
+    * the aggregate and its executed plan.
     */
-  private def catalogSpj(s: SparkSession, dir: String): (DataFrame, String) = {
-    val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-    s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+  private def catalogSpj(s: SparkSession, dir: String, wh: String): (DataFrame, String) = {
     Fixtures.once(s, dir, "vt_cat_spj") {
       rmrf(s"$wh/spj")
       s.sql("CREATE NAMESPACE IF NOT EXISTS gq.spj")
@@ -1318,8 +1316,8 @@ private[graft] object QueriesMedallionIo {
     // as the driver-visible proof; at 100 TB this is the join where
     // neither side moves a byte. Oracle replays the join + aggregate.
     Q("versioned_copart_join",
-      (s, dir) => {
-        val (joined, plan) = catalogSpj(s, dir)
+      onCatalog { (s, dir, wh) =>
+        val (joined, plan) = catalogSpj(s, dir, wh)
         joined.withColumn("exchanges", lit("Exchange".r.findAllIn(plan).size.toLong))
           .orderBy("o_orderpriority")
       },
@@ -1370,7 +1368,7 @@ private[graft] object QueriesMedallionIo {
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // S17 — DSv2 TableCatalog SELECT (catalog/GraftCatalog — the native
-    // Spark catalog front door: `spark.sql.catalog.gq = GraftCatalog`,
+    // Spark catalog front door: the fixture dir's `gq` catalog ([[onCatalog]]),
     // then PLAIN SQL over `gq.ns.t` planned by Spark's own analyzer, no
     // graft parser involved). CTAS + INSERT build a two-band table whose
     // skipping index is DECLARED as a table property
@@ -1382,10 +1380,7 @@ private[graft] object QueriesMedallionIo {
     // below-threshold band. At 100 TB this is the integration that makes
     // index skipping automatic for every SQL consumer of the table.
     Q("versioned_catalog_select",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         val mid = Fixtures.once(s, dir, "vt_cat_sel") {
           rmrf(s"$wh/sel")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.sel")
@@ -1433,10 +1428,7 @@ private[graft] object QueriesMedallionIo {
     // state. Every statement is plain Spark SQL; every commit is the same
     // OCC manifest publish as the programmatic path.
     Q("versioned_catalog_insert",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_ins") {
           rmrf(s"$wh/ins")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.ins")
@@ -1482,8 +1474,8 @@ private[graft] object QueriesMedallionIo {
     // 100 TB this is the difference between joining two co-clustered
     // tables in place and shuffling both.
     Q("versioned_catalog_spj",
-      (s, dir) => {
-        val (joined, plan) = catalogSpj(s, dir)
+      onCatalog { (s, dir, wh) =>
+        val (joined, plan) = catalogSpj(s, dir, wh)
         joined
           .withColumn("exchanges", lit("Exchange".r.findAllIn(plan).size.toLong))
           .withColumn("keyed_scans", lit("GraftKeyedScan".r.findAllIn(plan).size.toLong))
@@ -1502,10 +1494,7 @@ private[graft] object QueriesMedallionIo {
     // SPJ shape at 100 TB: daily facts against a calendar/rates
     // dimension, neither side shuffling a byte.
     Q("versioned_spj_date",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_spjd") {
           rmrf(s"$wh/spjd")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.spjd")
@@ -1557,10 +1546,7 @@ private[graft] object QueriesMedallionIo {
     // own planner (the single-key TVF's composite gap, closed by the
     // DSv2 path).
     Q("versioned_copart_multikey",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_mk") {
           rmrf(s"$wh/mk")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.mk")
@@ -1606,10 +1592,7 @@ private[graft] object QueriesMedallionIo {
     // Unsupported shapes refuse loudly (canDeleteWhere = false), so the
     // table never deletes approximately.
     Q("versioned_catalog_delete",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         val (mid, dirsAfter, modeOk) = Fixtures.once(s, dir, "vt_cat_del") {
           rmrf(s"$wh/cdel")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.cdel")
@@ -1661,10 +1644,7 @@ private[graft] object QueriesMedallionIo {
     // pin the ledger's delta verbs; the oracle replays both statements as
     // plain SQL.
     Q("versioned_catalog_update",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         val (updMode, mrgMode) = Fixtures.once(s, dir, "vt_cat_upd") {
           rmrf(s"$wh/cru")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.cru")
@@ -1723,10 +1703,7 @@ private[graft] object QueriesMedallionIo {
     // shift). The oracle replays both updates over the raw table; the
     // read side's zero-join plan is pinned in GoldenPlanSpec.
     Q("versioned_catalog_update_dv",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         val (dirsPreserved, vectorForm) = Fixtures.once(s, dir, "vt_cat_udv") {
           rmrf(s"$wh/cudv")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.cudv")
@@ -1775,10 +1752,7 @@ private[graft] object QueriesMedallionIo {
     // ('refused_clean' pins version-unchanged + value-unchanged). The
     // oracle replays the legal update with the generation rule applied.
     Q("versioned_catalog_update_guarded",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         val (recomputed, refusedClean) = Fixtures.once(s, dir, "vt_cat_ugd") {
           rmrf(s"$wh/cugd")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.cugd")
@@ -1832,10 +1806,7 @@ private[graft] object QueriesMedallionIo {
     // single-threaded CatalogSpec asserts the actual 5→1 group prune via
     // the test seam.
     Q("versioned_catalog_dpp",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_dpp") {
           rmrf(s"$wh/cdpp")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.cdpp")
@@ -1880,10 +1851,7 @@ private[graft] object QueriesMedallionIo {
     // the .detail row count and .partitions cardinality against SQL the
     // oracle recomputes from the raw table.
     Q("versioned_catalog_meta",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_meta") {
           rmrf(s"$wh/cmeta")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.cmeta")
@@ -1934,10 +1902,7 @@ private[graft] object QueriesMedallionIo {
     // aggregation above the scan plans with ZERO Exchange (`exchanges`
     // pins it). No compact-before-join tax.
     Q("versioned_copart_mor",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_copart_mor") {
           val r = s"$wh/mor/o"
           rmrf(r)
@@ -3384,10 +3349,7 @@ private[graft] object QueriesMedallionIo {
     // OPTIMIZE + DESCRIBE HISTORY by NAME, and pins that an unresolvable
     // name refuses loudly instead of inventing a path.
     Q("versioned_sql_maintenance_named",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         val refused = Fixtures.once(s, dir, "vt_sql_maint_nm") {
           rmrf(s"$wh/smn")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.smn")
@@ -3432,10 +3394,7 @@ private[graft] object QueriesMedallionIo {
     // invariants — contiguity (min=1, max=n, sum=n(n+1)/2) — plus the
     // exact default/generated values.
     Q("versioned_ansi_ddl",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         val refused = Fixtures.once(s, dir, "vt_cat_ansi") {
           rmrf(s"$wh/ansi")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.ansi")
@@ -3483,11 +3442,8 @@ private[graft] object QueriesMedallionIo {
     // derivation from the raw table) and pins that all 4 hash buckets
     // materialized.
     Q("versioned_hidden_partitioning",
-      (s, dir) => {
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_hidden") {
-          val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-          s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-          s.conf.set("spark.sql.catalog.gq.warehouse", wh)
           rmrf(s"$wh/hp")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.hp")
           rd(s, dir, "orders").createOrReplaceTempView("cat_hp_orders")
@@ -3644,11 +3600,8 @@ private[graft] object QueriesMedallionIo {
     // (a priority rollup) is what the oracle recomputes from the raw
     // table — the daily "rebuild the serving aggregate in place" shape.
     Q("versioned_replace_table",
-      (s, dir) => {
+      onCatalog { (s, dir, wh) =>
         val (vPre, vPost, preRows, midRows, hiddenOk) = Fixtures.once(s, dir, "vt_replace") {
-          val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-          s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-          s.conf.set("spark.sql.catalog.gq.warehouse", wh)
           rmrf(s"$wh/rpl")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.rpl")
           rd(s, dir, "orders").createOrReplaceTempView("cat_rpl_orders")
@@ -3709,10 +3662,7 @@ private[graft] object QueriesMedallionIo {
     // undeclared column stays nullable (its count matches the oracle's
     // own). The declaration itself is driver-visible (`declared`).
     Q("versioned_not_null",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         val flags = Fixtures.once(s, dir, "vt_notnull") {
           rmrf(s"$wh/ansi/nn")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.ansi")
@@ -4422,10 +4372,7 @@ private[graft] object QueriesMedallionIo {
     // blocks all fall back to the ordinary scan (AggPushdownSpec pins
     // each refusal).
     Q("versioned_agg_pushdown",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_agg") {
           rmrf(s"$wh/agg")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.agg")
@@ -4476,10 +4423,7 @@ private[graft] object QueriesMedallionIo {
     // At 100 TB this is `ORDER BY ts DESC LIMIT 100` over years of
     // history reading one file instead of every file.
     Q("versioned_limit_topn",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_prune") {
           rmrf(s"$wh/prune")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.prune")
@@ -4525,10 +4469,7 @@ private[graft] object QueriesMedallionIo {
     // (double-accumulated dot product = DuckDB's list_dot_product over
     // DOUBLE lists; two-pointer sorted-overlap = list_intersect length).
     Q("versioned_catalog_function",
-      (s, dir) => {
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse",
-          s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}")
+      onCatalog { (s, dir, _) =>
         rd(s, dir, "embeddings").createOrReplaceTempView("cat_fn_emb")
         strCols(
           s.sql("SELECT vec_id, " +
@@ -4553,10 +4494,7 @@ private[graft] object QueriesMedallionIo {
     // extremes from the raw table: a drifting envelope (or a stats claim
     // on an un-indexed column) fails the hash.
     Q("versioned_colstats",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_cs") {
           rmrf(s"$wh/cs")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.cs")
@@ -4609,10 +4547,7 @@ private[graft] object QueriesMedallionIo {
     // evaluates ZERO per-row predicates, and its row count needs zero
     // data tasks.
     Q("versioned_partition_filter",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_pf") {
           rmrf(s"$wh/pf")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.pf")
@@ -4656,10 +4591,7 @@ private[graft] object QueriesMedallionIo {
     // (KeyGroupedPartitioning), not the V1 fallback. `filter_nodes` pins
     // the absent Filter node; `keyed` pins the scan shape.
     Q("versioned_partition_filter_date",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_pfd") {
           rmrf(s"$wh/pfd")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.pfd")
@@ -4706,10 +4638,7 @@ private[graft] object QueriesMedallionIo {
     // canonical "count the last N days of the fact table" query at any
     // scale. The probe reuses the week-partitioned fixture's layout.
     Q("versioned_partition_filter_range",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_pfr") {
           rmrf(s"$wh/pfr")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.pfr")
@@ -4763,21 +4692,20 @@ private[graft] object QueriesMedallionIo {
         val (root, disjoint, pruned) = Fixtures.once(s, dir, "vt_wrord") {
           val r = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_wrord_${dirTag(dir)}"
           rmrf(r)
-          val o = rd(s, dir, "orders").select(col("o_orderkey"),
+          def orders(ss: SparkSession) = rd(ss, dir, "orders").select(col("o_orderkey"),
             (col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").as("cents"))
+          val o = orders(s)
           graft.io.VersionedTable.commit(o.filter(col("o_orderkey") % 2 === 0),
             r, "append", "wo-seed", statsCols = Seq("o_orderkey"))
           s.sql(s"ALTER GRAFT '$r' WRITE ORDERED BY (o_orderkey)").collect()
           // the odd half arrives JUMBLED; AQE would rightly coalesce this
-          // small batch to one file — pin it off so the fixture shows the
-          // multi-file shape a production batch lands with
-          val ck = "spark.sql.adaptive.coalescePartitions.enabled"
-          val prev = s.conf.get(ck)
-          s.conf.set(ck, "false")
-          try graft.io.VersionedTable.commit(
-            o.filter(col("o_orderkey") % 2 === 1).repartition(8),
+          // small batch to one file — a private session pins it off so the
+          // fixture shows the multi-file shape a production batch lands with
+          val ws = s.newSession()
+          ws.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+          graft.io.VersionedTable.commit(
+            orders(ws).filter(col("o_orderkey") % 2 === 1).repartition(8),
             r, "append", "wo-odds", statsCols = Seq("o_orderkey"))
-          finally s.conf.set(ck, prev)
           val hist = graft.io.VersionedTable.history(r)
           val newDir = hist.last.dirs.filterNot(hist.head.dirs.contains).head
           val envRe = """o_orderkey:\[(-?\d+),(-?\d+)\]""".r
@@ -5007,10 +4935,7 @@ private[graft] object QueriesMedallionIo {
     // (`filter_nodes = 0`, `keyed = 1` pinned in the oracle row). The
     // hourly/15-min-bucket layout of a streaming landing table at 100 TB.
     Q("versioned_partition_filter_ts",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_pft") {
           rmrf(s"$wh/pft")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.pft")
@@ -5053,10 +4978,7 @@ private[graft] object QueriesMedallionIo {
     // time as recorded, no session-zone coupling) a multi-region 100 TB
     // ingest prefers.
     Q("versioned_partition_filter_ntz",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_pftn") {
           rmrf(s"$wh/pftn")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.pftn")
@@ -5100,10 +5022,7 @@ private[graft] object QueriesMedallionIo {
     // pushdown stays exact after DML). The oracle replays update,
     // delete, and grouping from the raw table.
     Q("versioned_dml_date",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_dmld") {
           rmrf(s"$wh/dmld")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.dmld")
@@ -5158,10 +5077,7 @@ private[graft] object QueriesMedallionIo {
     // and the partition count; the surviving GROUP BY itself runs through
     // the metadata aggregation (post-DDL composition).
     Q("versioned_partition_ddl",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_pddl") {
           rmrf(s"$wh/pddl")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.pddl")
@@ -5194,10 +5110,7 @@ private[graft] object QueriesMedallionIo {
     // The row dumps what the SCAN reports and oracles it against DuckDB
     // recomputing the same distinct counts from the raw table.
     Q("versioned_ndv_stats",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         Fixtures.once(s, dir, "vt_cat_ndv") {
           rmrf(s"$wh/ndv")
           s.sql("CREATE NAMESPACE IF NOT EXISTS gq.ndv")

@@ -129,22 +129,21 @@ private[graft] object QueriesStreaming {
     // last + gap <= floor_ms(max event time) - 1h.
     Q("stream_timer_sessions",
       (s, dir) => {
-        val batchSchema = rd(s, dir, "events").schema
-        val ev = s.readStream.schema(batchSchema)
+        // transformWithState needs the RocksDB state store: a private
+        // session carries it, so the caller's provider never changes
+        val ss = s.newSession()
+        ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        val batchSchema = rd(ss, dir, "events").schema
+        val ev = ss.readStream.schema(batchSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .withColumn("ingest_ts", expr(tsStampSql(batchSchema)))
           .select("user_id", "event_id", "ingest_ts")
         val name = s"graft_stream_sink_${streamSinkN.incrementAndGet()}"
-        val ck = "spark.sql.streaming.stateStore.providerClass"
-        val prior = s.conf.getOption(ck)
-        s.conf.set(ck,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val q = graft.streaming.Streaming.timerSessions(ev, 30, "1 hour")
-            .writeStream.format("memory").queryName(name).outputMode("append").start()
-          try q.processAllAvailable() finally q.stop()
-        } finally prior.fold(s.conf.unset(ck))(v => s.conf.set(ck, v))
-        s.table(name).orderBy("user_id", "session_start")
+        val q = graft.streaming.Streaming.timerSessions(ev, 30, "1 hour")
+          .writeStream.format("memory").queryName(name).outputMode("append").start()
+        try q.processAllAvailable() finally q.stop()
+        ss.table(name).orderBy("user_id", "session_start")
       },
       Some("""WITH x AS (SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
         |wmv AS (SELECT (max(tus) // 1000) * 1000 - 3600000000 AS wm FROM x),
@@ -615,10 +614,7 @@ private[graft] object QueriesStreaming {
     // delta batch; a snapshot re-delivery would make it v3+ and double
     // every count).
     Q("stream_catalog_source",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         rmrf(s"$wh/cstr")
         s.sql("CREATE NAMESPACE IF NOT EXISTS gq.cstr")
         rd(s, dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -664,10 +660,7 @@ private[graft] object QueriesStreaming {
     // re-delivery or a double-applied batch changes the version and every
     // count.
     Q("stream_catalog_pipeline",
-      (s, dir) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
-        s.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
-        s.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      onCatalog { (s, dir, wh) =>
         rmrf(s"$wh/cstp")
         s.sql("CREATE NAMESPACE IF NOT EXISTS gq.cstp")
         rd(s, dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")

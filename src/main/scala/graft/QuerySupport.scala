@@ -378,6 +378,34 @@ private[graft] object QuerySupport {
   def dirTag(dir: String): String =
     java.lang.Integer.toHexString(dir.hashCode)
 
+  /** A registry body over the fixture dir's `gq` catalog: the body gets the
+    * dir's catalog session, the dir and the catalog's warehouse root
+    * (`graft_catalog_wh_<dirTag>`), and runs its SQL and temp views there.
+    *
+    * The catalog session is a `newSession()` of the caller's, made once per
+    * (application, fixture dir). Spark instantiates a catalog on its first
+    * use in a session and caches it for the session's life, so writing
+    * `spark.sql.catalog.gq.warehouse` again at query time changes nothing:
+    * a second fixture dir in one session would read and write the first
+    * dir's warehouse. One private session per dir gives every dir its own
+    * catalog, and leaves the caller's config untouched. The sessions are
+    * kept apart from [[Fixtures]]: making one builds no data, so it must
+    * not mark a bench pass as fixture construction.
+    */
+  def onCatalog(body: (SparkSession, String, String) => DataFrame): (SparkSession, String) => DataFrame =
+    (s, dir) => {
+      val wh = s"${System.getProperty("java.io.tmpdir")}/graft_catalog_wh_${dirTag(dir)}"
+      val cs = catalogSessions.computeIfAbsent(s"${s.sparkContext.applicationId}:$dir", _ => {
+        val cs = s.newSession()
+        cs.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
+        cs.conf.set("spark.sql.catalog.gq.warehouse", wh)
+        cs
+      })
+      body(cs, dir, wh)
+    }
+
+  private val catalogSessions = new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
+
   /** Per-invocation compaction-target generation counter: each live
     * compaction rewrites into a fresh dir (the catalog swap retires the
     * previous one), so repeated passes never read and write one path.

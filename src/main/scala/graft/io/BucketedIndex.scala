@@ -52,8 +52,9 @@ object BucketedIndex {
     * the swap and forever after.
     *
     * The rewrite is SHUFFLE-FREE: with the bucketed scan forced
-    * (`autoBucketedScan.enabled=false` for the duration — by default Spark's
-    * planner disables bucketed reads when no operator "needs" the
+    * (`autoBucketedScan.enabled=false` on a private session that runs only
+    * the rewrite, so the caller's session keeps its setting — by default
+    * Spark's planner disables bucketed reads when no operator "needs" the
     * distribution, which would ALSO elide the repartition and leave
     * file-split tasks straddling buckets, fanning out one file per
     * (task, bucket)), each scan task reads exactly the accumulated files of
@@ -77,16 +78,14 @@ object BucketedIndex {
       .location.toString
     val tmp = table + "__compacting"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val autoPrev = spark.conf.get(autoKey)
-    spark.conf.set(autoKey, "false")
-    try {
-      spark.table(table)
-        .repartition(buckets, col(bucketCol))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-        .option("path", newPath).saveAsTable(tmp)
-    } finally spark.conf.set(autoKey, autoPrev)
+    val ws = spark.newSession()
+    ws.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    ws.catalog.setCurrentDatabase(spark.catalog.currentDatabase)
+    ws.table(table)
+      .repartition(buckets, col(bucketCol))
+      .write.mode("overwrite").format("parquet")
+      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
+      .option("path", newPath).saveAsTable(tmp)
     spark.sql(s"DROP TABLE $table")
     spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
     oldLoc

@@ -3016,6 +3016,18 @@ object VersionedTable extends VersionedTableRefs with VersionedTableIndex {
     * OPTIMIZATION_r19.md §11). On a REMOTE store (hdfs/s3/abfs) the
     * distributed job is the right call — each list is a network RTT — so
     * non-local paths keep Spark's default behaviour untouched.
+    *
+    * This is the one place in graft that writes the config of a session it
+    * did not make. Spark's `InMemoryFileIndex.bulkListLeafFiles` reads the
+    * threshold only from the session's `SQLConf`, and `DataFrameReader` has
+    * no option for it, so there is no per-read form; and the relations the
+    * body builds must belong to the caller's session, so a private session
+    * cannot stand in. The cost is a race: the key is saved, set and
+    * restored around the body, so another thread reading or listing on the
+    * same session meanwhile sees `Int.MaxValue`, and two overlapping calls
+    * can interleave their save and restore, leaving one of them listing
+    * with Spark's default or the session holding `Int.MaxValue` after both
+    * return.
     */
   private def withDriverListing[T](spark: SparkSession, paths: Seq[String])(body: => T): T = {
     val local = paths.forall { p =>

@@ -6,14 +6,15 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{broadcast, col}
 
+import graft.io.VersionedTable
 import graft.operators.Relational
 import graft.operators.ext.{Dedup, TextAnalysis}
 
-/** The curation chain's generated classes fit Spark's default codegen cache
-  * (100 entries, in 4 LRU segments of 25; a whole-stage class takes one
-  * entry on the driver and one on the executor). A chain that overflows one
-  * segment compiles that segment's classes again on every pass, however
-  * often it runs.
+/** The curation chain's and the versioned DML script's generated classes
+  * fit Spark's default codegen cache (100 entries, in 4 LRU segments of 25;
+  * a whole-stage class takes one entry on the driver and one on the
+  * executor). A chain that overflows one segment compiles that segment's
+  * classes again on every pass, however often it runs.
   */
 class CodegenCacheSpec extends SparkSpec {
 
@@ -77,6 +78,44 @@ class CodegenCacheSpec extends SparkSpec {
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
     }
     val compiles = Seq.fill(3)(pass())
+    assert(compiles.head > 0, "the first pass compiled nothing: the probe is not counting")
+    assert(compiles(2) <= 5, s"compiles per pass: ${compiles.mkString(", ")}")
+  }
+
+  test("versioned DML script: the third pass in one JVM compiles at most 5 classes at the default codegen cache") {
+    import spark.implicits._
+    val dir = TestSpark.tmpDir("codegen-cache-dml")
+    val rnd = new Random(11)
+    // batches as JSON lines read with a fixed schema, as a writer hands them over
+    def batch(name: String, ids: Seq[Long]): Unit =
+      ids.map(i => (i, s"c${rnd.nextInt(8)}", rnd.nextInt(1000000).toLong,
+          rnd.alphanumeric.take(40).mkString))
+        .toDF("id", "cat", "amount", "note").coalesce(1).write.json(s"$dir/$name")
+    batch("base", 0L until 300L)
+    batch("merge", (0L until 300L by 7) ++ (300L until 320L))
+    batch("update", 1L until 300L by 11)
+    batch("delete", 2L until 300L by 13)
+    def read(name: String) =
+      spark.read.schema("id BIGINT, cat STRING, amount BIGINT, note STRING").json(s"$dir/$name")
+    def changes(root: String, v: Long): Map[String, Int] =
+      VersionedTable.readChangeFeed(spark, root, v - 1, v, "id")
+        .select("_change_type").as[String].collect().groupBy(identity).map { case (k, v) => k -> v.length }
+    def pass(i: Int): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val root = s"$dir/table-$i"
+      VersionedTable.commit(read("base"), root, "append", "base", statsCols = Seq("id"))
+      val (vm, _, _) = VersionedTable.mergeInto(spark, root, read("merge"), "id", "merge",
+        statsCols = Seq("id"))
+      assert(changes(root, vm) == Map("insert" -> 20, "update_preimage" -> 43, "update_postimage" -> 43))
+      val (vu, _, _) = VersionedTable.updateWhere(spark, root, read("update"), "id",
+        Map("amount" -> "amount + 7"), "update", statsCols = Seq("id"))
+      assert(changes(root, vu) == Map("update_preimage" -> 28, "update_postimage" -> 28))
+      val (vd, _, _) = VersionedTable.deleteWhere(spark, root, read("delete"), "id", "delete",
+        statsCols = Seq("id"))
+      assert(changes(root, vd) == Map("delete" -> 23))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val compiles = (0 until 3).map(pass)
     assert(compiles.head > 0, "the first pass compiled nothing: the probe is not counting")
     assert(compiles(2) <= 5, s"compiles per pass: ${compiles.mkString(", ")}")
   }

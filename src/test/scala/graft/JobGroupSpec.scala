@@ -1,14 +1,22 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{JobResult, JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, udf}
 
 import graft.io.VersionedTable
 import graft.operators.Par
 import graft.operators.ext.Dedup
+
+object JobGroupSpec {
+  /** Rows of the slow legs that finished their sleep. */
+  val rowsDone = new AtomicInteger
+}
 
 /** Cancellation reach: every Spark job an engine call submits — including
   * the overlapped checkpoint jobs of a multi-frame materialization — must
@@ -76,5 +84,51 @@ class JobGroupSpec extends SparkSpec {
     // the calls still answer correctly
     assert(feed == Set(("update_preimage", 10L), ("update_postimage", 10L), ("insert", 3L)))
     assert(pairs == Set((1L, 2L)))
+  }
+
+  test("cancelling the caller's job group while both legs of a materialize run stops both and rethrows") {
+    val sc = spark.sparkContext
+    val group = "cancel-overlap"
+    val started = new ConcurrentLinkedQueue[Integer]()
+    val ended = new ConcurrentHashMap[Integer, JobResult]()
+    val cancelled = new AtomicBoolean
+    val startedAfterCancel = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties.getProperty("spark.jobGroup.id") == group) {
+          if (cancelled.get) startedAfterCancel.incrementAndGet()
+          started.add(js.jobId)
+        }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (started.contains(je.jobId)) ended.put(je.jobId, je.jobResult)
+    }
+    def slow() = spark.range(0, 2, 1, 2).select(udf { (x: Long) =>
+      Thread.sleep(5000); JobGroupSpec.rowsDone.incrementAndGet(); x
+    }.apply(col("id")))
+    JobGroupSpec.rowsDone.set(0)
+    sc.addSparkListener(listener)
+    val caller = Executors.newSingleThreadExecutor()
+    try {
+      val call = caller.submit { () =>
+        sc.setJobGroup(group, "cancel while legs overlap", interruptOnCancel = true)
+        try Par.materialize(slow(), slow()) finally sc.clearJobGroup()
+      }
+      val deadline = System.nanoTime() + 20_000_000_000L
+      while (started.size < 2 && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.size == 2, s"both legs' jobs never started: ${started.asScala}")
+      cancelled.set(true)
+      sc.cancelJobGroup(group)
+      val e = intercept[ExecutionException](call.get(30, TimeUnit.SECONDS)).getCause
+      assert(e.isInstanceOf[SparkException] && e.getMessage.contains("cancelled"), e)
+      val endDeadline = System.nanoTime() + 10_000_000_000L
+      while (ended.size < started.size && System.nanoTime() < endDeadline) Thread.sleep(10)
+    } finally {
+      caller.shutdown()
+      sc.removeSparkListener(listener)
+    }
+    assert(ended.size == started.size, s"jobs ${started.asScala} ended only ${ended.asScala}")
+    assert(!ended.values.asScala.exists(_ == JobSucceeded), s"a leg finished: ${ended.asScala}")
+    assert(startedAfterCancel.get == 0, "a job of the group started after the cancel")
+    assert(JobGroupSpec.rowsDone.get == 0, s"${JobGroupSpec.rowsDone.get} rows finished")
   }
 }

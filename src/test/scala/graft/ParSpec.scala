@@ -69,19 +69,24 @@ class ParSpec extends SparkSpec {
     */
   private def sourceHits(allowed: Seq[String], banned: Seq[String],
                          tree: String = "main"): Seq[String] = {
-    import java.nio.file.{Files, Path, Paths}
+    val home = sourceRoot(tree).resolve(java.nio.file.Paths.get("graft", allowed: _*))
+    for {
+      (f, lines) <- sourceFiles(tree) if f != home
+      (line, i) <- lines.zipWithIndex
+      b <- banned if line.contains(b)
+    } yield s"${sourceRoot(tree).relativize(f)}:${i + 1}: $b"
+  }
+
+  /** Every `.scala` file in `src/<tree>/scala` with its lines. */
+  private def sourceFiles(tree: String): Seq[(java.nio.file.Path, IndexedSeq[String])] = {
+    import java.nio.file.Files
     import scala.jdk.CollectionConverters._
     val root = sourceRoot(tree)
     assert(Files.isDirectory(root), s"$root is not the $tree source tree")
-    val home = root.resolve(Paths.get("graft", allowed: _*))
     val files = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p != home).toSeq
+      .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 10, s"found only ${files.size} source files under $root")
-    for {
-      f: Path <- files
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      b <- banned if line.contains(b)
-    } yield s"${root.relativize(f)}:${i + 1}: $b"
+    files.map(f => f -> Files.readAllLines(f).asScala.toIndexedSeq)
   }
 
   test("source guard: eager checkpoints and overlapped jobs go through Par only") {
@@ -104,6 +109,41 @@ class ParSpec extends SparkSpec {
     // a chain that overflows the cache is made smaller, not the cache larger
     val hits = sourceHits(Nil, Seq("spark.sql.codegen."))
     assert(hits.isEmpty, "cut the generated classes instead of setting codegen:\n" +
+      hits.mkString("\n"))
+  }
+
+  test("source guard: only QuerySupport.onCatalog sets a catalog") {
+    // a catalog is loaded once per session, so a later write of its keys
+    // is ignored: one private session per fixture dir carries them
+    val keys = Seq("conf.set(\"", "conf.set(s\"", "config(\"").map(_ + "spark.sql.catalog.")
+    val hits = sourceHits(Seq("QuerySupport.scala"), keys)
+    assert(hits.isEmpty, "run catalog SQL through graft.QuerySupport.onCatalog instead:\n" +
+      hits.mkString("\n"))
+    val home = java.nio.file.Files.readString(
+      sourceRoot("main").resolve("graft/QuerySupport.scala")).split("\n").toIndexedSeq
+    val writes = home.indices.filter(i => keys.exists(home(i).contains))
+    assert(writes.size == 2 && writes.forall { i =>
+      home.take(i).reverse.find(_.contains(" def ")).exists(_.contains("def onCatalog("))
+    }, s"QuerySupport.scala sets catalog keys outside onCatalog, at lines ${writes.map(_ + 1)}")
+  }
+
+  test("source guard: no code saves, sets and restores a session's config around its work") {
+    // a concurrent reader of the session would see the temporary value:
+    // work that needs another setting runs on a session it made itself.
+    // withDriverListing is the one exception (see its scaladoc).
+    val write = """(\w+)\.conf\.(?:set|unset)\(""".r
+    val fresh = """val (\w+) = .*\bnewSession\(\)""".r
+    val hits = for {
+      (f, lines) <- sourceFiles("main")
+      made = lines.flatMap(l => fresh.findFirstMatchIn(l).map(_.group(1))).toSet
+      (line, i) <- lines.zipWithIndex
+      recv <- write.findAllMatchIn(line).map(_.group(1)).toSeq.distinct
+      if !made(recv) && lines.slice(math.max(0, i - 3), i + 1).exists(_.contains("finally")) &&
+        lines.slice(math.max(0, i - 20), i).exists(l =>
+          l.contains(s"$recv.conf.get(") || l.contains(s"$recv.conf.getOption("))
+      if !lines.take(i).reverse.find(_.contains(" def ")).exists(_.contains("def withDriverListing["))
+    } yield s"${sourceRoot("main").relativize(f)}:${i + 1}: $recv.conf"
+    assert(hits.isEmpty, "set the value on a private session (newSession()) instead:\n" +
       hits.mkString("\n"))
   }
 
