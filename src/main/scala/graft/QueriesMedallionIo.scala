@@ -578,26 +578,26 @@ private[graft] object QueriesMedallionIo {
         "CAST(2 AS BIGINT) AS v1_cols, TRUE AS type_change_rejected " +
         "FROM orders GROUP BY 1 ORDER BY 1")),
 
-    // S17 — bare `ALTER ... ADD COLUMN c <type>` (r16 judge item 1): the
-    // metadata-only NULL-backfill widening, Delta/ANSI's most common DDL,
-    // through the SQL front door. v1 holds even keys under the 2-column
-    // schema; the ALTER widens the DECLARED schema without touching a
-    // byte (v2); v3 appends odd keys carrying the new column. The probe
+    // S17 — bare `ALTER TABLE ... ADD COLUMN c <type>` (r16 judge item 1):
+    // the metadata-only NULL-backfill widening, Delta/ANSI's most common
+    // DDL, through the fixture dir's catalog. v1 holds even keys under
+    // the 2-column schema; the ALTER widens the DECLARED schema without
+    // touching a byte (v2); v3 appends odd keys carrying the new column. The probe
     // reads the merged snapshot — pre-widening rows MUST read NULL for the
     // added column (cust_present counts only post-widening rows) — and
     // pins the time-travel eras: asOf(1) reads the narrow 2-column shape,
     // asOf(2) reads 3 columns with the backfill all-NULL (v2_cust_nonnull
     // = 0 — the ALTER published no data).
     Q("versioned_add_column",
-      (s, dir) => {
+      onCatalog { (s, dir, wh) =>
         val root = Fixtures.once(s, dir, "vt_addcol") {
-          val r = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_addcol_${dirTag(dir)}"
+          val r = s"$wh/addcol/t"
           rmrf(r)
           val o = rd(s, dir, "orders")
           graft.io.VersionedTable.commit(
             o.filter(col("o_orderkey") % 2 === 0).select("o_orderkey", "o_orderpriority"),
             r, "overwrite", "addcol-v1")
-          s.sql(s"ALTER GRAFT '$r' ADD COLUMN o_custkey bigint").collect()
+          s.sql("ALTER TABLE gq.addcol.t ADD COLUMN o_custkey bigint")
           graft.io.VersionedTable.commit(
             o.filter(col("o_orderkey") % 2 === 1)
               .select("o_orderkey", "o_orderpriority", "o_custkey"),
@@ -988,8 +988,8 @@ private[graft] object QueriesMedallionIo {
         |FROM d WHERE note IS NULL GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // S17 — DESCRIBE DETAIL (VersionedTable.describeDetail — Delta's
-    // one-row table-summary verb, SQL form DESCRIBE DETAIL GRAFT): the
-    // deterministic capacity facts of a snapshot — dir/file/footer-row
+    // one-row table-summary verb, SQL form `SELECT * FROM
+    // cat.db.t.detail`): the deterministic capacity facts of a snapshot — dir/file/footer-row
     // counts (zero Spark jobs), logical columns THROUGH the rename
     // mapping, declared reader features, and the pending merge-on-read
     // debt. The fixture exercises the feature surface: banded appends
@@ -1199,24 +1199,24 @@ private[graft] object QueriesMedallionIo {
         |FROM orders CROSS JOIN m WHERE o_orderkey > b3
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // S17 — COLUMN DEFAULT VALUES (VersionedTable.addColumnWithDefault —
-    // the public Delta/Spark ADD COLUMN ... DEFAULT table feature): the
-    // column arrives METADATA-ONLY on a table that already holds half of
+    // S17 — COLUMN DEFAULT VALUES (`ALTER TABLE ... ADD COLUMN ...
+    // DEFAULT` on the fixture dir's catalog — the public Delta/Spark table
+    // feature): the column arrives METADATA-ONLY on a table that already holds half of
     // orders; era-1 rows read the DEFAULT (not NULL) through per-dir
     // backfill, the era-2 append carries explicit values that override
     // it, and a third band LACKING the column materializes the default
     // at write. One aggregate proves all three eras; the oracle replays
     // them as CASE over key bands.
     Q("versioned_column_default",
-      (s, dir) => {
+      onCatalog { (s, dir, wh) =>
         val root = Fixtures.once(s, dir, "vt_coldef") {
-          val r = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_coldef_${dirTag(dir)}"
+          val r = s"$wh/coldef/t"
           rmrf(r)
           val o = rd(s, dir, "orders").select("o_orderkey", "o_orderpriority")
           val mx = o.agg(max(col("o_orderkey"))).head().getLong(0)
           graft.io.VersionedTable.commit(o.filter(col("o_orderkey") * 3 <= mx),
             r, "append", "cd-b1", statsCols = Seq("o_orderkey"))
-          s.sql(s"ALTER GRAFT '$r' ADD COLUMN region string DEFAULT ('emea')").collect()
+          s.sql("ALTER TABLE gq.coldef.t ADD COLUMN region string DEFAULT 'emea'")
           graft.io.VersionedTable.commit(
             o.filter(col("o_orderkey") * 3 > mx && col("o_orderkey") * 3 <= 2 * mx)
               .withColumn("region", lit("apac")),
@@ -1238,9 +1238,10 @@ private[graft] object QueriesMedallionIo {
         |SELECT region, count(*) AS n, CAST(sum(o_orderkey) AS BIGINT) AS key_sum
         |FROM d GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // S17 — SHOW PARTITIONS (VersionedTable.showPartitions + the SQL
-    // statement): the distinct hive partition-value combinations of the
-    // snapshot with per-value file counts, from a DIRECTORY-level walk —
+    // S17 — SHOW PARTITIONS (VersionedTable.showPartitions, in SQL the
+    // catalog's `cat.db.t.partitions` table): the distinct hive
+    // partition-value combinations of the snapshot with per-value file
+    // counts, from a DIRECTORY-level walk —
     // O(partition values), zero Spark jobs, the operator's "what
     // partitions exist" question answered from the layout alone. File
     // counts are parallelism-dependent, so the oracle-gated shape is the
@@ -1326,33 +1327,35 @@ private[graft] object QueriesMedallionIo {
         |  CAST(0 AS BIGINT) AS exchanges
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // S17 — SQL CTAS + INSERT (plans/GraftSqlParser CREATE GRAFT ... AS /
-    // INSERT INTO GRAFT — the table-creation statements closing the SQL
-    // lifecycle: a table is now creatable, loadable, queryable,
-    // maintainable, and restorable without leaving SQL). CTAS bootstraps
-    // from a query over the raw parquet with the hive layout AND the
-    // skipping index declared in the statement; INSERT INTO appends a
-    // second band through the standard commit path, inheriting the
-    // CURRENT layout and index from the snapshot itself (indexedCols), so
-    // a SQL append can neither break the layout contract nor degrade the
-    // index — scanned_dirs proves the CTAS-declared stats prune the
-    // insert's band. Oracle replays the two-band union.
+    // S17 — SQL CTAS + INSERT through the fixture dir's catalog (`CREATE
+    // TABLE ... PARTITIONED BY ... TBLPROPERTIES ('graft.stats.columns' =
+    // ...) AS SELECT` / `INSERT INTO` — the table-creation statements
+    // closing the SQL lifecycle: a table is creatable, loadable,
+    // queryable, maintainable, and restorable without leaving SQL). CTAS
+    // bootstraps from a query over the raw parquet with the hive layout
+    // AND the skipping index declared in the statement; INSERT INTO
+    // appends a second band through the standard commit path, inheriting
+    // the CURRENT layout and index from the snapshot itself, so a SQL
+    // append can neither break the layout contract nor degrade the index
+    // — scanned_dirs proves the CTAS-declared stats prune the insert's
+    // band. Oracle replays the two-band union.
     Q("versioned_sql_insert_ctas",
-      (s, dir) => {
-        val (root, scanned, total) = Fixtures.once(s, dir, "vt_ctas") {
-          val r = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_ctas_${dirTag(dir)}"
-          rmrf(r)
+      onCatalog { (s, dir, wh) =>
+        val root = s"$wh/ctas/t"
+        val (scanned, total) = Fixtures.once(s, dir, "vt_ctas") {
+          rmrf(s"$wh/ctas")
+          s.sql("CREATE NAMESPACE IF NOT EXISTS gq.ctas")
           rd(s, dir, "orders").createOrReplaceTempView("ctas_orders")
           val mid = rd(s, dir, "orders").agg(max(col("o_orderkey"))).head().getLong(0) / 2
-          s.sql(s"CREATE GRAFT '$r' PARTITIONED BY (o_orderpriority) " +
-            s"STATS BY (o_orderkey) AS (SELECT o_orderkey, o_orderpriority, " +
-            s"o_totalprice FROM ctas_orders WHERE o_orderkey <= $mid)").collect()
-          s.sql(s"INSERT INTO GRAFT '$r' FROM (SELECT o_orderkey, " +
-            s"o_orderpriority, o_totalprice FROM ctas_orders " +
-            s"WHERE o_orderkey > $mid)").collect()
-          val kept = graft.io.VersionedTable.planRange(r, "o_orderkey", mid + 1, Long.MaxValue)
-          (r, kept.size.toLong,
-            graft.io.VersionedTable.latestCommit(r).get.dirs.size.toLong)
+          s.sql("CREATE TABLE gq.ctas.t PARTITIONED BY (o_orderpriority) " +
+            "TBLPROPERTIES ('graft.stats.columns' = 'o_orderkey') " +
+            "AS SELECT o_orderkey, o_orderpriority, o_totalprice " +
+            s"FROM ctas_orders WHERE o_orderkey <= $mid")
+          s.sql("INSERT INTO gq.ctas.t SELECT o_orderkey, o_orderpriority, " +
+            s"o_totalprice FROM ctas_orders WHERE o_orderkey > $mid")
+          val kept = graft.io.VersionedTable.planRange(root, "o_orderkey", mid + 1, Long.MaxValue)
+          (kept.size.toLong,
+            graft.io.VersionedTable.latestCommit(root).get.dirs.size.toLong)
         }
         graft.io.VersionedTable.read(s, root)
           .groupBy("o_orderpriority")
@@ -1965,20 +1968,23 @@ private[graft] object QueriesMedallionIo {
         |  (SELECT count(*) FROM orders WHERE o_orderkey % 2 = 0) AS v1_rows
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // S17 — SQL DML FRONT DOOR (plans/GraftSqlParser UPDATE/DELETE GRAFT
-    // statements — the Delta DML statement surface through the injected
-    // parser): a SQL UPDATE re-prices band 1 through updateRange (ONE dir
-    // rewritten, three by reference) and a SQL DELETE drops band 4
+    // S17 — SQL DML FRONT DOORS: `UPDATE GRAFT` (plans/GraftSqlParser)
+    // re-prices band 1 through updateRange (ONE dir rewritten, three by
+    // reference) and the catalog's `DELETE FROM` drops band 4
     // metadata-only through deleteRange's contained-dir class — BOTH
     // pruning outcomes depend on the front door passing the snapshot's
     // indexed columns through (indexedCols), the property that keeps
     // SQL-issued rewrites from silently degrading the skipping index.
-    // Statement outputs (dirs rewritten/dropped/total) ride alongside the
-    // surviving rows; the oracle replays the DML as CASE WHEN + filter.
+    // The UPDATE's output row gives its dirs rewritten/total; DELETE FROM
+    // returns no rows, so its dirs dropped/rewritten come from the delete
+    // commit's manifest against its parent (a removed dir whose envelope
+    // lies inside the range dropped, any other removed dir rewrote). They
+    // ride alongside the surviving rows; the oracle replays the DML as
+    // CASE WHEN + filter.
     Q("versioned_sql_dml",
-      (s, dir) => {
+      onCatalog { (s, dir, wh) =>
         val (root, counts) = Fixtures.once(s, dir, "vt_sqldml") {
-          val r = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_sqldml_${dirTag(dir)}"
+          val r = s"$wh/sqldml/t"
           rmrf(r)
           val o = rd(s, dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")
           val mx = o.agg(max(col("o_orderkey"))).head().getLong(0)
@@ -1992,10 +1998,14 @@ private[graft] object QueriesMedallionIo {
           }
           val u = s.sql(s"UPDATE GRAFT '$r' SET o_totalprice = o_totalprice + 500.0 " +
             s"WHERE o_orderkey BETWEEN 0 AND $b1").head()
-          val d = s.sql(s"DELETE GRAFT '$r' WHERE o_orderkey BETWEEN ${b3 + 1} AND $mx")
-            .head()
+          s.sql(s"DELETE FROM gq.sqldml.t WHERE o_orderkey BETWEEN ${b3 + 1} AND $mx")
+          val del = graft.io.VersionedTable.latestCommit(r).get
+          val parent = graft.io.VersionedTable.commitAt(r, del.version - 1).get
+          val removed = parent.dirs.filterNot(del.dirs.toSet)
+          val dropped = removed.count(d => parent.stats.get(d).flatMap(_.get("o_orderkey"))
+            .exists { case (lo, hi) => lo > b3 && hi <= mx })
           (r, Seq(u.getInt(1).toLong, u.getInt(2).toLong,
-            d.getInt(1).toLong, d.getInt(2).toLong))
+            dropped.toLong, (removed.size - dropped).toLong))
         }
         graft.io.VersionedTable.read(s, root)
           .groupBy("o_orderpriority")
@@ -2556,26 +2566,27 @@ private[graft] object QueriesMedallionIo {
         |FROM orders WHERE o_orderkey % 2 = 0
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // S15+S17 — the ALTER GRAFT DDL family (GraftAlterCommand): RENAME
-    // COLUMN (mapping change), ALTER COLUMN TYPE (metadata-only int →
-    // bigint widening), and ADD CONSTRAINT issued back-to-back through
-    // SQL — three metadata commits on top of the data commit
-    // (versions_total = 4, driver-visible), the widened column summed
-    // under its new 64-bit type and the renamed column grouping under
-    // its new name. The verbs are pinned individually by their own rows;
-    // what this row pins is the SQL DDL surface reaching them.
+    // S15+S17 — the ALTER TABLE DDL family on the fixture dir's catalog
+    // (GraftCatalog.alterTable): RENAME COLUMN (mapping change), ALTER
+    // COLUMN TYPE (metadata-only int → bigint widening), and ADD
+    // CONSTRAINT issued back-to-back through SQL — three metadata commits
+    // on top of the data commit (versions_total = 4, driver-visible), the
+    // widened column summed under its new 64-bit type and the renamed
+    // column grouping under its new name. The verbs are pinned
+    // individually by their own rows; what this row pins is the SQL DDL
+    // surface reaching them.
     Q("versioned_sql_ddl_family",
-      (s, dir) => {
+      onCatalog { (s, dir, wh) =>
         val (root, nVersions) = Fixtures.once(s, dir, "vt_sql_ddl_family") {
-          val r = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_sqlddl_${dirTag(dir)}"
+          val r = s"$wh/sqlddl/t"
           rmrf(r)
           val o = rd(s, dir, "orders").select("o_orderkey", "o_orderpriority")
             .withColumn("o_flag", (col("o_orderkey") % 100).cast("int"))
           graft.io.VersionedTable.commit(o, r, "append", "dd-a",
             statsCols = Seq("o_orderkey"))
-          s.sql(s"ALTER GRAFT '$r' RENAME COLUMN o_orderpriority TO priority").collect()
-          s.sql(s"ALTER GRAFT '$r' ALTER COLUMN o_flag TYPE bigint").collect()
-          s.sql(s"ALTER GRAFT '$r' ADD CONSTRAINT key_pos CHECK (o_orderkey >= 0)").collect()
+          s.sql("ALTER TABLE gq.sqlddl.t RENAME COLUMN o_orderpriority TO priority")
+          s.sql("ALTER TABLE gq.sqlddl.t ALTER COLUMN o_flag TYPE bigint")
+          s.sql("ALTER TABLE gq.sqlddl.t ADD CONSTRAINT key_pos CHECK (o_orderkey >= 0)")
           (r, graft.io.VersionedTable.history(r).size.toLong)
         }
         graft.io.VersionedTable.read(s, root)
@@ -3308,14 +3319,15 @@ private[graft] object QueriesMedallionIo {
     // S17 — SQL MAINTENANCE FRONT DOOR (plans/GraftSqlParser via
     // SparkSessionExtensions.injectParser — the Delta-style statement
     // surface): `OPTIMIZE GRAFT '<root>' TARGET n` compacts through the
-    // injected parser, and the served result is `DESCRIBE HISTORY GRAFT`
-    // AS SQL — the whole commit ledger (two appends + the SQL-issued
-    // compaction) replayed row-for-row by the DuckDB oracle. Every other
-    // statement delegates to Spark's parser untouched.
+    // injected parser, and the served result is the catalog's
+    // `cat.db.t.history` metadata table AS SQL — the whole commit ledger
+    // (two appends + the SQL-issued compaction) replayed row-for-row by
+    // the DuckDB oracle. Every other statement delegates to Spark's
+    // parser untouched.
     Q("versioned_sql_maintenance",
-      (s, dir) => {
-        val root = Fixtures.once(s, dir, "vt_sql_maint") {
-          val r = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_sqlm_${dirTag(dir)}"
+      onCatalog { (s, dir, wh) =>
+        Fixtures.once(s, dir, "vt_sql_maint") {
+          val r = s"$wh/sqlm/t"
           rmrf(r)
           val o = rd(s, dir, "orders").select("o_orderkey", "o_orderpriority")
           graft.io.VersionedTable.commit(o.filter(col("o_orderkey") % 2 === 0),
@@ -3323,11 +3335,10 @@ private[graft] object QueriesMedallionIo {
           graft.io.VersionedTable.commit(o.filter(col("o_orderkey") % 2 === 1),
             r, "append", "sm-b", statsCols = Seq("o_orderkey"))
           s.sql(s"OPTIMIZE GRAFT '$r' TARGET 4").collect()
-          r
+          java.lang.Boolean.TRUE
         }
-        s.sql(s"DESCRIBE HISTORY GRAFT '$root'")
-          .select("version", "operation", "dirs_added", "dirs_removed",
-            "rows_added", "rows_removed")
+        s.sql("SELECT version, operation, dirs_added, dirs_removed, rows_added, " +
+            "rows_removed FROM gq.sqlm.t.history")
           .orderBy("version")
       },
       Some("""SELECT * FROM (
@@ -3346,8 +3357,9 @@ private[graft] object QueriesMedallionIo {
     // runs through the registered DSv2 GraftCatalog at parse time
     // (GraftCatalog.rootOf), exactly Delta's path-or-name statement
     // contract. The row drives CREATE/INSERT through plain catalog SQL,
-    // OPTIMIZE + DESCRIBE HISTORY by NAME, and pins that an unresolvable
-    // name refuses loudly instead of inventing a path.
+    // OPTIMIZE by NAME, reads the ledger from the `history` metadata
+    // table, and pins that an unresolvable name refuses loudly instead
+    // of inventing a path.
     Q("versioned_sql_maintenance_named",
       onCatalog { (s, dir, wh) =>
         val refused = Fixtures.once(s, dir, "vt_sql_maint_nm") {
@@ -3364,9 +3376,8 @@ private[graft] object QueriesMedallionIo {
           java.lang.Boolean.valueOf(
             scala.util.Try(s.sql("OPTIMIZE GRAFT gq.smn.absent TARGET 1")).isFailure)
         }
-        s.sql("DESCRIBE HISTORY GRAFT gq.smn.t")
-          .select("version", "operation", "dirs_added", "dirs_removed",
-            "rows_added", "rows_removed")
+        s.sql("SELECT version, operation, dirs_added, dirs_removed, rows_added, " +
+            "rows_removed FROM gq.smn.t.history")
           .withColumn("bad_name_refused", lit(refused.booleanValue()))
           .orderBy("version")
       },
@@ -3487,8 +3498,8 @@ private[graft] object QueriesMedallionIo {
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // S17 — PARTITION EVOLUTION TO A TRANSFORM LAYOUT (r18, Iceberg's
-    // headline spec evolution): a flat CTAS evolves to `days(ts)` then to
-    // `months(ts)` — each `ALTER GRAFT ... SET PARTITIONED BY (transform)`
+    // headline spec evolution): a flat catalog CTAS evolves to `days(ts)`
+    // then to `months(ts)` — each `ALTER GRAFT ... SET PARTITIONED BY (transform)`
     // is ONE metadata commit (zero bytes moved) that synthesizes the
     // generated key, flips the layout, records every existing dir under
     // its old era, and auto-indexes the source column. Reads COMPUTE the
@@ -3499,21 +3510,22 @@ private[graft] object QueriesMedallionIo {
     // two PRE-monthly bands carry era records, `layout_ok` the evolved
     // declaration itself.
     Q("versioned_partition_evolution_hidden",
-      (s, dir) => {
+      onCatalog { (s, dir, wh) =>
         val (root, layoutOk, eras) = Fixtures.once(s, dir, "vt_pevo_hidden") {
-          val r = s"${System.getProperty("java.io.tmpdir")}/graft_pevo_hidden_${dirTag(dir)}"
-          rmrf(r)
+          val r = s"$wh/pevo/t"
+          rmrf(s"$wh/pevo")
+          s.sql("CREATE NAMESPACE IF NOT EXISTS gq.pevo")
           rd(s, dir, "orders").createOrReplaceTempView("pevo_orders")
           val mx = rd(s, dir, "orders").agg(max(col("o_orderkey"))).head().getLong(0)
           val (t1, t2) = (mx / 3, 2 * mx / 3)
           def band(lo: String, hi: String) =
             "SELECT o_orderkey, CAST(CAST(o_orderdate AS DATE) AS TIMESTAMP) AS ts " +
               s"FROM pevo_orders WHERE o_orderkey > $lo AND o_orderkey <= $hi"
-          s.sql(s"CREATE GRAFT '$r' AS (${band("-1", t1.toString)})").collect()
+          s.sql(s"CREATE TABLE gq.pevo.t AS ${band("-1", t1.toString)}")
           s.sql(s"ALTER GRAFT '$r' SET PARTITIONED BY (days(ts))").collect()
-          s.sql(s"INSERT INTO GRAFT '$r' FROM (${band(t1.toString, t2.toString)})").collect()
+          s.sql(s"INSERT INTO gq.pevo.t (o_orderkey, ts) ${band(t1.toString, t2.toString)}")
           s.sql(s"ALTER GRAFT '$r' SET PARTITIONED BY (months(ts))").collect()
-          s.sql(s"INSERT INTO GRAFT '$r' FROM (${band(t2.toString, mx.toString)})").collect()
+          s.sql(s"INSERT INTO gq.pevo.t (o_orderkey, ts) ${band(t2.toString, mx.toString)}")
           val c = graft.io.VersionedTable.latestCommit(r).get
           (r, java.lang.Boolean.valueOf(
             c.partitionCols == Seq("ts_month") &&

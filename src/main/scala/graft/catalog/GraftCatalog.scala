@@ -1073,10 +1073,13 @@ object GraftTable {
   * first-class relations): plain SQL introspection of the ledger with no
   * graft parser or TVF in the path —
   *
-  *   SELECT * FROM cat.db.t.history     -- DESCRIBE HISTORY (ckpt-indexed)
-  *   SELECT * FROM cat.db.t.detail      -- DESCRIBE DETAIL (one row)
-  *   SELECT * FROM cat.db.t.partitions  -- SHOW PARTITIONS (dir walk)
+  *   SELECT * FROM cat.db.t.history     -- the ledger (ckpt-indexed)
+  *   SELECT * FROM cat.db.t.detail      -- one-row table summary
+  *   SELECT * FROM cat.db.t.partitions  -- partition values (dir walk)
+  *   SELECT * FROM cat.db.t.files       -- per-file bytes/rows/envelope
   *   SELECT * FROM cat.db.t.branches / t.tags / t.mor
+  *
+  * These are the only SQL spellings of those reads.
   *
   * Cost model matches the underlying verbs: history serves from the
   * checkpoint index + manifest tail, partitions is a directory walk with
@@ -1090,7 +1093,11 @@ class GraftMetaTable(root: String, ident: Identifier, kind: String)
 
   override def name(): String = ident.toString
 
-  override lazy val schema: StructType = GraftMetaTable.frame(spark, root, kind).schema
+  // one frame per resolved table: the schema and the scan read the same
+  // ledger state, and the verb behind it runs once per query
+  private lazy val frame: DataFrame = GraftMetaTable.frame(spark, root, kind)
+
+  override lazy val schema: StructType = frame.schema
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
@@ -1104,8 +1111,7 @@ class GraftMetaTable(root: String, ident: Identifier, kind: String)
           new BaseRelation with TableScan {
             override val sqlContext: SQLContext = context
             override def schema: StructType = GraftMetaTable.this.schema
-            override def buildScan(): org.apache.spark.rdd.RDD[Row] =
-              GraftMetaTable.frame(context.sparkSession, root, kind).rdd
+            override def buildScan(): org.apache.spark.rdd.RDD[Row] = frame.rdd
           }.asInstanceOf[T]
         override def description(): String = s"GraftMetaTable $root#$kind"
       }
@@ -1125,9 +1131,11 @@ object GraftMetaTable {
     case "files"      => VersionedTable.describeFiles(s, root)
     case "branches" =>
       s.createDataFrame(
-        java.util.Arrays.asList(
-          VersionedTable.listBranches(root).sorted.map(Row(_)): _*),
-        StructType(Seq(StructField("branch", StringType, nullable = false))))
+        java.util.Arrays.asList(VersionedTable.listBranches(root).sorted.map(b =>
+          Row(b, VersionedTable.latestVersion(VersionedTable.branchRoot(root, b))
+            .getOrElse(0L))): _*),
+        StructType(Seq(StructField("branch", StringType, nullable = false),
+          StructField("version", LongType, nullable = false))))
     case "tags" =>
       s.createDataFrame(
         java.util.Arrays.asList(VersionedTable.listTags(root).toSeq.sortBy(_._1)

@@ -130,6 +130,12 @@ object Similarity {
           .otherwise(greatest(least(floor(scaled), lit(255)), lit(0)).cast("int")).as("q"))
   }
 
+  /** Quantized `(vec_id, pos, q)` rows regrouped into one `qv` float
+    * vector per `vec_id`, in dimension order.
+    */
+  private def vectorsOf(q: DataFrame): DataFrame = q.groupBy("vec_id").agg(
+    expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv"))
+
   /** X7: SEMANTIC decontamination — the embedding-space member of the
     * decontamination family (exact / n-gram / near-dup / substring catch
     * increasingly fuzzy TEXT leaks; this catches paraphrases and
@@ -147,8 +153,7 @@ object Similarity {
     * to drop.
     */
   def semanticContamination(corpus: DataFrame, bench: DataFrame, minDot: Long): DataFrame = {
-    def vecsOf(df: DataFrame) = quantizeInt8Frozen(df, corpus).groupBy("vec_id")
-      .agg(expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv"))
+    def vecsOf(df: DataFrame) = vectorsOf(quantizeInt8Frozen(df, corpus))
     val b = vecsOf(bench).select(col("vec_id").as("bench_id"), col("qv").as("bqv"))
     vecsOf(corpus)
       .join(broadcast(b), floatDot(col("qv"), col("bqv")).cast("bigint") >= minDot)
@@ -240,8 +245,7 @@ object Similarity {
     * cell-bucketed variants compose exactly as in [[ivfTopK]].
     */
   def quantizedTopK(emb: DataFrame, k: Int, queryLimit: Long): DataFrame = {
-    val vecs = quantizeInt8(emb).groupBy("vec_id").agg(
-      expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv"))
+    val vecs = vectorsOf(quantizeInt8(emb))
     val qs = vecs.filter(col("vec_id") < queryLimit)
     qs.as("a").join(vecs.as("b"), col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
@@ -262,8 +266,7 @@ object Similarity {
     * baseline, like [[annTopK]] for the float paths.
     */
   def quantizedL2TopK(emb: DataFrame, k: Int, queryLimit: Long): DataFrame = {
-    val vecs = quantizeInt8(emb).groupBy("vec_id").agg(
-      expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv"))
+    val vecs = vectorsOf(quantizeInt8(emb))
     val qs = vecs.filter(col("vec_id") < queryLimit)
     qs.as("a").join(vecs.as("b"), col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
@@ -415,8 +418,7 @@ object Similarity {
   def binaryRerankTopK(emb: DataFrame, k: Int, shortlist: Int,
                        queryLimit: Long): DataFrame = {
     val short = binaryHammingTopK(emb, shortlist, queryLimit).select("id_a", "id_b")
-    val Seq(vecs) = Par.materialize(quantizeInt8(emb).groupBy("vec_id").agg(
-      expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv")))
+    val Seq(vecs) = Par.materialize(vectorsOf(quantizeInt8(emb)))
     short.join(vecs.as("va").hint("shuffle_hash"), col("id_a") === col("va.vec_id"))
       .join(vecs.as("vb").hint("shuffle_hash"), col("id_b") === col("vb.vec_id"))
       .select(col("id_a"), col("id_b"),
@@ -449,8 +451,7 @@ object Similarity {
     val subDim = dim / m
     val Seq(q) = Par.materialize(quantizeInt8(emb))
     // truth leg: exact integer L2 in the same quantized space, no codes
-    val vecs = q.groupBy("vec_id").agg(
-      expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv"))
+    val vecs = vectorsOf(q)
     // shared fine stage: one codebook, ONE corpus-wide code assignment,
     // one ADC table build (checkpointed — both legs read them); the truth
     // leg is independent of both given q
@@ -1024,8 +1025,7 @@ object Similarity {
     */
   def coresetSelect(emb: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    val Seq(vecs) = Par.materialize(quantizeInt8(emb).groupBy("vec_id").agg(
-      expr("transform(sort_array(collect_list(struct(pos, q))), x -> cast(x.q as float))").as("qv")))
+    val Seq(vecs) = Par.materialize(vectorsOf(quantizeInt8(emb)))
     def vecOf(id: Long): Seq[Float] =
       vecs.filter(col("vec_id") === id).head.getSeq[Float](1)
     val seed = vecs.agg(min("vec_id")).head.getLong(0)

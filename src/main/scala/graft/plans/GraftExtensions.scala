@@ -38,9 +38,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_history"),
       new ExpressionInfo(GraftTableFunctions.getClass.getName, "graft_history"),
       (exprs: Seq[Expression]) => GraftTableFunctions.graftHistory(exprs)))
-    // SQL front door for the versioned table's maintenance verbs
-    // (DESCRIBE HISTORY / OPTIMIZE / VACUUM ... GRAFT '<root>'); every
-    // other statement delegates untouched — a pure grammar superset
+    // SQL front door for the versioned-table verbs Spark SQL cannot say
+    // (OPTIMIZE / VACUUM / RESTORE ... GRAFT '<root>'); every other
+    // statement delegates untouched — a pure grammar superset
     ext.injectParser((_, delegate) => new GraftSqlParser(delegate))
   }
 }

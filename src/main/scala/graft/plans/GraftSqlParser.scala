@@ -10,86 +10,76 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType
 
 import graft.io.VersionedTable
 
-/** SQL front door for the versioned table's MAINTENANCE verbs, injected
-  * through `SparkSessionExtensions.injectParser` (the public Catalyst
-  * extension point — the same mechanism Delta uses for its OPTIMIZE /
-  * VACUUM / DESCRIBE HISTORY statements):
+/** SQL front door for the versioned-table verbs Spark SQL cannot say,
+  * injected through `SparkSessionExtensions.injectParser` (the public
+  * Catalyst extension point — the same mechanism Delta uses for its
+  * OPTIMIZE / VACUUM statements). Everything Spark SQL can say goes
+  * through [[graft.catalog.GraftCatalog]] instead: metadata reads
+  * (`SELECT … FROM cat.db.t.history | detail | partitions | files |
+  * branches | tags`), schema DDL (`ALTER TABLE … RENAME / DROP / ALTER /
+  * ADD COLUMN`, `ADD / DROP CONSTRAINT`), `INSERT INTO`, `INSERT
+  * OVERWRITE`, `CREATE TABLE … AS SELECT` and keyed or range
+  * `DELETE FROM`. The grammar kept here, each form with why it stays:
   *
   * {{{
-  *   DESCRIBE HISTORY GRAFT '<root>'
-  *   DESCRIBE DETAIL GRAFT '<root>'
   *   OPTIMIZE GRAFT '<root>' [TARGET <n> | TARGET <n> BYTES]
   *       [WHERE <partCol> IN ('v' [, 'v']*)]
   *       [ZORDER BY (c1, c2 [, ...]) | CLUSTER BY (c1, c2 [, ...])]
+  *       — compaction has no Spark SQL statement
   *   VACUUM GRAFT '<root>' [RETAIN <n>] [DRY RUN]
-  *       — RETAIN omitted reads the graft.vacuum.retainLast TBLPROPERTY
-  *   VACUUM GRAFT '<root>' OLDER THAN TIMESTAMP '<instant>'
-  *       [RETAIN <n>] [DRY RUN] — time-based expiry: versions published
-  *       at-or-after the instant survive; RETAIN (default 1) floors it.
-  *       The RETAIN-less form also honors a declared
-  *       graft.vacuum.olderThanDays policy (resolved against NOW)
-  *   RESTORE GRAFT '<root>' TO VERSION <n> | TO TIMESTAMP '<instant>'
-  *       | TO TAG <name>
-  *   SHOW PARTITIONS GRAFT '<root>'
+  *   VACUUM GRAFT '<root>' OLDER THAN TIMESTAMP '<instant>' [RETAIN <n>] [DRY RUN]
+  *       — file expiry has no Spark SQL statement; RETAIN omitted reads
+  *         the graft.vacuum.retainLast / olderThanDays TBLPROPERTIES
+  *   RESTORE GRAFT '<root>' TO VERSION <n> | TO TIMESTAMP '<instant>' | TO TAG <name>
+  *       — rollback has no Spark SQL statement
   *   ANALYZE GRAFT '<root>' STATS BY (c1 [, ...]) [BLOOM BY (c1 [, ...])]
-  *   DELETE GRAFT '<root>' WHERE <col> IN (<lit> [, <lit>]*)
-  *   DELETE GRAFT '<root>' WHERE <col> BETWEEN <lit> AND <lit>
-  *   UPDATE GRAFT '<root>' SET <c> = <expr> [, <c> = <expr>]*
+  *   ANALYZE GRAFT '<root>' NDV BY (c1 [, ...])
+  *       — Spark's ANALYZE TABLE reaches no v2 catalog table
+  *   DELETE GRAFT '<root>' POSITIONAL WHERE (<predicate>)
+  *       — DELETE FROM cannot choose the merge-on-read positional form
+  *   UPDATE GRAFT '<root>' SET <c> = <expr> [, ...]
   *       WHERE <col> IN (...) | <col> BETWEEN <lit> AND <lit>
-  *   REPLACE GRAFT '<root>' WHERE <col> BETWEEN <lit> AND <lit>
-  *       FROM (<query>)
-  *   ALTER GRAFT '<root>' RENAME COLUMN <a> TO <b>
-  *   ALTER GRAFT '<root>' DROP COLUMN <a>
-  *   ALTER GRAFT '<root>' ALTER COLUMN <a> TYPE <sqlType>
-  *   ALTER GRAFT '<root>' ALTER COLUMN <a> SET | DROP NOT NULL
-  *   ALTER GRAFT '<root>' ADD COLUMN <a> <type>              — NULL backfill
-  *   ALTER GRAFT '<root>' ADD COLUMN <a> <type> DEFAULT (<expr>)
+  *   MERGE GRAFT '<root>' ON <keyCol>[, <keyCol>]* FROM (<query>)
+  *       [WHEN NOT MATCHED BY SOURCE AND <col> BETWEEN <lo> AND <hi>
+  *        [AND <cond>] THEN DELETE]
+  *       [WHEN MATCHED [AND <cond>] THEN DELETE | UPDATE]
+  *       [WHEN NOT MATCHED [AND <cond>] THEN INSERT]
+  *       [WITH SCHEMA EVOLUTION]
+  *       — the catalog's row-level UPDATE / MERGE refuses snapshots with
+  *         merge-on-read debt, DEFAULTs, mixed layout eras, or generated,
+  *         identity or constraint declarations (GraftRowLevel)
+  *   REPLACE GRAFT '<root>' WHERE <col> BETWEEN <lit> AND <lit> FROM (<query>)
+  *       — the catalog table takes no overwrite-by-filter write
+  *   ALTER GRAFT '<root>' SET TBLPROPERTIES ('k' = 'v' [, ...])
+  *   ALTER GRAFT '<root>' UNSET TBLPROPERTIES ('k' [, ...])
+  *   SHOW TBLPROPERTIES GRAFT '<root>'
+  *       — Spark's ALTER TABLE SET TBLPROPERTIES refuses the reserved
+  *         `owner` key, which the property registry stores
+  *   ALTER GRAFT '<root>' ALTER COLUMN <a> SET NOT NULL
+  *       — Spark's analyzer refuses nullable → non-nullable on a v2
+  *         table; the verb validates the snapshot before it publishes
   *   ALTER GRAFT '<root>' ADD COLUMN <a> GENERATED ALWAYS AS (<expr>)
   *   ALTER GRAFT '<root>' ADD COLUMN <a> GENERATED ALWAYS AS IDENTITY
   *       [(START WITH <n> STEP <n>)]
-  *   ALTER GRAFT '<root>' ADD CONSTRAINT <name> CHECK (<expr>)
-  *   ALTER GRAFT '<root>' DROP CONSTRAINT <name>
-  *   ALTER GRAFT '<root>' SET PARTITIONED BY (c1 [, ...]) — () = flat;
-  *       transform entries (days/hours/months/years(ts), bucket(n, c),
-  *       truncate(w, c)) evolve to a HIDDEN layout: one metadata commit,
-  *       zero bytes moved, old dirs read under their era
-  *   ALTER GRAFT '<root>' SET TBLPROPERTIES ('k' = 'v' [, ...])
-  *   ALTER GRAFT '<root>' UNSET TBLPROPERTIES ('k' [, ...])
-  *   ALTER GRAFT '<root>' WRITE ORDERED BY (c1 [ASC|DESC] [, ...]) —
-  *       every subsequent batch range-sorts by (partition keys, c1, ...)
-  *       so data files cover disjoint ranges and the per-file index prunes
+  *       — no TableChange adds a generated or identity column
+  *   ALTER GRAFT '<root>' SET PARTITIONED BY (c1 | days(ts) | bucket(n, c) [, ...])
+  *       — no TableChange changes the partition spec; () = flat, and a
+  *         transform entry evolves to a hidden layout in one metadata
+  *         commit, old dirs read under their era
+  *   ALTER GRAFT '<root>' WRITE ORDERED BY (c1 [ASC|DESC] [, ...])
   *   ALTER GRAFT '<root>' WRITE UNORDERED
-  *   ALTER GRAFT '<root>' CREATE BRANCH <name>
-  *   ALTER GRAFT '<root>' DROP BRANCH <name>
-  *   ALTER GRAFT '<root>' FAST FORWARD BRANCH <name>
-  *   ALTER GRAFT '<root>' CHERRY PICK BRANCH <name> — publish an
-  *       append-only branch onto a main that advanced past the fork
-  *   ALTER GRAFT '<root>' CREATE TAG <name> [AS OF VERSION <n>]
-  *   ALTER GRAFT '<root>' DROP TAG <name>
-  *   SHOW BRANCHES GRAFT '<root>'
-  *   SHOW TAGS GRAFT '<root>'
-  *   SHOW TBLPROPERTIES GRAFT '<root>'
-  *   SHOW FILES GRAFT '<root>' — per-file bytes/rows/envelope inventory
-  *   CREATE GRAFT '<root>' [PARTITIONED BY (c1 | days(ts) | bucket(n, c) ...)]
-  *       [STATS BY (c1 [, ...])] [BLOOM BY (c1 [, ...])] AS (<query>)
-  *       — transform entries declare a HIDDEN layout with the data in
-  *         ONE commit; their source columns auto-index
-  *   INSERT INTO GRAFT '<root>' FROM (<query>)
-  *   INSERT OVERWRITE GRAFT '<root>' FROM (<query>)
+  *       — Spark SQL has no write-order DDL
+  *   ALTER GRAFT '<root>' CREATE BRANCH <name> | DROP BRANCH <name>
+  *       | FAST FORWARD BRANCH <name> | CHERRY PICK BRANCH <name>
+  *       | CREATE TAG <name> [AS OF VERSION <n>] | DROP TAG <name>
+  *       — Spark SQL has no ref statements
+  *   CONVERT GRAFT '<root>' FROM '<dir>' [PARTITIONED BY (c1, ...)]
   *   COPY INTO GRAFT '<root>' FROM '<glob>' [FORMAT <fmt>]
   *   CREATE MATERIALIZED VIEW GRAFT '<mv>' FROM '<src>'
-  *       GROUP BY <key> SUM (c1 [, ...])
+  *       GROUP BY <key> SUM (c1 [, ...]) [MINMAX (c1 [, ...])]
   *   REFRESH MATERIALIZED VIEW GRAFT '<mv>'
-  *   CONVERT GRAFT '<root>' FROM '<dir>' [PARTITIONED BY (c1, ...)]
-  *   MERGE GRAFT '<root>' ON <keyCol>[, <keyCol>]* FROM (<query>)
-  *     [WHEN NOT MATCHED BY SOURCE AND <col> BETWEEN <lo> AND <hi>
-  *      [AND <cond>] THEN DELETE]   — range-bounded slice sync
-  *       — a composite ON list is the plain multi-key upsert; WHEN
-  *         clauses below apply to the single-key form
-  *       [WHEN MATCHED [AND <cond>] THEN DELETE]
-  *       [WHEN MATCHED [AND <cond>] THEN UPDATE]
-  *       [WHEN NOT MATCHED [AND <cond>] THEN INSERT]
-  *       [WITH SCHEMA EVOLUTION]
+  *       — adopt-in-place, idempotent landing-zone loads and incremental
+  *         views have no Spark SQL statement
   * }}}
   *
   * The `GRAFT` keyword after the verb keeps the grammar disjoint from
@@ -99,14 +89,14 @@ import graft.io.VersionedTable
   * (`OPTIMIZE GRAFT cat.db.t`) — it resolves through the session's
   * registered [[graft.catalog.GraftCatalog]]s to the same root, with a
   * loud refusal on an unregistered catalog or a name with no committed
-  * table (so statements that CREATE new storage — CREATE GRAFT, CREATE
-  * MATERIALIZED VIEW — keep the path spelling). Statements
-  * resolve to `LeafRunnableCommand`s — lazily executed like any Spark
-  * command, driver-side by design (these are metadata verbs; the heavy
-  * lifting inside compact/compactWhere is ordinary distributed Spark).
-  * OPTIMIZE takes a fresh commitId per statement (SQL re-execution means
-  * re-optimize, exactly Delta's semantics — idempotent retry is the
-  * programmatic API's contract, not SQL's).
+  * table (so CREATE MATERIALIZED VIEW, which creates new storage, keeps
+  * the path spelling). Statements resolve to `LeafRunnableCommand`s —
+  * lazily executed like any Spark command, driver-side by design (these
+  * are metadata verbs; the heavy lifting inside compact/compactWhere is
+  * ordinary distributed Spark). OPTIMIZE takes a fresh commitId per
+  * statement (SQL re-execution means re-optimize, exactly Delta's
+  * semantics — idempotent retry is the programmatic API's contract, not
+  * SQL's).
   */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   override def parsePlan(sqlText: String): LogicalPlan =
@@ -126,10 +116,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 }
 
 object GraftSqlParser {
-  private val describeRe =
-    """(?is)\s*DESCRIBE\s+HISTORY\s+GRAFT\s+'([^']+)'\s*;?\s*""".r
-  private val detailRe =
-    """(?is)\s*DESCRIBE\s+DETAIL\s+GRAFT\s+'([^']+)'\s*;?\s*""".r
   private val vacuumRe =
     """(?is)\s*VACUUM\s+GRAFT\s+'([^']+)'\s+RETAIN\s+(\d+)(\s+DRY\s+RUN)?\s*;?\s*""".r
   private val vacuumOlderRe =
@@ -149,10 +135,6 @@ object GraftSqlParser {
     """(?is)\s*RESTORE\s+GRAFT\s+'([^']+)'\s+TO\s+TIMESTAMP\s+'([^']+)'\s*;?\s*""".r
   private val restoreTagRe =
     """(?is)\s*RESTORE\s+GRAFT\s+'([^']+)'\s+TO\s+TAG\s+([\w.-]+)\s*;?\s*""".r
-  private val showPartitionsRe =
-    """(?is)\s*SHOW\s+PARTITIONS\s+GRAFT\s+'([^']+)'\s*;?\s*""".r
-  private val showFilesRe =
-    """(?is)\s*SHOW\s+FILES\s+GRAFT\s+'([^']+)'\s*;?\s*""".r
   private val analyzeRe =
     """(?is)\s*ANALYZE\s+GRAFT\s+'([^']+)'\s+STATS\s+BY\s*\(([^)]*)\)(?:\s+BLOOM\s+BY\s*\(([^)]*)\))?\s*;?\s*""".r
   private val analyzeNdvRe =
@@ -163,11 +145,6 @@ object GraftSqlParser {
   // quoted body may carry spaces), a plain quoted string, or a bare token
   private val litTok = """((?:DATE|TIMESTAMP)\s*'[^']*'|\S+|'[^']*')"""
 
-  private val deleteInRe =
-    """(?is)\s*DELETE\s+GRAFT\s+'([^']+)'\s+WHERE\s+(\w+)\s+IN\s*\(([^)]*)\)\s*;?\s*""".r
-  private val deleteBetweenRe =
-    ("""(?is)\s*DELETE\s+GRAFT\s+'([^']+)'\s+WHERE\s+(\w+)\s+BETWEEN\s+""" +
-      raw"""$litTok\s+AND\s+$litTok\s*;?\s*""").r
   private val updateRe =
     """(?is)\s*UPDATE\s+GRAFT\s+'([^']+)'\s+SET\s+(.*?)\s+WHERE\s+(.*?)\s*;?\s*""".r
   private val replaceRe =
@@ -191,29 +168,12 @@ object GraftSqlParser {
     """(?is).*\bWHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\s+AND\s+(\w+)\s+BETWEEN\s+(-?\d+)\s+AND\s+(-?\d+)\s*(?:AND\s+(.*?)\s+)?THEN\s+DELETE\b.*""".r
   private val whenNmbsAnyRe =
     """(?is).*\bWHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\b.*?\bTHEN\s+DELETE\b.*""".r
-  private val alterRenameRe =
-    """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*;?\s*""".r
-  private val alterDropColRe =
-    """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+DROP\s+COLUMN\s+(\w+)\s*;?\s*""".r
-  private val alterTypeRe =
-    """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+ALTER\s+COLUMN\s+(\w+)\s+TYPE\s+(\w+)\s*;?\s*""".r
-  private val alterNullabilityRe =
-    """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+ALTER\s+COLUMN\s+(\w+)\s+(SET|DROP)\s+NOT\s+NULL\s*;?\s*""".r
+  private val alterSetNotNullRe =
+    """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+ALTER\s+COLUMN\s+(\w+)\s+SET\s+NOT\s+NULL\s*;?\s*""".r
   private val alterAddIdentityRe =
     """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+ADD\s+COLUMN\s+(\w+)\s+GENERATED\s+ALWAYS\s+AS\s+IDENTITY(?:\s*\(\s*START\s+WITH\s+(-?\d+)\s+STEP\s+(-?\d+)\s*\))?\s*;?\s*""".r
-  private val alterAddDefaultRe =
-    """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+ADD\s+COLUMN\s+(\w+)\s+([\w()\s,]+?)\s+DEFAULT\s+\((.*)\)\s*;?\s*""".r
   private val alterAddGenRe =
     """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+ADD\s+COLUMN\s+(\w+)\s+GENERATED\s+ALWAYS\s+AS\s+\((.*)\)\s*;?\s*""".r
-  // the BARE form — metadata-only NULL-backfill widening; must be tried
-  // AFTER the IDENTITY/DEFAULT/GENERATED forms (its type group would
-  // otherwise swallow their keywords)
-  private val alterAddColRe =
-    """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+ADD\s+COLUMN\s+(\w+)\s+([\w()\s,]+?)\s*;?\s*""".r
-  private val alterAddConstraintRe =
-    """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+ADD\s+CONSTRAINT\s+(\w+)\s+CHECK\s+\((.*)\)\s*;?\s*""".r
-  private val alterDropConstraintRe =
-    """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+DROP\s+CONSTRAINT\s+(\w+)\s*;?\s*""".r
   private val alterSetLayoutRe =
     // greedy body up to the LAST ')': transform entries nest parens —
     // SET PARTITIONED BY (days(ts), bucket(4, id))
@@ -240,42 +200,10 @@ object GraftSqlParser {
     """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+CREATE\s+TAG\s+([\w.-]+)(?:\s+AS\s+OF\s+VERSION\s+(\d+))?\s*;?\s*""".r
   private val alterDropTagRe =
     """(?is)\s*ALTER\s+GRAFT\s+'([^']+)'\s+DROP\s+TAG\s+([\w.-]+)\s*;?\s*""".r
-  private val showBranchesRe =
-    """(?is)\s*SHOW\s+BRANCHES\s+GRAFT\s+'([^']+)'\s*;?\s*""".r
-  private val showTagsRe =
-    """(?is)\s*SHOW\s+TAGS\s+GRAFT\s+'([^']+)'\s*;?\s*""".r
   private val createMvRe =
     """(?is)\s*CREATE\s+MATERIALIZED\s+VIEW\s+GRAFT\s+'([^']+)'\s+FROM\s+'([^']+)'\s+GROUP\s+BY\s+(\w+)\s+SUM\s*\(([^)]*)\)(?:\s+MINMAX\s*\(([^)]*)\))?\s*;?\s*""".r
   private val refreshMvRe =
     """(?is)\s*REFRESH\s+MATERIALIZED\s+VIEW\s+GRAFT\s+'([^']+)'\s*;?\s*""".r
-  private val insertIntoRe =
-    """(?is)\s*INSERT\s+INTO\s+GRAFT\s+'([^']+)'\s+FROM\s+\((.*)\)\s*;?\s*""".r
-  private val insertOverwriteRe =
-    """(?is)\s*INSERT\s+OVERWRITE\s+GRAFT\s+'([^']+)'\s+FROM\s+\((.*)\)\s*;?\s*""".r
-  private val createAsRe =
-    """(?is)\s*CREATE\s+GRAFT\s+'([^']+)'(.*?)\s+AS\s+\((.*)\)\s*;?\s*""".r
-  private val partByRe = """(?is).*\bPARTITIONED\s+BY\s*\(([^)]*)\).*""".r
-  /** Balanced-paren body of `<keyword> ( ... )` inside `s` — transform
-    * entries (`days(ts)`, `bucket(4, id)`) nest parens, which a regex
-    * character class cannot see.
-    */
-  private def balancedClause(s: String, keywordRe: String): Option[String] = {
-    ("(?is)\\b" + keywordRe + "\\s*\\(").r.findFirstMatchIn(s).flatMap { m =>
-      var depth = 1
-      var i = m.end
-      while (i < s.length && depth > 0) {
-        s.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ => ()
-        }
-        i += 1
-      }
-      if (depth == 0) Some(s.substring(m.end, i - 1)) else None
-    }
-  }
-  private val statsByRe = """(?is).*\bSTATS\s+BY\s*\(([^)]*)\).*""".r
-  private val bloomByRe = """(?is).*\bBLOOM\s+BY\s*\(([^)]*)\).*""".r
   private val copyIntoRe =
     """(?is)\s*COPY\s+INTO\s+GRAFT\s+'([^']+)'\s+FROM\s+'([^']+)'(?:\s+FORMAT\s+(\w+))?\s*;?\s*""".r
   private val convertRe =
@@ -319,9 +247,9 @@ object GraftSqlParser {
   /** One SQL literal → Scala value. Typed DATE/TIMESTAMP literals
     * translate to the statsCols contract's integral forms — epoch DAYS
     * for DATE, session-zone epoch MICROS for TIMESTAMP (the same reading
-    * the catalog SQL route gives them) — so `DELETE GRAFT ... WHERE d
-    * BETWEEN DATE '2024-01-01' AND DATE '2024-03-31'` is the retention
-    * purge without hand-computed epoch numbers.
+    * the catalog SQL route gives them) — so `UPDATE GRAFT ... WHERE d
+    * BETWEEN DATE '2024-01-01' AND DATE '2024-03-31'` needs no
+    * hand-computed epoch numbers.
     */
   private def litValue(raw: String): Any = {
     val t = raw.trim
@@ -393,10 +321,8 @@ object GraftSqlParser {
   private val graftNameRe =
     """(?is)(\bGRAFT\s+)([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)+)""".r
   private val graftVerbHeadRe =
-    ("""(?is)\s*(?:DESCRIBE\s+(?:HISTORY|DETAIL)|VACUUM|OPTIMIZE|RESTORE|""" +
-      """SHOW\s+(?:PARTITIONS|TBLPROPERTIES|BRANCHES|TAGS|FILES)|ANALYZE|DELETE|""" +
-      """UPDATE|REPLACE|MERGE|ALTER|INSERT\s+(?:INTO|OVERWRITE)|COPY\s+INTO|""" +
-      """CREATE|REFRESH)\s+.*""").r
+    ("""(?is)\s*(?:VACUUM|OPTIMIZE|RESTORE|SHOW\s+TBLPROPERTIES|ANALYZE|DELETE|""" +
+      """UPDATE|REPLACE|MERGE|ALTER|COPY\s+INTO|CREATE|REFRESH)\s+.*""").r
 
   /** Character spans of string literals and comments — positions the name
     * rewrite must never touch: `UPDATE GRAFT db.t SET note = 'see GRAFT
@@ -482,8 +408,6 @@ object GraftSqlParser {
       resolveNamedRoots(sqlText).flatMap(parseMaintenance0))
 
   private def parseMaintenance0(sqlText: String): Option[LogicalPlan] = sqlText match {
-    case describeRe(root) => Some(GraftDescribeHistoryCommand(root))
-    case detailRe(root) => Some(GraftDescribeDetailCommand(root))
     case vacuumRe(root, n, dry) => Some(GraftVacuumCommand(root, Some(n.toInt), dry != null))
     // time-based expiry (Iceberg's expire_snapshots older_than): commits
     // published at-or-after the instant survive; RETAIN (default 1) is a
@@ -504,8 +428,6 @@ object GraftSqlParser {
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
       Some(GraftRestoreTimestampCommand(root, ms))
     case restoreTagRe(root, tag) => Some(GraftRestoreTagCommand(root, tag))
-    case showPartitionsRe(root) => Some(GraftShowPartitionsCommand(root))
-    case showFilesRe(root) => Some(GraftShowFilesCommand(root))
     case analyzeRe(root, stats, blooms) =>
       def cs(x: String) = Option(x).fold(Seq.empty[String])(
         _.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -514,37 +436,16 @@ object GraftSqlParser {
       Some(GraftAnalyzeNdvCommand(root,
         cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
     case deletePosRe(root, pred) => Some(GraftDeletePosCommand(root, pred))
-    case deleteInRe(root, col, vals) =>
-      Some(GraftDeleteCommand(root, col, Left(litList(vals))))
-    case deleteBetweenRe(root, col, lo, hi) =>
-      Some(GraftDeleteCommand(root, col, Right((litValue(lo), litValue(hi)))))
     case replaceRe(root, col, lo, hi, src) =>
       Some(GraftReplaceCommand(root, col, litValue(lo), litValue(hi), src))
-    case alterRenameRe(root, from, to) =>
-      Some(GraftAlterCommand(root, "rename", from, Some(to)))
-    case alterDropColRe(root, c) => Some(GraftAlterCommand(root, "dropcol", c, None))
-    case alterTypeRe(root, c, t) => Some(GraftAlterCommand(root, "widen", c, Some(t)))
-    case alterNullabilityRe(root, c, verb) =>
-      Some(GraftAlterCommand(root, "nullability", c,
-        Some(verb.toLowerCase(java.util.Locale.ROOT))))
+    case alterSetNotNullRe(root, c) => Some(GraftAlterCommand(root, "setnotnull", c, None))
     case alterAddIdentityRe(root, c, st, sp) =>
       // IDENTITY must match before the generic GENERATED ALWAYS AS (expr)
       // form — "IDENTITY" is not an expression
       Some(GraftAlterCommand(root, "addidentity", c,
         Some(s"${Option(st).getOrElse("1")},${Option(sp).getOrElse("1")}")))
-    case alterAddDefaultRe(root, c, t, e) =>
-      // <type> DEFAULT (<expr>) — matched before the GENERATED form can't
-      // collide (distinct keywords); type and expr travel together
-      Some(GraftAlterCommand(root, "adddefault", c,
-        Some(s"${t.trim}|||${e.trim}")))
     case alterAddGenRe(root, c, e) =>
       Some(GraftAlterCommand(root, "addgen", c, Some(e.trim)))
-    case alterAddColRe(root, c, t) =>
-      Some(GraftAlterCommand(root, "addcol", c, Some(t.trim)))
-    case alterAddConstraintRe(root, n, e) =>
-      Some(GraftAlterCommand(root, "addconstraint", n, Some(e.trim)))
-    case alterDropConstraintRe(root, n) =>
-      Some(GraftAlterCommand(root, "dropconstraint", n, None))
     case alterSetLayoutRe(root, cols) =>
       // must match before SET TBLPROPERTIES cannot collide (distinct
       // keywords), but before any generic ALTER fallthrough; () = flat.
@@ -584,8 +485,6 @@ object GraftSqlParser {
     case alterCreateTagRe(root, name, v) =>
       Some(GraftRefCommand(root, "createtag", name, Option(v).map(_.toLong)))
     case alterDropTagRe(root, name) => Some(GraftRefCommand(root, "droptag", name, None))
-    case showBranchesRe(root) => Some(GraftShowRefsCommand(root, "branches"))
-    case showTagsRe(root) => Some(GraftShowRefsCommand(root, "tags"))
     case createMvRe(mv, src, key, sums, minmax) =>
       Some(GraftCreateMatViewCommand(mv, src, key,
         sums.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
@@ -597,20 +496,6 @@ object GraftSqlParser {
           _.split(",").map(_.trim).filter(_.nonEmpty).toSeq)))
     case copyIntoRe(root, glob, fmt) =>
       Some(GraftCopyIntoCommand(root, glob, Option(fmt).getOrElse("parquet")))
-    case insertIntoRe(root, src) => Some(GraftInsertCommand(root, src))
-    case insertOverwriteRe(root, src) =>
-      Some(GraftInsertCommand(root, src, overwrite = true))
-    case createAsRe(root, clauses, src) =>
-      def cols(m: Option[String]): Seq[String] =
-        m.fold(Seq.empty[String])(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      // balanced scan: PARTITIONED BY may carry transform entries whose
-      // own parens a regex class cannot match
-      val part = balancedClause(clauses, "PARTITIONED\\s+BY")
-      val stats = clauses match { case statsByRe(cs) => Some(cs); case _ => None }
-      val blooms = clauses match { case bloomByRe(cs) => Some(cs); case _ => None }
-      Some(GraftCreateAsCommand(root,
-        part.fold(Seq.empty[String])(graft.catalog.GraftTransforms.splitEntries),
-        cols(stats), cols(blooms), src))
     case mergeRe(root, key, tail) =>
       val (src, clauses) = splitBalanced(tail).getOrElse(
         sys.error("MERGE GRAFT: unbalanced parentheses around the FROM (<query>)"))
@@ -698,45 +583,6 @@ object GraftSqlParser {
   }
 }
 
-case class GraftDescribeHistoryCommand(root: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("operation", StringType, nullable = false)(),
-    AttributeReference("commit_id", StringType, nullable = false)(),
-    AttributeReference("committed_at", LongType)(),
-    AttributeReference("dirs_added", IntegerType, nullable = false)(),
-    AttributeReference("dirs_removed", IntegerType, nullable = false)(),
-    AttributeReference("rows_added", LongType)(),
-    AttributeReference("rows_removed", LongType)(),
-    AttributeReference("dv_rows_added", LongType)())
-
-  override def run(spark: SparkSession): Seq[Row] =
-    VersionedTable.describeHistory(spark, root).collect().toSeq
-}
-
-case class GraftDescribeDetailCommand(root: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("format", StringType, nullable = false)(),
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("num_dirs", IntegerType, nullable = false)(),
-    AttributeReference("num_files", IntegerType, nullable = false)(),
-    AttributeReference("num_rows", LongType, nullable = false)(),
-    AttributeReference("partition_columns",
-      org.apache.spark.sql.types.ArrayType(StringType), nullable = false)(),
-    AttributeReference("columns",
-      org.apache.spark.sql.types.ArrayType(StringType), nullable = false)(),
-    AttributeReference("features",
-      org.apache.spark.sql.types.ArrayType(StringType), nullable = false)(),
-    AttributeReference("num_constraints", IntegerType, nullable = false)(),
-    AttributeReference("num_generated", IntegerType, nullable = false)(),
-    AttributeReference("mor_dirs_covered", IntegerType, nullable = false)(),
-    AttributeReference("mor_sets_pending", IntegerType, nullable = false)(),
-    AttributeReference("mor_keys_pending", LongType, nullable = false)())
-
-  override def run(spark: SparkSession): Seq[Row] =
-    VersionedTable.describeDetail(spark, root).collect().toSeq
-}
-
 case class GraftVacuumCommand(root: String, retainLast: Option[Int],
                               dryRun: Boolean = false,
                               olderThanMs: Option[Long] = None)
@@ -800,9 +646,10 @@ case class GraftRestoreCommand(root: String, toVersion: Long) extends LeafRunnab
   }
 }
 
-/** Shared literal-keys frame for the SQL DML commands: an IN-list of all
-  * longs or all quoted strings becomes a one-column DataFrame for the
-  * keyed verbs (which validate the type against the snapshot schema).
+/** Literal-keys frame for `UPDATE GRAFT ... WHERE col IN (...)`: an
+  * IN-list of all longs or all quoted strings becomes a one-column
+  * DataFrame for the keyed verb (which validates the type against the
+  * snapshot schema).
   */
 private[plans] object GraftDmlKeys {
   def frame(spark: SparkSession, col: String, vals: Seq[Any]):
@@ -822,12 +669,6 @@ private[plans] object GraftDmlKeys {
   }
 }
 
-/** `DELETE GRAFT '<root>' WHERE col IN (...)` → [[VersionedTable.deleteWhere]]
-  * (keyed copy-on-write, envelope+bloom pruned); `... WHERE col BETWEEN lo
-  * AND hi` → [[VersionedTable.deleteRange]] (contained dirs drop
-  * metadata-only). Fresh commitId per statement — SQL re-execution means
-  * re-delete, Delta's semantics; the programmatic API owns idempotent retry.
-  */
 /** `DELETE GRAFT '<root>' POSITIONAL WHERE (<any SQL predicate>)` →
   * [[VersionedTable.deletePosWhere]]: the arbitrary-predicate delete as a
   * merge-on-read positional vector — one predicate-pushed scan, zero
@@ -846,33 +687,6 @@ case class GraftDeletePosCommand(root: String, predicateSql: String)
     val (v, marked, positions) =
       VersionedTable.deletePosWhere(spark, root, predicateSql, commitId)
     Seq(Row(v, marked, positions))
-  }
-}
-
-case class GraftDeleteCommand(root: String, col: String,
-                              pred: Either[Seq[Any], (Any, Any)]) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("dirs_dropped", IntegerType, nullable = false)(),
-    AttributeReference("dirs_rewritten", IntegerType, nullable = false)(),
-    AttributeReference("dirs_total", IntegerType, nullable = false)())
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val commitId = s"sql-delete-${java.util.UUID.randomUUID().toString.take(12)}"
-    // rewrites preserve the snapshot's skipping index (a SQL-issued delete
-    // must not silently degrade pruning for every later reader)
-    val (statsCols, bloomCols) = VersionedTable.indexedCols(root)
-    pred match {
-      case Left(vals) =>
-        val (v, rw, tot) = VersionedTable.deleteWhere(spark, root,
-          GraftDmlKeys.frame(spark, col, vals), col, commitId,
-          statsCols = statsCols, bloomCols = bloomCols)
-        Seq(Row(v, 0, rw, tot))
-      case Right((lo, hi)) =>
-        val (v, drop, rw, tot) = VersionedTable.deleteRange(spark, root, col,
-          lo, hi, commitId, statsCols = statsCols, bloomCols = bloomCols)
-        Seq(Row(v, drop, rw, tot))
-    }
   }
 }
 
@@ -931,18 +745,14 @@ case class GraftReplaceCommand(root: String, col: String, lo: Any, hi: Any,
   }
 }
 
-/** The `ALTER GRAFT` DDL family — SQL forms for the metadata-only schema
-  * verbs, each a fresh-commitId statement like the other SQL DDL/DML:
-  * RENAME COLUMN → [[VersionedTable.renameColumn]] (mapping change, zero
-  * data moves), DROP COLUMN → [[VersionedTable.dropColumn]]
-  * (metadata-only retire), ALTER COLUMN TYPE →
-  * [[VersionedTable.widenColumnType]] (add-only widening chain), ADD
-  * COLUMN ... GENERATED ALWAYS AS →
-  * [[VersionedTable.addGeneratedColumn]], ADD/DROP CONSTRAINT →
-  * [[VersionedTable.addConstraint]]/[[VersionedTable.dropConstraint]]
-  * (pre-validated CHECK invariants). Every refusal the verbs enforce
-  * (partition columns, generated sources, resurrections, violating
-  * snapshots) surfaces through the statement unchanged.
+/** The `ALTER GRAFT` column and layout changes Spark's `ALTER TABLE`
+  * cannot express, each a fresh-commitId statement: ALTER COLUMN ... SET
+  * NOT NULL → [[VersionedTable.setColumnNullability]] (validates the
+  * snapshot first), ADD COLUMN ... GENERATED ALWAYS AS (<expr>) →
+  * [[VersionedTable.addGeneratedColumn]], ADD COLUMN ... GENERATED ALWAYS
+  * AS IDENTITY → [[VersionedTable.addIdentityColumn]], and SET
+  * PARTITIONED BY → the layout verbs. Every refusal the verbs enforce
+  * surfaces through the statement unchanged.
   */
 case class GraftAlterCommand(root: String, verb: String, name: String,
                              arg: Option[String]) extends LeafRunnableCommand {
@@ -952,15 +762,12 @@ case class GraftAlterCommand(root: String, verb: String, name: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val commitId = s"sql-alter-$verb-${java.util.UUID.randomUUID().toString.take(12)}"
     val v = verb match {
-      case "rename" => VersionedTable.renameColumn(root, name, arg.get, commitId)
-      case "dropcol" => VersionedTable.dropColumn(root, name, commitId)
-      case "widen" => VersionedTable.widenColumnType(root, name, arg.get, commitId)
+      case "setnotnull" =>
+        VersionedTable.setColumnNullability(spark, root, name, nullable = false, commitId)
       case "addgen" => VersionedTable.addGeneratedColumn(spark, root, name, arg.get, commitId)
       case "addidentity" =>
         val Array(st, sp) = arg.get.split(",")
         VersionedTable.addIdentityColumn(root, name, st.toLong, sp.toLong, commitId)
-      case "addconstraint" => VersionedTable.addConstraint(spark, root, name, arg.get, commitId)
-      case "dropconstraint" => VersionedTable.dropConstraint(root, name, commitId)
       case "setlayout" =>
         // transform spellings (days(ts), bucket(n, c), ...) route through
         // PARTITION EVOLUTION (generated-column desugar + era-preserving
@@ -969,15 +776,6 @@ case class GraftAlterCommand(root: String, verb: String, name: String,
         if (entries.exists(_.contains("(")))
           VersionedTable.evolvePartitionLayout(spark, root, entries, commitId)
         else VersionedTable.setPartitionLayout(root, entries, commitId)
-      case "adddefault" =>
-        val Array(t, e) = arg.get.split("[|][|][|]", 2)
-        VersionedTable.addColumnWithDefault(spark, root, name, t, e, commitId)
-      case "addcol" => VersionedTable.addColumn(root, name, arg.get, commitId)
-      case "nullability" =>
-        // SET validates the snapshot (NULLs refuse pre-publish); DROP
-        // retires a CREATE-time/CTAS NOT NULL invariant metadata-only
-        VersionedTable.setColumnNullability(spark, root, name,
-          nullable = arg.contains("drop"), commitId)
     }
     Seq(Row(v))
   }
@@ -1078,122 +876,6 @@ case class GraftAnalyzeNdvCommand(root: String, cols: Seq[String])
     val commitId = s"sql-ndv-${java.util.UUID.randomUUID().toString.take(12)}"
     val (v, m) = VersionedTable.analyzeNdv(spark, root, cols, commitId)
     cols.map(c => Row(c, m.getOrElse(c, -1L), v))
-  }
-}
-
-/** `SHOW PARTITIONS GRAFT '<root>'` — the distinct hive partition-value
-  * combinations of the latest snapshot in hive path form (`k=v[/k2=v2]`)
-  * with per-combination file counts, from a directory-level walk (zero
-  * Spark jobs). Static output shape (Hive's SHOW PARTITIONS form); the
-  * programmatic [[VersionedTable.showPartitions]] returns typed columns.
-  */
-case class GraftShowPartitionsCommand(root: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("partition", StringType, nullable = false)(),
-    AttributeReference("num_files", IntegerType, nullable = false)())
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val df = VersionedTable.showPartitions(spark, root)
-    val pcols = df.columns.dropRight(1)
-    df.collect().toSeq.map { r =>
-      val path = pcols.zipWithIndex.map { case (c, i) =>
-        val v = if (r.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__" else r.getString(i)
-        s"$c=$v"
-      }.mkString("/")
-      Row(path, r.getInt(pcols.length))
-    }
-  }
-}
-
-/** `SHOW FILES GRAFT '<root>'` — the `files` metadata table for
-  * path-rooted tables ([[VersionedTable.describeFiles]]): per live data
-  * file, its dir, byte size, footer row count (NULL when the commit
-  * carried no stats — unknown, never zero) and the skipping-index
-  * envelope. Driver-side O(#files) listing, zero parquet footer opens.
-  */
-case class GraftShowFilesCommand(root: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("dir", StringType, nullable = false)(),
-    AttributeReference("file", StringType, nullable = false)(),
-    AttributeReference("bytes", LongType, nullable = false)(),
-    AttributeReference("rows", LongType, nullable = true)(),
-    AttributeReference("envelope", StringType, nullable = false)())
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    VersionedTable.describeFiles(spark, root).collect().toSeq
-  }
-}
-
-/** `CREATE GRAFT '<root>' [PARTITIONED BY (...)] [STATS BY (...)]
-  * [BLOOM BY (...)] AS (<query>)` — CTAS: bootstrap a versioned table
-  * from any query of the session's full SQL surface (including
-  * `graft_table(...)` reads of other tables), declaring the hive layout
-  * and the skipping index in the same statement the data lands with.
-  * PARTITIONED BY accepts HIDDEN transform entries (`days(ts)`,
-  * `bucket(n, col)`, ...): each desugars to a generated column declared
-  * WITH the data in the same single commit (the DSv2 staged-CTAS shape),
-  * and the transform source columns auto-index. Refuses an existing
-  * table (CREATE creates; INSERT INTO appends).
-  */
-case class GraftCreateAsCommand(root: String, partitionCols: Seq[String],
-                                statsCols: Seq[String], bloomCols: Seq[String],
-                                sourceSql: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("version", LongType, nullable = false)())
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    import graft.catalog.GraftTransforms
-    require(VersionedTable.latestCommit(root).isEmpty,
-      s"CREATE GRAFT: $root already has commits — use INSERT INTO GRAFT to append")
-    val commitId = s"sql-create-${java.util.UUID.randomUUID().toString.take(12)}"
-    val df = spark.sql(sourceSql)
-    def colType(n: String) = df.schema.fields.find(_.name == n).map(_.dataType)
-    val parsed = partitionCols.map(e => (e, GraftTransforms.parseEntry(e)))
-    val specs = parsed.collect { case (_, Right((fn, src, arg))) =>
-      GraftTransforms.desugar(fn, src, arg, colType).getOrElse(sys.error(
-        s"CREATE GRAFT: '$fn' is the identity — spell the column plainly")) }
-    val partCols = parsed.map {
-      case (e, Left(c)) => c
-      case (e, Right((fn, src, arg))) =>
-        GraftTransforms.desugar(fn, src, arg, colType).get.name
-    }
-    val autoStats = GraftTransforms
-      .autoIndexProps(Map.empty, specs, colType)
-      .get("graft.stats.columns").map(_.split(",").toSeq).getOrElse(Nil)
-    Seq(Row(VersionedTable.commit(df, root,
-      if (specs.nonEmpty) "overwrite" else "append", commitId,
-      statsCols = (statsCols ++ autoStats).distinct,
-      partitionCols = partCols, bloomCols = bloomCols,
-      declareGenerated = specs.map(s => s.name -> s.sql).toMap,
-      declareProps = if (autoStats.isEmpty) Map.empty
-        else Map("graft.stats.columns" -> (statsCols ++ autoStats).distinct
-          .mkString(",")))))
-  }
-}
-
-/** `INSERT INTO GRAFT '<root>' FROM (<query>)` — append one commit. The
-  * snapshot's own metadata supplies everything a correct append needs:
-  * the CURRENT hive layout (partition evolution means the layout is read
-  * per statement, never assumed) and the skipping index columns
-  * (`indexedCols`), so a SQL-issued append can neither break the layout
-  * contract nor silently degrade the index. Constraints, generated
-  * columns, and identity allocation all apply through the standard
-  * commit path.
-  */
-case class GraftInsertCommand(root: String, sourceSql: String,
-                              overwrite: Boolean = false) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("version", LongType, nullable = false)())
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val parent = VersionedTable.latestCommit(root).getOrElse(
-      sys.error(s"INSERT INTO GRAFT: no table at $root — CREATE GRAFT ... AS (...) first"))
-    val commitId = s"sql-insert-${java.util.UUID.randomUUID().toString.take(12)}"
-    val (statsCols, bloomCols) = VersionedTable.indexedCols(root)
-    Seq(Row(VersionedTable.commit(spark.sql(sourceSql), root,
-      if (overwrite) "overwrite" else "append", commitId,
-      statsCols = statsCols, partitionCols = parent.partitionCols,
-      bloomCols = bloomCols)))
   }
 }
 
@@ -1351,23 +1033,6 @@ case class GraftRefCommand(root: String, verb: String, name: String,
       Seq(Row(name, VersionedTable.createTag(root, name, v)))
     case "droptag" =>
       VersionedTable.dropTag(root, name); Seq(Row(name, -1L))
-  }
-}
-
-/** `SHOW BRANCHES | TAGS GRAFT '<root>'` — one row per ref: a branch with
-  * its own latest version, a tag with the version it pins.
-  */
-case class GraftShowRefsCommand(root: String, kind: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("name", StringType, nullable = false)(),
-    AttributeReference("version", LongType, nullable = false)())
-
-  override def run(spark: SparkSession): Seq[Row] = kind match {
-    case "branches" => VersionedTable.listBranches(root).map { b =>
-      Row(b, VersionedTable.latestVersion(VersionedTable.branchRoot(root, b)).getOrElse(0L))
-    }
-    case "tags" =>
-      VersionedTable.listTags(root).toSeq.sortBy(_._1).map { case (n, v) => Row(n, v) }
   }
 }
 

@@ -14,6 +14,7 @@ class IoSpec extends SparkSpec {
     val w = tmpDir("iocat_wh")
     spark.conf.set("spark.sql.catalog.iocat", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.iocat.warehouse", w)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS iocat.db")
     w
   }
   private def catRoot(t: String): String = s"$catWarehouse/db/$t"
@@ -1611,17 +1612,18 @@ class IoSpec extends SparkSpec {
   test("ALTER GRAFT DDL family: rename, widen, generated column, constraints, drop column — all through SQL") {
     import spark.implicits._
     import org.apache.spark.sql.types.LongType
-    val root = tmpDir("vt_alter_sql")
+    val root = catRoot("vt_alter_sql")
     VersionedTable.commit(
       Seq((1L, "a", 1, 2L), (2L, "b", 2, 4L)).toDF("k", "v", "n", "k2"),
       root, "append", "al1", statsCols = Seq("k"))
-    spark.sql(s"ALTER GRAFT '$root' RENAME COLUMN v TO label").collect()
+    spark.sql("ALTER TABLE iocat.db.vt_alter_sql RENAME COLUMN v TO label")
     assert(VersionedTable.read(spark, root).columns.contains("label"))
-    spark.sql(s"ALTER GRAFT '$root' ALTER COLUMN n TYPE bigint").collect()
+    spark.sql("ALTER TABLE iocat.db.vt_alter_sql ALTER COLUMN n TYPE bigint")
     assert(VersionedTable.read(spark, root).schema("n").dataType == LongType)
-    // declare k2 generated (existing values validate), then a CHECK
+    // declare k2 generated (existing values validate; no ALTER TABLE form
+    // exists for it), then a CHECK
     spark.sql(s"ALTER GRAFT '$root' ADD COLUMN k2 GENERATED ALWAYS AS (k * 2)").collect()
-    spark.sql(s"ALTER GRAFT '$root' ADD CONSTRAINT pos CHECK (k > 0)").collect()
+    spark.sql("ALTER TABLE iocat.db.vt_alter_sql ADD CONSTRAINT pos CHECK (k > 0)")
     // the constraint now rejects a violating append through ANY write path
     val e = intercept[Exception](VersionedTable.commit(
       Seq((-5L, "c", 3L, -10L)).toDF("k", "label", "n", "k2"), root, "append", "al-bad"))
@@ -1631,10 +1633,10 @@ class IoSpec extends SparkSpec {
       Seq((5L, "c", 3L, 99L)).toDF("k", "label", "n", "k2"), root, "append", "al-gen"))
     assert(e2.getMessage.contains("k2"), e2.getMessage)
     // dropping the constraint re-admits the row (generated value correct)
-    spark.sql(s"ALTER GRAFT '$root' DROP CONSTRAINT pos").collect()
+    spark.sql("ALTER TABLE iocat.db.vt_alter_sql DROP CONSTRAINT pos")
     VersionedTable.commit(
       Seq((-5L, "c", 3L, -10L)).toDF("k", "label", "n", "k2"), root, "append", "al-ok")
-    spark.sql(s"ALTER GRAFT '$root' DROP COLUMN label").collect()
+    spark.sql("ALTER TABLE iocat.db.vt_alter_sql DROP COLUMN label")
     val r = VersionedTable.read(spark, root)
     assert(!r.columns.contains("label") && r.count() == 3)
   }
@@ -2366,15 +2368,15 @@ class IoSpec extends SparkSpec {
       VersionedTable.renameColumn(root2, "year", "yr", "ren-part"))
   }
 
-  test("GraftSqlParser: DESCRIBE HISTORY / OPTIMIZE / VACUUM ... GRAFT as real SQL; everything else delegates") {
+  test("GraftSqlParser: OPTIMIZE / VACUUM ... GRAFT as real SQL, history through the catalog; everything else delegates") {
     import spark.implicits._
-    val root = tmpDir("vt_sql_maint")
+    val root = catRoot("vt_sql_maint")
     VersionedTable.commit((1L to 40L).map(i => (i, s"a$i")).toDF("id", "s")
       .repartition(8), root, "append", "sq1", statsCols = Seq("id"))
     VersionedTable.commit((41L to 60L).map(i => (i, s"b$i")).toDF("id", "s"),
       root, "append", "sq2", statsCols = Seq("id"))
-    // DESCRIBE HISTORY as SQL — same derived metrics as the programmatic verb
-    val h = spark.sql(s"DESCRIBE HISTORY GRAFT '$root'").orderBy("version").collect()
+    // the history metadata table — same derived metrics as the programmatic verb
+    val h = spark.sql("SELECT * FROM iocat.db.vt_sql_maint.history").orderBy("version").collect()
     assert(h.map(_.getString(1)).toSeq == Seq("append", "append"))
     assert(h(0).getLong(6) == 40L && h(1).getLong(6) == 20L)
     // OPTIMIZE as SQL: full-table compaction to TARGET files
@@ -2410,7 +2412,7 @@ class IoSpec extends SparkSpec {
 
   test("GraftSqlParser DML: UPDATE / DELETE / RESTORE ... GRAFT route to the prunable verbs") {
     import spark.implicits._
-    val root = tmpDir("vt_sql_dml")
+    val root = catRoot("vt_sql_dml")
     VersionedTable.commit((1L to 20L).map(i => (i, i * 10, s"r$i")).toDF("id", "n", "s"),
       root, "append", "dml1", statsCols = Seq("id"))
     VersionedTable.commit((21L to 40L).map(i => (i, i * 10, s"r$i")).toDF("id", "n", "s"),
@@ -2434,54 +2436,59 @@ class IoSpec extends SparkSpec {
     val got = VersionedTable.read(spark, root).filter($"id".isin(5L, 25L))
       .orderBy("id").collect().map(r => (r.getLong(1), r.getString(2))).toSeq
     assert(got == Seq((0L, "r5"), (500L, "r25!")), got.toString)
-    // DELETE ... WHERE IN (keyed: band-1 dir only) and WHERE BETWEEN
-    // (range: the band-2 dir is fully contained → metadata-only drop,
-    // again only possible because the SQL rewrites preserved the index)
-    val d1 = spark.sql(s"DELETE GRAFT '$root' WHERE id IN (10)").collect()
-    assert(d1.head.getInt(2) == 1 && d1.head.getInt(3) == 2, d1.mkString)
-    val d2 = spark.sql(s"DELETE GRAFT '$root' WHERE id BETWEEN 21 AND 40").collect()
-    assert(d2.head.getInt(1) == 1 && d2.head.getInt(2) == 0,
-      s"contained dir should drop metadata-only: ${d2.mkString}")
+    // the catalog's DELETE FROM ... WHERE IN (keyed: band-1 dir only) and
+    // WHERE BETWEEN (range: the band-2 dir is fully contained →
+    // metadata-only drop, again only possible because the SQL rewrites
+    // preserved the index)
+    def lastDirs = VersionedTable.history(root).takeRight(2).map(_.dirs.toSet)
+    spark.sql("DELETE FROM iocat.db.vt_sql_dml WHERE id IN (10)")
+    val Seq(beforeD1, afterD1) = lastDirs
+    assert((beforeD1 -- afterD1).size == 1 && (afterD1 -- beforeD1).size == 1,
+      s"keyed delete should rewrite one dir: $beforeD1 -> $afterD1")
+    spark.sql("DELETE FROM iocat.db.vt_sql_dml WHERE id BETWEEN 21 AND 40")
+    val Seq(beforeD2, afterD2) = lastDirs
+    assert((beforeD2 -- afterD2).size == 1 && afterD2.subsetOf(beforeD2),
+      s"contained dir should drop metadata-only: $beforeD2 -> $afterD2")
     assert(VersionedTable.read(spark, root).count() == 19L)
     // RESTORE to the pre-DML snapshot; everything reappears
     val r = spark.sql(s"RESTORE GRAFT '$root' TO VERSION 2").collect()
     assert(r.head.getLong(0) > 2L)
     assert(VersionedTable.read(spark, root).count() == 40L)
     assert(VersionedTable.read(spark, root).filter($"id" === 5L).head().getLong(1) == 50L)
-    // DESCRIBE DETAIL: one deterministic summary row over the restored
+    // the detail metadata table: one deterministic summary row over the restored
     // snapshot (2 dirs back in service, footer row count = 40, no
     // features declared, clean MOR debt)
-    val det = spark.sql(s"DESCRIBE DETAIL GRAFT '$root'").head()
+    val det = spark.sql("SELECT * FROM iocat.db.vt_sql_dml.detail").head()
     assert(det.getString(0) == "graft-versioned" && det.getInt(2) == 2 &&
       det.getLong(4) == 40L && det.getSeq[String](6) == Seq("id", "n", "s") &&
       det.getSeq[String](7).isEmpty && det.getLong(12) == 0L, det.toString)
     // string IN-list; mixed-type list refused
     VersionedTable.commit(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"),
       tmpDir("vt_sql_dml2"), "append", "s1")
-    val root2 = tmpDir("vt_sql_dml3")
+    val root2 = catRoot("vt_sql_dml3")
     VersionedTable.commit(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"),
       root2, "append", "s1", statsCols = Seq("k"))
-    spark.sql(s"DELETE GRAFT '$root2' WHERE k IN ('a')").collect()
+    spark.sql("DELETE FROM iocat.db.vt_sql_dml3 WHERE k IN ('a')")
     assert(VersionedTable.read(spark, root2).collect().map(_.getString(0)).toSeq == Seq("b"))
     val em = intercept[Exception](
-      spark.sql(s"DELETE GRAFT '$root2' WHERE k IN ('a', 1)").collect())
+      spark.sql(s"UPDATE GRAFT '$root2' SET v = 0 WHERE k IN ('a', 1)").collect())
     assert(em.getMessage.contains("mixes"), em.getMessage)
     // typed DATE/TIMESTAMP literals in WHERE clauses (r17): the literal
     // translates to the statsCols contract's integral form — epoch days /
     // session-zone micros — so the retention purge reads like SQL instead
     // of hand-computed epoch numbers
-    val root3 = tmpDir("vt_sql_dml_date")
+    val root3 = catRoot("vt_sql_dml_date")
     VersionedTable.commit(
       spark.sql("SELECT id, date_add(DATE '2024-01-01', CAST(id AS INT)) AS d, " +
         "TIMESTAMP '2024-01-01 00:00:00' + make_interval(0,0,0,0,CAST(id AS INT),0,0) AS ts " +
         "FROM range(0, 10)"),
       root3, "append", "dl1", statsCols = Seq("d", "ts"))
-    spark.sql(s"DELETE GRAFT '$root3' WHERE d BETWEEN DATE '2024-01-01' " +
-      "AND DATE '2024-01-03'").collect()
+    spark.sql("DELETE FROM iocat.db.vt_sql_dml_date WHERE d BETWEEN DATE '2024-01-01' " +
+      "AND DATE '2024-01-03'")
     assert(VersionedTable.read(spark, root3).count() == 7L)
     assert(VersionedTable.read(spark, root3).agg(min($"id")).head().getLong(0) == 3L)
-    spark.sql(s"DELETE GRAFT '$root3' WHERE ts BETWEEN " +
-      "TIMESTAMP '2024-01-01 08:00:00' AND TIMESTAMP '2024-01-01 09:00:00'").collect()
+    spark.sql("DELETE FROM iocat.db.vt_sql_dml_date WHERE ts BETWEEN " +
+      "TIMESTAMP '2024-01-01 08:00:00' AND TIMESTAMP '2024-01-01 09:00:00'")
     assert(VersionedTable.read(spark, root3).count() == 5L)
     assert(VersionedTable.read(spark, root3).collect().map(_.getLong(0)).sorted.toSeq
       == Seq(3L, 4L, 5L, 6L, 7L))
@@ -3338,23 +3345,24 @@ class IoSpec extends SparkSpec {
 
   test("GraftSqlParser refs: CREATE/DROP/FAST FORWARD BRANCH, CREATE/DROP TAG, SHOW BRANCHES/TAGS") {
     import spark.implicits._
-    val root = tmpDir("sqlrefs")
+    val root = catRoot("sqlrefs")
     VersionedTable.commit((1L to 10L).map(i => (i, i)).toDF("id", "v"), root,
       "append", "sr-c0", statsCols = Seq("id"))
     spark.sql(s"ALTER GRAFT '$root' CREATE BRANCH exp").collect()
-    assert(spark.sql(s"SHOW BRANCHES GRAFT '$root'").collect()
+    // the refs are listed by the catalog's branches / tags metadata tables
+    assert(spark.sql("SELECT * FROM iocat.db.sqlrefs.branches").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("exp", 1L)))
     // write on the branch through ordinary SQL DML against the branch root
     val bq = VersionedTable.branchRoot(root, "exp")
     spark.sql(s"UPDATE GRAFT '$bq' SET v = v + 100 WHERE id IN (1, 2)").collect()
     val ff = spark.sql(s"ALTER GRAFT '$root' FAST FORWARD BRANCH exp").head()
     assert(ff.getLong(1) == 2L)
-    assert(spark.sql(s"SHOW BRANCHES GRAFT '$root'").count() == 0)
+    assert(spark.sql("SELECT * FROM iocat.db.sqlrefs.branches").count() == 0)
     assert(VersionedTable.read(spark, root).filter(col("id") <= 2)
       .agg(sum("v")).head().getLong(0) == 203L)
-    // tags: default version = latest; SHOW lists; DROP removes
+    // tags: default version = latest; the tags table lists; DROP removes
     spark.sql(s"ALTER GRAFT '$root' CREATE TAG golden").collect()
-    assert(spark.sql(s"SHOW TAGS GRAFT '$root'").collect()
+    assert(spark.sql("SELECT * FROM iocat.db.sqlrefs.tags").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("golden", 2L)))
     spark.sql(s"ALTER GRAFT '$root' CREATE TAG old AS OF VERSION 1").collect()
     assert(VersionedTable.tagVersion(root, "old") == 1L)
@@ -3994,10 +4002,10 @@ class IoSpec extends SparkSpec {
 
   test("column DEFAULT values: pre-default dirs backfill the default, not NULL; writes materialize it") {
     import spark.implicits._
-    val root = tmpDir("defv")
+    val root = catRoot("defv")
     VersionedTable.commit((1L to 6L).map(i => (i, s"r$i")).toDF("id", "s"),
       root, "append", "dv-c1", statsCols = Seq("id"))
-    spark.sql(s"ALTER GRAFT '$root' ADD COLUMN tier string DEFAULT ('bronze')").collect()
+    spark.sql("ALTER TABLE iocat.db.defv ADD COLUMN tier string DEFAULT 'bronze'")
     // metadata-only: the era-1 dir physically lacks the column, yet reads
     // the DEFAULT — not NULL — under the widened schema
     assert(VersionedTable.read(spark, root).filter(col("tier") === "bronze").count() == 6L)
@@ -4093,21 +4101,18 @@ class IoSpec extends SparkSpec {
     assert(VersionedTable.read(spark, r2).count() == 5L)
   }
 
-  test("SHOW PARTITIONS GRAFT + RESTORE TO TAG as SQL") {
+  test("catalog partitions table + RESTORE TO TAG as SQL") {
     import spark.implicits._
-    val root = tmpDir("showp")
+    val root = catRoot("showp")
     VersionedTable.commit(
       ((1L to 12L).map(i => (i, s"g${i % 3}")) :+ ((13L, null: String)))
         .toDF("id", "grp"),
       root, "append", "sp-c1", partitionCols = Seq("grp"))
-    val parts = spark.sql(s"SHOW PARTITIONS GRAFT '$root'")
-      .collect().map(r => (r.getString(0), r.getInt(1) > 0)).toMap
-    assert(parts.keySet == Set("grp=g0", "grp=g1", "grp=g2",
-      "grp=__HIVE_DEFAULT_PARTITION__"))
+    // typed partition values; the NULL sentinel surfaces as SQL NULL
+    val parts = spark.sql("SELECT * FROM iocat.db.showp.partitions")
+      .collect().map(r => (Option(r.getString(0)), r.getInt(1) > 0)).toMap
+    assert(parts.keySet == Set(Some("g0"), Some("g1"), Some("g2"), None))
     assert(parts.values.forall(identity))
-    // typed programmatic form: NULL sentinel surfaces as SQL NULL
-    assert(VersionedTable.showPartitions(spark, root)
-      .filter(col("grp").isNull).head().getInt(1) > 0)
     // unpartitioned and mixed-era snapshots refuse
     val flat = tmpDir("showp_flat")
     VersionedTable.commit(Seq((1L, "x")).toDF("id", "s"), flat, "append", "sp-f1")
@@ -4194,34 +4199,33 @@ class IoSpec extends SparkSpec {
       .map(n => n.toLong * n).sum)
   }
 
-  test("GraftSqlParser: CREATE GRAFT AS + INSERT INTO GRAFT — SQL lifecycle bootstrap") {
+  test("catalog CTAS + INSERT INTO — SQL lifecycle bootstrap") {
     import spark.implicits._
-    val root = tmpDir("ctas1")
+    val root = catRoot("ctas1")
     (1L to 20L).map(i => (i, s"g${i % 2}", i * 3)).toDF("id", "grp", "v")
       .createOrReplaceTempView("ctas_src")
-    spark.sql(s"CREATE GRAFT '$root' PARTITIONED BY (grp) STATS BY (id) " +
-      "BLOOM BY (id) AS (SELECT * FROM ctas_src WHERE id <= 10)").collect()
+    spark.sql("CREATE TABLE iocat.db.ctas1 PARTITIONED BY (grp) TBLPROPERTIES (" +
+      "'graft.stats.columns' = 'id', 'graft.bloom.columns' = 'id') " +
+      "AS SELECT * FROM ctas_src WHERE id <= 10")
     val c1 = VersionedTable.latestCommit(root).get
     assert(c1.partitionCols == Seq("grp") && c1.stats.nonEmpty && c1.blooms.nonEmpty)
     // CREATE refuses an existing table
     assert(intercept[Exception](
-      spark.sql(s"CREATE GRAFT '$root' AS (SELECT * FROM ctas_src)").collect())
-      .getMessage.contains("already has commits"))
+      spark.sql("CREATE TABLE iocat.db.ctas1 AS SELECT * FROM ctas_src"))
+      .getMessage.contains("already exists"))
     // INSERT inherits the layout AND the index from the snapshot
-    spark.sql(s"INSERT INTO GRAFT '$root' FROM (SELECT * FROM ctas_src WHERE id > 10)")
-      .collect()
+    spark.sql("INSERT INTO iocat.db.ctas1 SELECT * FROM ctas_src WHERE id > 10")
     val c2 = VersionedTable.latestCommit(root).get
     assert(c2.partitionCols == Seq("grp"))
     assert(c2.stats.size == 2, "insert must inherit the stats index")
     assert(VersionedTable.read(spark, root).count() == 20L)
     assert(VersionedTable.planRange(root, "id", 15L, 20L).size == 1)
-    // INSERT into a missing table refuses with the CREATE hint
+    // INSERT into a missing table refuses
     assert(intercept[Exception](
-      spark.sql(s"INSERT INTO GRAFT '${tmpDir("ctas_none")}' FROM (SELECT 1 AS x)")
-        .collect()).getMessage.contains("CREATE GRAFT"))
+      spark.sql("INSERT INTO iocat.db.ctas_none SELECT 1 AS x"))
+      .getMessage.contains("ctas_none"))
     // INSERT OVERWRITE replaces the row set wholesale, keeping the layout
-    spark.sql(s"INSERT OVERWRITE GRAFT '$root' FROM " +
-      "(SELECT * FROM ctas_src WHERE id <= 5)").collect()
+    spark.sql("INSERT OVERWRITE iocat.db.ctas1 SELECT * FROM ctas_src WHERE id <= 5")
     assert(VersionedTable.read(spark, root).count() == 5L)
     assert(VersionedTable.latestCommit(root).get.partitionCols == Seq("grp"))
     // history preserved: the pre-overwrite snapshot still reads
@@ -4240,14 +4244,14 @@ class IoSpec extends SparkSpec {
     assert(VersionedTable.read(spark, root).count() == 12L)
   }
 
-  test("GraftSqlParser: CREATE GRAFT with a transform layout — one commit, hidden keys, auto-index") {
+  test("catalog CTAS with a transform layout — one commit, hidden keys, auto-index") {
     import spark.implicits._
-    val root = tmpDir("ctashid")
+    val root = catRoot("ctashid")
     (0 until 20).map(i => (i.toLong,
       java.sql.Timestamp.valueOf(f"2024-0${1 + i % 3}%d-07 03:00:00")))
       .toDF("id", "ts").createOrReplaceTempView("ctashid_src")
-    spark.sql(s"CREATE GRAFT '$root' PARTITIONED BY (months(ts), bucket(2, id)) " +
-      "AS (SELECT * FROM ctashid_src)").collect()
+    spark.sql("CREATE TABLE iocat.db.ctashid PARTITIONED BY (months(ts), bucket(2, id)) " +
+      "AS SELECT * FROM ctashid_src")
     val c = VersionedTable.latestCommit(root).get
     assert(c.version == 1L && c.dirs.nonEmpty, "declaration + data must be ONE commit")
     assert(c.partitionCols == Seq("ts_month", "id_bucket"), c.partitionCols)
@@ -4259,8 +4263,8 @@ class IoSpec extends SparkSpec {
     assert(byMonth == Map("2024-01-01" -> 7L, "2024-02-01" -> 7L, "2024-03-01" -> 6L),
       byMonth)
     // the index follows: a SQL append inherits layout + stats
-    spark.sql(s"INSERT INTO GRAFT '$root' FROM (SELECT CAST(100 AS BIGINT) AS id, " +
-      "TIMESTAMP '2024-04-07 03:00:00' AS ts)").collect()
+    spark.sql("INSERT INTO iocat.db.ctashid (id, ts) SELECT CAST(100 AS BIGINT) AS id, " +
+      "TIMESTAMP '2024-04-07 03:00:00' AS ts")
     assert(VersionedTable.read(spark, root).count() == 21L)
     assert(VersionedTable.latestCommit(root).get.stats.size == 2,
       "append must inherit the auto-declared stats index")
@@ -4302,7 +4306,7 @@ class IoSpec extends SparkSpec {
 
   test("GraftSqlParser: partition evolution to a TRANSFORM layout — flat → daily → hourly, zero rewrite") {
     import spark.implicits._
-    val root = tmpDir("pevo6")
+    val root = catRoot("pevo6")
     // 48 rows over two days, one per hour, written FLAT
     val df = (0 until 48).map(i =>
       (i.toLong, java.sql.Timestamp.valueOf(
@@ -4321,8 +4325,8 @@ class IoSpec extends SparkSpec {
       .collect().map(r => (r.getDate(0).toString, r.getLong(1))).toMap
     assert(byDay == Map("2024-03-01" -> 24L, "2024-03-02" -> 24L), byDay)
     // a SQL append inherits the evolved layout and materializes the key
-    spark.sql(s"INSERT INTO GRAFT '$root' FROM (SELECT CAST(100 AS BIGINT) AS id, " +
-      "TIMESTAMP '2024-03-03 07:30:00' AS ts)").collect()
+    spark.sql("INSERT INTO iocat.db.pevo6 (id, ts) SELECT CAST(100 AS BIGINT) AS id, " +
+      "TIMESTAMP '2024-03-03 07:30:00' AS ts")
     assert(VersionedTable.read(spark, root).where("ts_day = DATE '2024-03-03'")
       .count() == 1L)
     // daily → hourly (the Iceberg headline): ts_day REMAINS a generated
@@ -4332,8 +4336,8 @@ class IoSpec extends SparkSpec {
     assert(cHour.partitionCols == Seq("ts_hour") &&
       cHour.generated.contains("ts_hour") && cHour.generated.contains("ts_day"))
     assert(cHour.dirLayouts.nonEmpty, "old dirs must keep their era")
-    spark.sql(s"INSERT INTO GRAFT '$root' FROM (SELECT CAST(101 AS BIGINT) AS id, " +
-      "TIMESTAMP '2024-03-03 07:45:00' AS ts)").collect()
+    spark.sql("INSERT INTO iocat.db.pevo6 (id, ts) SELECT CAST(101 AS BIGINT) AS id, " +
+      "TIMESTAMP '2024-03-03 07:45:00' AS ts")
     val hr = VersionedTable.read(spark, root)
       .where("ts_hour = TIMESTAMP '2024-03-03 07:00:00'")
       .select("id").collect().map(_.getLong(0)).toSet
@@ -4580,7 +4584,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("describeFiles: per-file inventory — bytes, rows, envelopes; sums match the table") {
-    val root = tmpDir("dfiles")
+    val root = catRoot("dfiles")
     VersionedTable.commit(
       spark.range(0, 100).selectExpr("id", "CAST(id % 7 AS STRING) AS s")
         .repartition(4),
@@ -4599,8 +4603,8 @@ class IoSpec extends SparkSpec {
       "side-file row counts sum to the indexed commit's rows")
     assert(without.forall(r => r.isNullAt(3) && r.getString(4).isEmpty))
     assert(files.map(_.getString(0)).distinct.length == 2)
-    // the SQL spelling returns the same census
-    assert(spark.sql(s"SHOW FILES GRAFT '$root'").count() == files.length.toLong)
+    // the catalog's files metadata table returns the same census
+    assert(spark.sql("SELECT * FROM iocat.db.dfiles.files").count() == files.length.toLong)
     // CREATE-time property validation: a typo'd write-order column
     // refuses before v1 publishes
     assert(intercept[Exception](VersionedTable.createTable(tmpDir("ordbad"),
